@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -228,92 +228,44 @@ object DedupQueries {
   }
 
   /** Connected-component labels over `(doc_a, doc_b)` edges: every id in
-    * `universe` gets its component's minimum id.
+    * `universe` gets its component's minimum id. Edges with an endpoint
+    * outside `universe` are dropped before anything else runs.
     *
-    * Three strategies, selected by the session conf
-    * `spark.graft.cc.strategy` (default `auto`):
-    * - `propagate` — min-label propagation with path halving
-    *   ([[clusterLabelsPropagate]]): best for the clique-like components
-    *   near-dup dedup actually produces (1–3 rounds);
-    * - `star` — alternating large-star/small-star contraction
-    *   ([[clusterLabelsStar]]): the high-diameter fallback. Propagation's
-    *   path-halving self-join doubles the LABEL TABLE's join count per
-    *   round; star contraction rewrites the EDGE LIST itself, keeping every
-    *   round's shuffle proportional to the (shrinking) edge count and
-    *   converging in O(log² n) rounds even on a path graph — the shape that
-    *   survives a pathological chain at 100 TB;
-    * - `auto` (r8, default) — [[clusterLabelsAuto]]: propagate up to
-    *   `spark.graft.cc.handoff` rounds (default 8), and if unconverged,
-    *   CONTRACT the edge list by the partial labels and finish the (much
-    *   smaller) contracted graph with star. On every graph the dedup
-    *   pipeline actually produces, propagation converges inside the cap
-    *   and auto executes the exact propagate plans; a pathological
-    *   high-diameter graph no longer needs an operator to have set the
-    *   conf — the escalation is the default. */
-  private[ops] def clusterLabels(universe: DataFrame, edges: DataFrame): DataFrame =
-    universe.sparkSession.conf.getOption("spark.graft.cc.strategy")
-      .getOrElse("auto") match {
-      case "star"      => clusterLabelsStar(universe, edges)._1
-      case "propagate" => clusterLabelsPropagate(universe, edges)._1
-      case "auto"      => clusterLabelsAuto(universe, edges)
-      case other =>
-        throw new IllegalArgumentException(s"bad cc strategy conf: $other")
-    }
-
-  /** Propagate-then-contract-then-star (the `auto` strategy): run
-    * propagation at most `handoffRounds` rounds; if the fixed point was
-    * not reached, rewrite every edge through the partial labels
-    * ((a, b) → (label(a), label(b)), self-loops dropped, deduped — after
-    * k rounds of halving this graph has one node per surviving partial
-    * label, typically orders of magnitude smaller than the input), finish
-    * it with star contraction, and compose the two label maps. Labels
-    * only ever decrease toward the component minimum in both phases, and
-    * contraction preserves connectivity, so the composition is the same
-    * fixed point either pure strategy reaches (StarCcOracleSpec proves
-    * label-identity on chains, cliques and mixed graphs). */
-  private[ops] def clusterLabelsAuto(universe: DataFrame,
-                                     edges: DataFrame): DataFrame = {
-    val handoff = universe.sparkSession.conf
-      .getOption("spark.graft.cc.handoff").map(_.toInt).getOrElse(8)
-    require(handoff >= 1, s"bad cc handoff conf: $handoff")
-    val (partial, converged) =
-      clusterLabelsPropagate(universe, edges, maxRounds = handoff)
-    if (converged) partial
-    else {
-      val la = partial.select(col("doc_id").as("doc_a"), col("cluster").as("ca"))
-      val lb = partial.select(col("doc_id").as("doc_b"), col("cluster").as("cb"))
-      val contracted = edges
-        .join(la, "doc_a").join(lb, "doc_b")
-        .select(col("ca").as("doc_a"), col("cb").as("doc_b"))
-        .filter(col("doc_a") =!= col("doc_b"))
-        .distinct()
-      val reps = partial.select(col("cluster").as("doc_id")).distinct()
-      val fin = clusterLabelsStar(reps, contracted)._1
-        .select(col("doc_id").as("cluster"), col("cluster").as("final"))
-      partial.join(fin, "cluster")
-        .select(col("doc_id"), col("final").as("cluster"))
-    }
-  }
-
-  /** Alternating large-star/small-star connected components (the classic
-    * MapReduce formulation: Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", reproduced from the published algorithm). Each
-    * round is two star operations, each ONE aggregate + ONE equi-join over
-    * the current edge list:
-    * - large-star(u): every neighbor v > u re-points to
-    *   m = min({u} ∪ N(u));
-    * - small-star(u): every neighbor v < u (and u itself) re-points to
-    *   m = min over the smaller neighborhood.
-    * The edge list only ever rewires toward smaller ids, so the potential
-    * Σ(u+v) strictly decreases until the graph is a union of stars rooted
-    * at component minima — labels then read directly off the edges with no
-    * transitive closure left. Per-round state is `localCheckpoint`ed and
-    * superseded blocks freed, exactly like the propagate loop.
+    * One algorithm: alternating large-star/small-star contraction (the
+    * MapReduce formulation of Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", reproduced from the published algorithm), with
+    * the last rounds placed by size:
+    * - the self-loop-free edge list is `localCheckpoint`ed once; an
+    *   Observation on that same job records its `(count, Σhash)`
+    *   fingerprint;
+    * - while the residual edge list is bigger than a relation Spark would
+    *   broadcast (`count × 16 B` over `spark.sql.autoBroadcastJoinThreshold`),
+    *   a round rewires it with one large-star and one small-star step, each
+    *   ONE aggregate + ONE equi-join over the current edge list:
+    *   - large-star(u): every neighbor v > u re-points to
+    *     m = min({u} ∪ N(u));
+    *   - small-star(u): every neighbor v < u (and u itself) re-points to
+    *     m = min over the smaller neighborhood.
+    *   The round's checkpoint job carries the next fingerprint in its own
+    *   Observation, so a round is one action. Edges only ever rewire toward
+    *   smaller ids and every component keeps its node set, so an unchanged
+    *   fingerprint is the fixed point: a union of stars rooted at component
+    *   minima, reached in O(log² n) rounds even on a path graph, with the
+    *   labels read directly off the edges;
+    * - a residual under the threshold is collected once and finished in
+    *   memory by union-find ([[componentMinima]]), and the
+    *   `(doc_id, cluster)` map is broadcast-joined back onto the universe.
+    *   Contraction preserves connectivity over the same node set, so those
+    *   are the original graph's labels, with nothing to compose. On the
+    *   near-dup graphs the dedup queries produce, this is the whole run: a
+    *   graph small enough to broadcast is finished in one place rather than
+    *   over dozens of serial shuffles.
     *
-    * Returns (labels, rounds) — the round count feeds the convergence-bound
-    * property spec. */
-  private[ops] def clusterLabelsStar(universe: DataFrame, edges: DataFrame,
-                                     maxRounds: Int = 50): (DataFrame, Int) = {
+    * A threshold of `-1` runs star to its fixed point, at any size.
+    * Needing more than `maxRounds` rounds throws. */
+  private[ops] def clusterLabels(universe: DataFrame, edges: DataFrame,
+                                 maxRounds: Int = 50): DataFrame = {
+    val ids = universe.select(col("doc_id"))
     def sym(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
     def largeStar(e: DataFrame): DataFrame = {
@@ -332,132 +284,80 @@ object DedupQueries {
         .union(m.select(col("u"), col("m").as("v")))
       rewired.filter(col("u") =!= col("v")).distinct()
     }
-    var e = edges.filter(col("doc_a") =!= col("doc_b"))
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .localCheckpoint(true)
-    // (count, hash-sum) fingerprint: both are cheap single-pass aggregates
-    // and the alternating rewiring is monotone, so an unchanged fingerprint
-    // means an unchanged edge multiset
-    def fp(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)), sum(hash(col("u"), col("v")).cast("long")))
-        .collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    // materialize an edge list and read its (count, hash-sum) fingerprint
+    // off the same job; the rewiring is monotone, so an unchanged
+    // fingerprint means an unchanged edge multiset
+    def checkpoint(e: DataFrame): (DataFrame, (Long, Long)) = {
+      val obs = Observation()
+      val done = e.observe(obs, count(lit(1)).as("n"),
+          sum(hash(col("u"), col("v")).cast("long")).as("h"))
+        .localCheckpoint(true)
+      val m = obs.get
+      (done, (m("n").asInstanceOf[Long], Option(m("h")).fold(0L)(_.asInstanceOf[Long])))
     }
-    var prev = fp(e)
+    val threshold =
+      universe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    var (e, fp) = checkpoint(edges.filter(col("doc_a") =!= col("doc_b"))
+      .join(ids, col("doc_a") === col("doc_id"), "left_semi")
+      .join(ids, col("doc_b") === col("doc_id"), "left_semi")
+      .select(col("doc_a").as("u"), col("doc_b").as("v")))
     var rounds = 0
     var converged = false
-    while (!converged && rounds < maxRounds) {
+    while (!converged && !(threshold >= 0 && fp._1 * 16 <= threshold)) {
+      if (rounds == maxRounds) {
+        ScaleOps.freeBlocks(e)
+        throw new IllegalStateException(
+          s"connected components did not converge in $maxRounds rounds: " +
+            s"${fp._1} edges left, fingerprint (${fp._1}, ${fp._2})")
+      }
       rounds += 1
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      val cur = fp(next)
-      converged = cur == prev
-      prev = cur
+      val (next, cur) = checkpoint(smallStar(largeStar(e)))
+      converged = cur == fp
+      fp = cur
       ScaleOps.freeBlocks(e)
       e = next
     }
-    // at the fixed point every edge points a node at its component min
-    val stars = e.groupBy("u").agg(min(col("v")).as("cluster"))
-      .select(col("u").as("doc_id"), col("cluster"))
-    val labels = universe.select("doc_id")
-      .join(stars, Seq("doc_id"), "left")
+    val clusters =
+      if (converged) // every edge points a node at its component min
+        e.groupBy(col("u").as("doc_id")).agg(min(col("v")).as("cluster"))
+      else {
+        val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+        ScaleOps.freeBlocks(e)
+        broadcast(universe.sparkSession.createDataFrame(
+          componentMinima(pairs).toSeq).toDF("doc_id", "cluster"))
+      }
+    ids.join(clusters, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster"), col("doc_id")).as("cluster"))
-    (labels, rounds)
   }
 
-  /** Min-label propagation with path halving — see [[clusterLabels]].
-    * Each round is one edges⋈labels equi-join + a min() aggregate
-    * (diameter-many narrow shuffles; near-dup components are clique-like so
-    * a handful of rounds converge even at 100 TB). `localCheckpoint`
-    * truncates the growing lineage each round — without it the plan doubles
-    * per iteration and re-executes the whole history.
-    *
-    * Returns (labels, converged): with the default unbounded `maxRounds`
-    * the flag is always true; the `auto` strategy caps the rounds and
-    * reads the flag to decide whether to escalate. A capped, unconverged
-    * return still holds valid PARTIAL labels (every label is some
-    * component member ≤ the id it labels — monotone toward the min). */
-  private[ops] def clusterLabelsPropagate(universe: DataFrame, edges: DataFrame,
-                                          maxRounds: Int = Int.MaxValue): (DataFrame, Boolean) = {
-    // r18 loop diet (guide §2.4): the r8 round was join + agg + a SECOND
-    // corpus-sized join of (next ⋈ prev labels) that existed only to feed
-    // the `shrunk` convergence metric. Labels are MONOTONE non-increasing,
-    // so "no label got smaller" ⟺ "Σ labels unchanged" — the sum rides the
-    // same Observation (exact DECIMAL(38,0): 10^12 docs × 2^63 ids stays
-    // under 38 digits, and monotonicity means equality cannot come from
-    // cancellation), and the per-round prev-join is GONE. The prev-join
-    // also silently restricted output keys to the universe (an edge
-    // endpoint outside `universe` must not surface a row); that contract
-    // now holds by a ONE-TIME left-semi of the edge list against the
-    // universe — strictly cheaper than re-joining every round. The edge
-    // list checkpoints PRE-PARTITIONED on its join key (localCheckpoint
-    // preserves outputPartitioning), so at scale the per-round viaEdge
-    // join re-shuffles neither side: each round is the one groupBy
-    // exchange the algorithm fundamentally needs (plus the halving
-    // self-join's cluster-keyed exchange from round 2).
-    val sym = edges
-      .union(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .join(universe.select(col("doc_id")), col("doc_a") === col("doc_id"),
-        "left_semi")
-      .repartition(col("doc_b"))
-      .localCheckpoint(true) // the edge list is re-read every iteration
-    def labelSum(o: org.apache.spark.sql.Observation): Option[BigDecimal] =
-      Option(o.get("lsum")).map(v => BigDecimal(v.asInstanceOf[java.math.BigDecimal]))
-    val obs0 = org.apache.spark.sql.Observation("cc_round_0")
-    var labels = universe.select(col("doc_id"), col("doc_id").as("cluster"))
-      .observe(obs0, sum(col("cluster").cast("decimal(38,0)")).as("lsum"))
-      .localCheckpoint(true) // eager: obs0 lands in this same job
-    var prevSum = labelSum(obs0)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val viaEdge = sym.join(labels, sym("doc_b") === labels("doc_id"))
-        .select(sym("doc_a").as("doc_id"), col("cluster"))
-      // pointer jumping (r19, was path halving): adopt my label's label's
-      // LABEL, so a length-d chain collapses in O(log₃ d) rounds instead
-      // of O(log₂ d) — the loop is serial-JOB-count-bound at every scale
-      // (each round is one checkpoint job), so one more bounded join per
-      // round for fewer rounds is the right trade (VERDICT r18 #2; the
-      // r18 single-halving loop took 6 rounds at sf0.1, this takes 5 —
-      // and the deeper chase pays off more the longer the chains).
-      // label(y) ≤ y always (labels start as the identity and a round's
-      // min() includes the old label), so label³(x) ≤ label²(x) and the
-      // two-join chase term SUBSUMES the old one-join halving term —
-      // union of both would be pure aggregate input growth. Still
-      // provably a no-op in round 1 (labels = identity), so the chase
-      // only joins from round 2.
-      val prop =
-        if (round == 1) labels.union(viaEdge)
-        else labels.union(viaEdge).union(
-          labels.as("l1")
-            .join(labels.as("l2"), col("l1.cluster") === col("l2.doc_id"))
-            .join(labels.as("l3"), col("l2.cluster") === col("l3.doc_id"))
-            .select(col("l1.doc_id").as("doc_id"), col("l3.cluster").as("cluster")))
-      // convergence detection rides INSIDE the checkpoint job: Observation
-      // metrics are collected by the SAME action that materializes the
-      // round, so each iteration is ONE job — the earlier isEmpty-scan
-      // follow-up job doubled the loop's scheduling overhead
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$round")
-      val next = prop
-        .groupBy("doc_id").agg(min("cluster").as("cluster"))
-        .observe(obs, sum(col("cluster").cast("decimal(38,0)")).as("lsum"))
-        .localCheckpoint(true)
-      // labels only ever decrease, so "sum unchanged" = fixed point
-      // (sum over an empty universe is null on both sides -> converged)
-      val curSum = labelSum(obs)
-      converged = curSum == prevSum
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round lsum=$curSum prev=$prevSum")
-      prevSum = curSum
-      // `next` is materialized — the previous round's checkpoint blocks can
-      // never be read again; drop them NOW or rounds accumulate blocks for
-      // the session's lifetime (the r4 recorded-bench 16–22× amplification)
-      ScaleOps.freeBlocks(labels)
-      labels = next
+  /** `(node, component minimum)` for every node of an undirected edge list
+    * that is not its own component's minimum, by union-find: the larger
+    * root always links under the smaller, so a root is its component's
+    * minimum, and finds compress their path in a loop (a chain of any
+    * depth never touches the stack). */
+  private[ops] def componentMinima(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val nodes = edges.flatMap { case (a, b) => Array(a, b) }.distinct.sorted
+    val parent = Array.range(0, nodes.length)
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var i = x
+      while (parent(i) != root) {
+        val up = parent(i)
+        parent(i) = root
+        i = up
+      }
+      root
     }
-    ScaleOps.freeBlocks(sym) // the loop was the edge list's only reader
-    (labels, converged)
+    def index(id: Long): Int = java.util.Arrays.binarySearch(nodes, id)
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(index(a)), find(index(b)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    nodes.indices.iterator.map(i => (i, find(i))).collect {
+      case (i, r) if r != i => (nodes(i), nodes(r))
+    }.toArray
   }
 
   private def lshPairs(s: SparkSession, d: String): DataFrame =
@@ -1266,12 +1166,11 @@ object DedupQueries {
     // Near-dup CLUSTERS: connected components over the LSH candidate graph,
     // labelled by each component's minimum doc_id — the step a production
     // dedup pipeline runs after pair generation (keep one doc per cluster).
-    // Default strategy is min-label propagation with path halving (see
-    // clusterLabels — near-dup components are clique-like, a handful of
-    // rounds even at 100 TB); `spark.graft.cc.strategy=star` switches to
-    // the alternating large-star/small-star contraction for pathological
-    // high-diameter graphs (property-proven O(log² n) on a 1000-node
-    // chain, same answer on every tested graph).
+    // clusterLabels contracts the candidate graph with large-star/small-star
+    // rounds until it fits under the broadcast threshold, then finishes it
+    // with an in-memory union-find; the fixture's graph fits from the start.
+    // Star alone (threshold -1) is property-proven O(log² n) on a 1000-node
+    // chain and gives the same labels on every tested graph.
     "q_dedup_clusters" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       clusterLabels(docs.select("doc_id"),
@@ -1529,8 +1428,8 @@ object DedupQueries {
           FROM (SELECT doc_id FROM documents
                 WHERE doc_id >= (SELECT k FROM kk)) d
           LEFT JOIN agg USING (doc_id)""",
-    // transitive closure (recursive CTE) reaches the same fixed point the
-    // Spark propagation loop converges to: min reachable doc_id
+    // transitive closure (recursive CTE) reaches the same labels Spark's
+    // clusterLabels computes: min reachable doc_id
     "q_dedup_clusters" ->
       s"""WITH RECURSIVE $shingleCte,
           sym AS (SELECT doc_a, doc_b FROM pairs

@@ -134,21 +134,24 @@ class OpPropertiesSpec extends SparkTestBase {
   }
 
   test("star-contraction CC converges on a 1000-node path within O(log² n) rounds") {
-    import spark.implicits._
     // the pathological shape for min-label propagation: one chain component
     // of diameter 999 plus isolated nodes
     val n = 1000L
     val universe = spark.range(0, n + 5).select(col("id").as("doc_id"))
     val edges = spark.range(0, n - 1)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val (labels, rounds) = DedupQueries.clusterLabelsStar(universe, edges)
-    // O(log² n) bound with headroom; a linear-diameter algorithm would need
-    // ~999 rounds here, star contraction stays logarithmic
-    assert(rounds <= 20, s"took $rounds rounds")
-    val out = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (0L until n).foreach(i => assert(out(i) === 0L, s"node $i"))
+    // O(log² n) bound with headroom, enforced by the round cap (exceeding
+    // it throws); a linear-diameter algorithm would need ~999 rounds here,
+    // star contraction stays logarithmic. The in-memory finish takes this
+    // graph whole and must agree.
+    val (inMemory, star) = CcPlacements.both(spark) {
+      CcPlacements.labelMap(
+        DedupQueries.clusterLabels(universe, edges, maxRounds = 20))
+    }
+    assert(star === inMemory)
+    (0L until n).foreach(i => assert(inMemory(i) === 0L, s"node $i"))
     // isolated nodes label themselves
-    (n until n + 5).foreach(i => assert(out(i) === i))
+    (n until n + 5).foreach(i => assert(inMemory(i) === i))
   }
 
   test("dedupDelta: corpus matches drop, first delta wins, fresh and tiny docs keep") {
@@ -533,29 +536,38 @@ class OpPropertiesSpec extends SparkTestBase {
   }
 
   test("star and propagate strategies agree on a random edge set") {
+    // star: clusterLabels under both placements; propagate: min-label
+    // relaxation over the edge list, recomputed in the test
     import spark.implicits._
     forAll(List.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))) { ps =>
       val universe = spark.range(0, 40).select(col("id").as("doc_id"))
       val edges = ps.toDF("doc_a", "doc_b")
-      val star = DedupQueries.clusterLabelsStar(universe, edges)._1
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val prop = DedupQueries.clusterLabelsPropagate(universe, edges)._1
-        .select("doc_id", "cluster")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star === prop)
+      val (inMemory, star) = CcPlacements.both(spark) {
+        CcPlacements.labelMap(DedupQueries.clusterLabels(universe, edges))
+      }
+      val propagated = Array.range(0, 40).map(_.toLong)
+      var moved = true
+      while (moved) {
+        moved = false
+        ps.foreach { case (a, b) =>
+          val m = math.min(propagated(a.toInt), propagated(b.toInt))
+          if (propagated(a.toInt) != m || propagated(b.toInt) != m) {
+            propagated(a.toInt) = m; propagated(b.toInt) = m; moved = true
+          }
+        }
+      }
+      assert(star === inMemory)
+      assert(inMemory === propagated.indices.map(i => i.toLong -> propagated(i)).toMap)
     }
   }
 
-  test("the cc strategy flag routes q_dedup_clusters through star contraction") {
+  test("q_dedup_clusters: star to its fixed point matches the in-memory finish on sf0.001") {
     val sfDir = "/root/testdata/sf0.001"
-    val base = DedupQueries.queries("q_dedup_clusters")(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.cc.strategy", "star")
-    try {
-      val starred = DedupQueries.queries("q_dedup_clusters")(spark, sfDir)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(starred === base)
-    } finally spark.conf.unset("spark.graft.cc.strategy")
+    val (inMemory, star) = CcPlacements.both(spark) {
+      CcPlacements.labelMap(
+        DedupQueries.queries("q_dedup_clusters")(spark, sfDir))
+    }
+    assert(inMemory.nonEmpty && star === inMemory)
   }
 
   test("k-means quantizer: total assignment, valid cells, deterministic replay") {

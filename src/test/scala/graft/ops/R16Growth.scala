@@ -20,9 +20,9 @@ import graft.tables.Tables
   * graph is n disjoint copies of the 1× graph and growth measures
   * VOLUME, not engineered bucket skew).
   *
-  * The 64× row also runs the CC chain with the propagate→star handoff
-  * forced low (spark.graft.cc.handoff=1) so the star-contraction
-  * escalation path — normally dormant on these low-diameter graphs — is
+  * The 64× row also runs the CC chain with the broadcast threshold at -1,
+  * so star contraction runs to its fixed point instead of handing the
+  * contracted graph to the in-memory finish — the distributed path,
   * exercised at the largest scale on record.
   *
   * Run: sbt "Test/runMain graft.ops.R16Growth". Results in PERF.md.
@@ -102,12 +102,12 @@ object R16Growth {
         f"${tT}%11.3f ${tR}%11.3f")
     }
 
-    // the handoff-cap arm: force propagate→star escalation at 64×
-    spark.conf.set("spark.graft.cc.handoff", "1")
+    // the distributed arm: star to its fixed point at 64×
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val d64 = docsTimes(64)
-    val tEsc = t { clustersOf(d64).queryExecution.toRdd.count() }
-    println(f"64x with cc.handoff=1 (forced star escalation): $tEsc%.3f s")
-    spark.conf.unset("spark.graft.cc.handoff")
+    val tStar = t { clustersOf(d64).queryExecution.toRdd.count() }
+    println(f"64x with threshold -1 (star to its fixed point): $tStar%.3f s")
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     spark.stop()
   }

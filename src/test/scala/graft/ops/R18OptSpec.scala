@@ -15,12 +15,11 @@ import graft.tables.Tables
   *     struct-argmin form on the fixture;
   *   - q_semdedup replaced the within-cell self-join with group-and-expand
   *     — pinned row-equal to the self-join form;
-  *   - clusterLabelsPropagate replaced the per-round prev-join `shrunk`
-  *     metric with the monotone label-sum fixed-point test, and restricts
-  *     universe keys via a one-time semi instead of the per-round inner
-  *     join — pinned on an adversarial edge list whose endpoints include
-  *     ids OUTSIDE the universe (the exact case the old per-round join
-  *     silently handled).
+  *   - connected components restrict the edge list to the universe with
+  *     a one-time semi instead of a per-round inner join — pinned on an
+  *     adversarial edge list whose endpoints include ids OUTSIDE the
+  *     universe (the exact case the old per-round join silently handled),
+  *     under both placements of [[DedupQueries.clusterLabels]].
   */
 class R18OptSpec extends SparkTestBase {
 
@@ -66,30 +65,23 @@ class R18OptSpec extends SparkTestBase {
     assert(got.nonEmpty && got === want)
   }
 
-  test("clusterLabelsPropagate: edge endpoints outside the universe " +
-    "neither surface rows nor perturb labels (the retired per-round " +
-    "join's key restriction, now the one-time semi)") {
+  test("clusterLabels: edge endpoints outside the universe neither " +
+    "surface rows nor perturb labels") {
     import spark.implicits._
     // universe 0..9; edges chain 0-1-2, pair (5,6), PLUS junk edges whose
-    // doc_a (100) and doc_b (200) are outside the universe
+    // doc_a (100) and doc_b (200) are outside the universe, and one (-1)
+    // that would relabel the chain if it were let in
     val universe = spark.range(0, 10).select(col("id").as("doc_id"))
-    val edges = Seq((0L, 1L), (1L, 2L), (5L, 6L), (100L, 1L), (5L, 200L))
-      .toDF("doc_a", "doc_b")
-    val (labels, converged) =
-      DedupQueries.clusterLabelsPropagate(universe, edges)
-    assert(converged)
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val edges = Seq((0L, 1L), (1L, 2L), (5L, 6L), (100L, 1L), (5L, 200L),
+      (-1L, 2L)).toDF("doc_a", "doc_b")
+    val (got, star) = CcPlacements.both(spark) {
+      CcPlacements.labelMap(DedupQueries.clusterLabels(universe, edges))
+    }
     assert(got.keySet === (0L until 10L).toSet) // exactly the universe
     assert(got(0L) == 0L && got(1L) == 0L && got(2L) == 0L)
     assert(got(5L) == 5L && got(6L) == 5L)
     assert((3L to 4L).forall(i => got(i) == i) &&
       (7L to 9L).forall(i => got(i) == i))
-    // and the label-sum fixed-point test agrees with star contraction on
-    // the same adversarial input (edges filtered to the universe for star,
-    // whose left-join restriction is its own key guard)
-    val star = DedupQueries.clusterLabelsStar(universe,
-      edges.filter(col("doc_a") < 10 && col("doc_b") < 10))._1
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === star)
   }
 }

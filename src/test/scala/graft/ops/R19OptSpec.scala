@@ -18,10 +18,9 @@ import graft.tables.Tables
   *     ObjectHashAggregate — pinned row-equal on the fixture AND on an
   *     adversarial frame with NULL timestamps, NULL values, absent sides
   *     and tombstones;
-  *   - clusterLabelsPropagate's pointer chase deepened from label² to
-  *     label³ — the fixed point and labels are unchanged (min over a
-  *     superset-dominating term set); pinned on a long path graph, the
-  *     chain shape the chase exists for;
+  *   - connected components label a long path graph, the worst case for
+  *     edge-only propagation, with its minimum under both placements of
+  *     [[DedupQueries.clusterLabels]];
   *   - q_attribution_last's decimal pack gained a click_id ≥ 0 guard —
   *     a negative id must raise, not silently reorder the argmin.
   */
@@ -114,10 +113,9 @@ class R19OptSpec extends SparkTestBase {
     assert(!got.exists(_.startsWith("3|")))
   }
 
-  test("clusterLabelsPropagate: label³ chase collapses a long chain to min") {
+  test("clusterLabels: a 41-node chain collapses to min under both placements") {
     // path graph 0–1–2–…–40: worst case for edge-only propagation (41
-    // rounds) and the shape the pointer chase exists for. All nodes must
-    // label 0, converged true.
+    // rounds). All nodes must label 0.
     val n = 41
     val uSchema = StructType(Seq(StructField("doc_id", LongType)))
     val eSchema = StructType(Seq(
@@ -125,12 +123,12 @@ class R19OptSpec extends SparkTestBase {
     val universe = mkDf(uSchema, (0 until n).map(i => Row(i.toLong)))
     val edges = mkDf(eSchema,
       (0 until n - 1).map(i => Row(i.toLong, (i + 1).toLong)))
-    val (labels, converged) =
-      DedupQueries.clusterLabelsPropagate(universe, edges)
-    assert(converged)
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val (got, star) = CcPlacements.both(spark) {
+      CcPlacements.labelMap(DedupQueries.clusterLabels(universe, edges))
+    }
     assert(got.size === n)
     assert(got.values.forall(_ == 0L))
+    assert(got === star)
   }
 
   test("q_attribution_last: negative click_id raises instead of reordering") {
