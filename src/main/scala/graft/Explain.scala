@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: dump the formatted physical plan of every registered
   * query (args: sfDir outFile). Used to keep the scan/exchange shape honest:
   * PushedFilters reach the parquet scan, ReadSchema is pruned to used

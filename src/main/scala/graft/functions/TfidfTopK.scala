@@ -33,8 +33,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale contract: the vocabulary scalar is bounded by DISTINCT terms, not
   * corpus size — the same boundedness argument as the DSIR dense-array
   * scalar. A corpus whose raw vocabulary outgrows the plan (web-scale typo
-  * tails) IS pre-pruned in the registered q_doc_tfidf plan: `term_df`'s
-  * min-df floor (`spark.graft.tfidf.min_df`, r10) drops the tail inside
+  * tails) can be pre-pruned in the q_doc_tfidf plan: `term_df`'s min-df
+  * floor (`TextQueries.docTfidf`'s `minDf`, r10) drops the tail inside
   * the aggregate's final eval, before the scalar materializes; score
   * arithmetic `(double) tf * n_docs / df` is the twin's op order exactly.
   * A `tc` term absent from the vocabulary is skipped — no df → no score;

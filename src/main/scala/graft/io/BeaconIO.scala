@@ -79,8 +79,9 @@ object BeaconIO {
       .option("timestampFormat", TimestampWriteFormat)
       .format(format).save(basePath)
 
-  /** A10/D6: append the hour's snapshot to history AND fully overwrite the
-    * `latest` path — the reference's validators dual sink. */
+  /** A10: replace the hour's snapshot in history AND fully overwrite the
+    * `latest` path — the reference's hourly validators export, where a
+    * replayed hour must replace itself. */
   def writeSnapshotWithLatest(df: DataFrame, tsCol: String,
                               historyPath: String, latestPath: String,
                               format: String = "json"): Unit = {

@@ -951,6 +951,12 @@ object CorpusQueries {
       .select(col("doc_id"), col("w"), col("cum"), col("m"))
   }
 
+  /** q_budget_sample's range-shard count S (a power of two). */
+  private[ops] val BudgetShards = 64
+
+  /** UniMax's per-source epoch cap E — the oracle's inlined constant. */
+  private[ops] val UnimaxEpochs = 4L
+
   /** q_budget_sample's pipeline over an arbitrary documents frame. The
     * take rule and output are the registration comment's contract; the
     * exclusive running sum is the r10 two-level prefix sum — range-shard
@@ -960,13 +966,15 @@ object CorpusQueries {
     * per-source window), in-shard exclusive window per (source, shard),
     * bounded #sources×S shard-total aggregate, exclusive shard offsets
     * broadcast back and added. One giant source now sorts across S
-    * balanced reducers instead of funneling through one. */
-  private[graft] def budgetSample(base: DataFrame): DataFrame = {
+    * balanced reducers instead of funneling through one. `shards` (S) is
+    * [[BudgetShards]] in the registered query; tests vary it to pin
+    * shard-count independence. */
+  private[graft] def budgetSample(base: DataFrame,
+                                  shards: Int = BudgetShards): DataFrame = {
     val s = base.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val shards = s.conf.get("spark.graft.budget.shards", "64").toInt
     require(shards >= 1 && (shards & (shards - 1)) == 0,
-      s"spark.graft.budget.shards must be a power of two, got $shards")
+      s"budget shards must be a power of two, got $shards")
     val shift = 63 - Integer.numberOfTrailingZeros(shards)
     val docs = base.filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"),
@@ -995,25 +1003,18 @@ object CorpusQueries {
     // EXECUTORS only — lost on executor failure/decommission and
     // unsupported with dynamic allocation — and, being eager, it runs
     // two Spark jobs at DataFrame-CONSTRUCTION time (plan-only uses pay
-    // them too). It is the right local-bench fast path; a 1000-executor
-    // deployment with dynamic allocation should set
-    // spark.graft.budget.reliableCheckpoint=true to use reliable
-    // checkpoint() into the configured checkpoint dir (HDFS/object
-    // store) instead — same one-tokenize contract, failure-tolerant
-    // blocks.
+    // them too). Every materialisation site in this package shares that
+    // caveat; choosing a failure-tolerant rule is one decision for all
+    // of them, not a per-query switch.
     val s2 = s
     import s2.implicits._
-    val reliable = s.conf
-      .get("spark.graft.budget.reliableCheckpoint", "false").toBoolean
-    val docsCk =
-      if (reliable) docs.checkpoint(true) else docs.localCheckpoint(true)
+    val docsCk = docs.localCheckpoint(true)
     val stRows = docsCk.groupBy("source", "shard")
       .agg(sum("n_tokens").as("shard_tokens"))
       .collect()
     val totals = stRows.groupBy(_.getString(0)).view
       .mapValues(_.map(_.getLong(2)).sum).toSeq
-    val E = s.conf.get("spark.graft.unimax.epochs", "4").toLong
-    val alloc = unimaxAllocLocal(totals, E)
+    val alloc = unimaxAllocLocal(totals, UnimaxEpochs)
     val lookup = stRows.groupBy(_.getString(0)).toSeq.flatMap {
       case (src, rows) =>
         val sorted = rows.sortBy(_.getLong(1))
@@ -1038,12 +1039,13 @@ object CorpusQueries {
     * so q_budget_sample composes the same allocation (one definition, the
     * two cannot drift). See the registration comment for the algorithm
     * and integer-exactness contract. */
-  private[graft] def unimaxAlloc(documents: DataFrame): DataFrame =
+  private[graft] def unimaxAlloc(documents: DataFrame,
+                                 epochs: Long = UnimaxEpochs): DataFrame =
     unimaxAllocFromTotals(documents
       .filter(col("text").isNotNull)
       .groupBy("source")
       .agg(sum(size(split(trim(col("text")), "\\s+")).cast("long"))
-        .as("n_tokens")))
+        .as("n_tokens")), epochs)
 
   /** UTF-8 binary comparison on source names — Spark's `Window.orderBy`
     * compares strings as `UTF8String` (unsigned UTF-8 bytes) while JVM
@@ -1109,14 +1111,13 @@ object CorpusQueries {
     * tokenize. [[unimaxAlloc]] (the q_mix_unimax registration) remains
     * the tokenize-paying build path; both run identical integer
     * arithmetic from the totals down, so they cannot drift. */
-  private[graft] def unimaxAllocFromTotals(totals: DataFrame): DataFrame = {
-    // the paper's per-source epoch cap, conf-able (r10): UniMax's one real
-    // hyperparameter. Default 4 = the unrolled oracle's inlined constant,
-    // bit-identical; any E >= 1 keeps the integer-exactness contract
-    // (caps are n_tokens·E, still exact int64)
-    val E = totals.sparkSession.conf
-      .get("spark.graft.unimax.epochs", "4").toLong
-    require(E >= 1L, s"spark.graft.unimax.epochs must be >= 1, got $E")
+  private[graft] def unimaxAllocFromTotals(totals: DataFrame,
+                                           epochs: Long = UnimaxEpochs): DataFrame = {
+    // the paper's per-source epoch cap (r10): UniMax's one real
+    // hyperparameter. [[UnimaxEpochs]] = the unrolled oracle's inlined
+    // constant, bit-identical; any E >= 1 keeps the integer-exactness
+    // contract (caps are n_tokens·E, still exact int64)
+    require(epochs >= 1L, s"unimax epochs must be >= 1, got $epochs")
     // r18 (guide §2.4): the r10 form read `per` THREE times — the ranked
     // window, an (S, B) scalar subquery, and a (k, pk, q) scalar subquery
     // over `capped` — and for q_mix_unimax every consumer owned a full
@@ -1127,7 +1128,7 @@ object CorpusQueries {
     // zero scalar subqueries, one corpus pass by construction, identical
     // integer arithmetic (count/sum/DIV over the identical rows). The
     // single-partition window is bounded by #sources, as before.
-    val per = totals.withColumn("cap", col("n_tokens") * E)
+    val per = totals.withColumn("cap", col("n_tokens") * epochs)
     val w = Window.orderBy("cap", "source")
     val wAll = w.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1254,8 +1255,8 @@ object CorpusQueries {
   /** q_pack's pipeline over an arbitrary documents frame (needs doc_id,
     * source, text).
     *
-    * Shard count: `spark.graft.pack.shards` if set (validated > 0, loud
-    * failure on junk like the lsh salt conf); otherwise auto-derived as
+    * Shard count: `shards` if given (validated > 0; only tests pin it);
+    * otherwise auto-derived as
     * greatest(8, ceil(count(packable docs)/4096)) — a SCALAR SUBQUERY
     * (`Dataset.scalar()`), so the derivation stays inside the plan with no
     * driver-side count and, unlike the r7 crossJoin(broadcast(...)) shape,
@@ -1264,18 +1265,11 @@ object CorpusQueries {
     * so docs-per-shard means what it says on a corpus with null texts.
     * Any N is reproducible: shard = md5_low63(doc_id) % N rides into the
     * output, and the per-(source,shard) fill bound is N-independent
-    * (PackShardSpec proves it at N=8 and N=64). */
-  private[ops] def pack(docs: DataFrame): DataFrame = {
+    * (OpPropertiesSpec proves it at N=8 and N=64). */
+  private[ops] def pack(docs: DataFrame,
+                        shards: Option[Long] = None): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val confShards = docs.sparkSession.conf
-      .getOption("spark.graft.pack.shards").map { raw =>
-        val n = try raw.toLong catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"bad pack shards conf: $raw")
-        }
-        require(n > 0, s"bad pack shards conf: $raw")
-        n
-      }
+    shards.foreach(n => require(n > 0, s"bad pack shards: $n"))
     val packable = docs.filter(col("text").isNotNull)
     val ch0 = packable
       .select(col("doc_id"), col("source"),
@@ -1285,7 +1279,7 @@ object CorpusQueries {
           "transform(sequence(1, greatest(size(w) - 10, 1), 40)," +
             " st -> size(slice(w, st, 50)))"))
           .as(Seq("chunk_idx", "n_chunk_tokens")))
-    val shardCount: Column = confShards match {
+    val shardCount: Column = shards match {
       case Some(n) => lit(n)
       case None =>
         packable.select(

@@ -43,9 +43,6 @@ object DedupQueries {
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
       .filter(size(col("w")) >= 3)
 
-  private def words(s: SparkSession, d: String): DataFrame =
-    wordsOf(Tables.documents(s, d))
-
   /** Exploded 3-word shingles: `transform` over an index sequence keeps the
     * shingle build inside whole-stage codegen (no UDF). */
   private[ops] def shinglesOf(docs: DataFrame): DataFrame =
@@ -55,9 +52,6 @@ object DedupQueries {
         """transform(sequence(1, size(w) - 2),
            i -> concat(element_at(w, i), ' ', element_at(w, i + 1), ' ',
                        element_at(w, i + 2)))""")).as("sh"))
-
-  private def shingles(s: SparkSession, d: String): DataFrame =
-    shinglesOf(Tables.documents(s, d))
 
   /** 4-hash MinHash signature per doc (seeded by prefixing the hash input)
     * — ONE native per-row expression ([[graft.functions.ShingleSig]]): the
@@ -567,13 +561,11 @@ object DedupQueries {
   private def expandBandBuckets(grouped: DataFrame,
                                 extra: Seq[String],
                                 pairFilter: Option[String],
-                                baselineBand: Option[Int] = None): DataFrame = {
-    val conf = grouped.sparkSession.conf
-    val threshold =
-      conf.getOption("spark.graft.lsh.salt.threshold").map(_.toInt).getOrElse(1 << 16)
-    val salts =
-      conf.getOption("spark.graft.lsh.salt.factor").map(_.toInt).getOrElse(16)
-    require(salts >= 1, s"bad lsh salt conf: salts=$salts")
+                                baselineBand: Option[Int] = None,
+                                saltThreshold: Int = LshSaltThreshold,
+                                salts: Int = LshSaltFactor): DataFrame = {
+    require(saltThreshold >= 1 && salts >= 1,
+      s"bad lsh salting: threshold=$saltThreshold salts=$salts")
     val buildExtra =
       extra.map(c => s", a.$c AS ${c}_a, b.$c AS ${c}_b").mkString
     val outCols =
@@ -607,43 +599,44 @@ object DedupQueries {
       .select(explode(expr(wrapBaseline(pairExpansionSql("ms", build,
         keepAb = Some(s"$pf$firstAgreeingBand"))))).as("p"))
       .select(outCols: _*)
-    // threshold <= 0 = salting OFF: the single-branch plan
-    if (threshold <= 0) expand(grouped)
-    else {
-      val cold = expand(grouped.filter(size(col("ms")) <= threshold))
-      val saltedMemberCols =
-        Seq(col("m.doc_id").as("doc_id"), col("s"),
-          col("m.mh0").as("mh0"), col("m.mh1").as("mh1"),
-          col("m.mh2").as("mh2"), col("m.mh3").as("mh3")) ++
-          extra.map(c => col(s"m.$c").as(c))
-      val hot = grouped.filter(size(col("ms")) > threshold)
-        .select(col("band"), col("h"), explode(col("ms")).as("m"))
-        .withColumn("s", pmod(hash(col("m.doc_id")), lit(salts)))
-        .select(col("band"), col("h"), col("m"), col("s"),
-          explode(expr(s"sequence(0, ${salts - 1})")).as("t"))
-        .select(col("band"), col("h"), col("m"), col("s"),
-          least(col("s"), col("t")).as("i"), greatest(col("s"), col("t")).as("j"))
-        .groupBy("band", "h", "i", "j")
-        .agg(sort_array(collect_list(struct(saltedMemberCols: _*))).as("ms"))
-        // ms sorted by doc_id (first struct field) ⇒ doc_a < doc_b, as cold
-        .select(explode(expr(pairExpansionSql("ms", build,
-          keepAb = Some(s"$pf(i = j OR a.s <> b.s) AND $firstAgreeingBand")))).as("p"))
-        .select(outCols: _*)
-      cold.union(hot)
-    }
+    val cold = expand(grouped.filter(size(col("ms")) <= saltThreshold))
+    val saltedMemberCols =
+      Seq(col("m.doc_id").as("doc_id"), col("s"),
+        col("m.mh0").as("mh0"), col("m.mh1").as("mh1"),
+        col("m.mh2").as("mh2"), col("m.mh3").as("mh3")) ++
+        extra.map(c => col(s"m.$c").as(c))
+    val hot = grouped.filter(size(col("ms")) > saltThreshold)
+      .select(col("band"), col("h"), explode(col("ms")).as("m"))
+      .withColumn("s", pmod(hash(col("m.doc_id")), lit(salts)))
+      .select(col("band"), col("h"), col("m"), col("s"),
+        explode(expr(s"sequence(0, ${salts - 1})")).as("t"))
+      .select(col("band"), col("h"), col("m"), col("s"),
+        least(col("s"), col("t")).as("i"), greatest(col("s"), col("t")).as("j"))
+      .groupBy("band", "h", "i", "j")
+      .agg(sort_array(collect_list(struct(saltedMemberCols: _*))).as("ms"))
+      // ms sorted by doc_id (first struct field) ⇒ doc_a < doc_b, as cold
+      .select(explode(expr(pairExpansionSql("ms", build,
+        keepAb = Some(s"$pf(i = j OR a.s <> b.s) AND $firstAgreeingBand")))).as("p"))
+      .select(outCols: _*)
+    cold.union(hot)
   }
+
+  /** Hot-bucket salting of [[expandBandBuckets]]: a bucket over
+    * [[LshSaltThreshold]] members splits into [[LshSaltFactor]] salts. */
+  private[ops] val LshSaltThreshold = 1 << 16
+  private[ops] val LshSaltFactor = 16
 
   /** Pair generation from an existing signature relation — split out so
     * q_jaccard_pairs can feed the shared sig+set aggregate through it.
     *
     * Hot buckets auto-salt (VERDICT r5 stretch): a bucket whose size
-    * exceeds `spark.graft.lsh.salt.threshold` (default 2^16) would expand
+    * exceeds `saltThreshold` ([[LshSaltThreshold]], 2^16) would expand
     * C(n,2) pairs inside ONE task — the quadratic straggler that kills the
     * job long before shuffle volume does. Instead of the manual
     * [[ScaleOps.saltedJoin]] escape hatch, the split is SIZE-TRIGGERED
     * after the bucket aggregation: oversize buckets explode back out, each
     * doc takes a deterministic salt `s = pmod(hash(doc_id), S)`
-    * (`spark.graft.lsh.salt.factor`, default 16) and is replicated to the
+    * (`salts`, [[LshSaltFactor]] = 16) and is replicated to the
     * S salt-pair groups `(min(s,t), max(s,t))` for t in [0,S), and pairs
     * expand per group — same-salt pairs only in group (s,s), cross-salt
     * pairs only in their unique (min,max) group, so every pair is emitted
@@ -677,7 +670,9 @@ object DedupQueries {
     * the corpus×corpus side of an incremental run. */
   private[ops] def lshPairsFromSig(sig: DataFrame,
                                    extra: Seq[String] = Nil,
-                                   pairFilter: Option[String] = None): DataFrame =
+                                   pairFilter: Option[String] = None,
+                                   saltThreshold: Int = LshSaltThreshold,
+                                   salts: Int = LshSaltFactor): DataFrame =
     // A WHOLLY-null signature (mh0 IS NULL — shingle_sig is atomic: all
     // lanes null or none) emits NO band rows, so unfiltered sig frames
     // (minhashSigAllOf) cost nothing past the scan. A partially-null
@@ -693,7 +688,7 @@ object DedupQueries {
           .filter(col("band").isNotNull),
         extra)
         .filter(size(col("ms")) > 1),
-      extra, pairFilter)
+      extra, pairFilter, saltThreshold = saltThreshold, salts = salts)
 
   /** Shared LSH-candidate set arithmetic: (doc_a, doc_b, |A∩B|, |A|, |B|)
     * for every candidate pair, sets riding WITH the signatures through the
@@ -773,9 +768,8 @@ object DedupQueries {
     * CHECKPOINTED once: the prefix explode and both array lookups read
     * the materialized rows instead of each re-running the
     * tokenize→df→sort pipeline (the r17 plan executed it up to 4×; the
-    * q_topk_diverse one-tokenize discipline, conf
-    * `spark.graft.simjoin.reliableCheckpoint` for dynamic-allocation
-    * clusters — see q_budget_sample's checkpoint caveat). (4) prefix
+    * q_topk_diverse one-tokenize discipline; a local checkpoint, like
+    * the other materialisation sites in this package). (4) prefix
     * explode + self-equi-join on the bare (shingle, doc) rows with the
     * AllPairs LENGTH filter (t·|A| ≤ |B| ≤ |A|/t) as a join residual —
     * no array payload rides the skew-prone exchange, (5) arrays join
@@ -834,18 +828,14 @@ object DedupQueries {
     val occ = clean
       .select(col("doc_id"), explode(col("ss")).as("sh"))
     val dfreq = occ.groupBy("sh").agg(count(lit(1)).as("df"))
-    val reliable = sets.sparkSession.conf
-      .get("spark.graft.simjoin.reliableCheckpoint", "false").toBoolean
-    val ordered0 = occ.join(dfreq, Seq("sh"))
+    val ordered = occ.join(dfreq, Seq("sh"))
       .groupBy("doc_id")
       .agg(expr("transform(array_sort(collect_list(struct(df, sh)))," +
         " x -> x.sh)").as("arr"))
       .select(col("doc_id"), col("arr"), size(col("arr")).as("n"))
       .withColumn("p",
         (col("n") - ceil(lit(t) * col("n")).cast("int") + 1))
-    val ordered =
-      if (reliable) ordered0.checkpoint(true)
-      else ordered0.localCheckpoint(true)
+      .localCheckpoint(true)
     val prefix = ordered.select(Seq(col("doc_id"), col("n")) :+
       posexplode(expr("slice(arr, 1, p)")).as(Seq("pos0", "sh")): _*)
     // PPJoin POSITIONAL filter (Xiao et al., WWW'08) as a join residual:
@@ -899,15 +889,11 @@ object DedupQueries {
     * (ADVICE r17). */
   private[graft] def lshRecallOf(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val reliable = s.conf
-      .get("spark.graft.simjoin.reliableCheckpoint", "false").toBoolean
-    val sigset0 = ScaleOps.spread(docs)
+    val sigset = ScaleOps.spread(docs)
       .select(col("doc_id"), expr("shingle_sig_set(text)").as("g"))
       .select(col("doc_id"), col("g.mh0"), col("g.mh1"), col("g.mh2"),
         col("g.mh3"), col("g.ss").as("ss"))
-    val sigset =
-      if (reliable) sigset0.checkpoint(true)
-      else sigset0.localCheckpoint(true)
+      .localCheckpoint(true)
     val truth = simjoinPrefixFromSets(sigset.select(col("doc_id"),
         col("ss")))
       .select(col("doc_a"), col("doc_b"), lit(0).as("side"))

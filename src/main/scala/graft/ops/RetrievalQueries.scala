@@ -211,24 +211,11 @@ object RetrievalQueries {
         (v, math.sqrt(SimilarityQueries.dotLocal(v, v)))
       })
 
-  /** Library-level idf selection: `spark.graft.bm25.idf` = `rational`
-    * (default — hash-exact cross-engine, the registered q_bm25's form) or
-    * `log` (Lucene-convention `ln(1+…)` — see [[termScoreNamedLog]] for
-    * the determinism trade). The registered gate queries run under the
-    * default; flipping the conf retunes every bm25Scored consumer
-    * (q_bm25, q_hybrid_rrf) to the Lucene scale. The streaming scorer
-    * freezes the rational form regardless — a stream that must match a
-    * batch run cannot depend on a session conf set elsewhere. */
+  /** The rational-idf scorer (hash-exact cross-engine) — the body of
+    * q_bm25 and the BM25 side of q_hybrid_rrf. The Lucene-convention
+    * `ln(1+…)` form is [[bm25ScoredLog]], registered as q_bm25_logidf. */
   private[graft] def bm25Scored(docs: DataFrame,
                                 frozen: Option[Array[Long]] = None): DataFrame = {
-    val useLog = docs.sparkSession.conf
-      .getOption("spark.graft.bm25.idf") match {
-        case None | Some("rational") => false
-        case Some("log") => true
-        case Some(other) =>
-          throw new IllegalArgumentException(
-            s"bad spark.graft.bm25.idf: $other (rational | log)")
-      }
     // r18 (guide §4.4's duplication trap, the q_hard_negatives barrier):
     // a plain filter-on-alias is pushed through the projection by
     // SUBSTITUTING the score expression — the full BM25 formula (and its
@@ -237,15 +224,13 @@ object RetrievalQueries {
     // explode(array(...)) Generate makes `score` an ATTRIBUTE the filter
     // cannot be pushed past, so the formula evaluates exactly once.
     bm25Prep(docs, QueryTerms, frozen)
-      .select(col("doc_id"),
-        explode(array(expr(if (useLog) scoreLogSql else scoreSql)))
-          .as("score"))
+      .select(col("doc_id"), explode(array(expr(scoreSql))).as("score"))
       .filter(col("score") > 0)
       .select(col("doc_id"), col("score"))
   }
 
-  /** The log-idf scorer, explicitly — q_bm25_logidf's body, independent
-    * of the session conf so the registered variant is deterministic. */
+  /** The log-idf scorer — q_bm25_logidf's body (see [[termScoreNamedLog]]
+    * for the determinism trade). */
   private[graft] def bm25ScoredLog(docs: DataFrame): DataFrame =
     // same Generate barrier as [[bm25Scored]] — one formula evaluation
     bm25Prep(docs, QueryTerms)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -146,45 +145,24 @@ object SimilarityQueries {
                 FROM embeddings e JOIN sig s USING (vec_id))"""
   }
 
+  /** Share of the coarse cells an IVF search probes (see [[ivfNprobe]]). */
+  private[ops] val IvfProbeFraction = 0.125
+
   /** Probe-count policy for an IVF search over `cells` coarse cells
-    * (VERDICT r6 #5 / r7 #3 — the first knob a real ANN user turns).
-    *
-    * `spark.graft.ivf.nprobe` pins an explicit count (validated in
-    * [1, cells], loud failure on junk). Otherwise nprobe holds the PROBED
-    * CORPUS FRACTION constant as the cell count grows:
-    * nprobe = clamp(ceil(cells × `spark.graft.ivf.probe.fraction`
-    * [default 1/8]), 1, cells). Rationale, measured in PERF.md's AnnRecall
-    * table: recall@10 at FIXED nprobe=2 decayed 0.42→0.20 as cells grew
-    * 16→64 (probed fraction 2/16→2/64), because IVF recall tracks the
-    * fraction of the corpus re-ranked, not the absolute probe count.
-    * Holding the fraction at 1/8 keeps recall roughly flat across corpus
-    * growth; the price — candidate mass per query grows linearly with the
-    * corpus — is inherent to flat-recall IVF and is the documented
-    * trade every IVF deployment makes (probe more cells or lose recall).
-    * At the production 16-cell quantizer the default yields nprobe=2,
-    * i.e. exactly the shape the DuckDB twin mirrors. */
-  private[ops] def ivfNprobe(s: SparkSession, cells: Int): Int = {
-    val conf = s.conf
-    conf.getOption("spark.graft.ivf.nprobe").map { raw =>
-      val n = try raw.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"bad ivf nprobe conf: $raw")
-      }
-      require(n >= 1 && n <= cells,
-        s"bad ivf nprobe conf: $raw (want 1..$cells)")
-      n
-    }.getOrElse {
-      val frac = conf.getOption("spark.graft.ivf.probe.fraction").map { raw =>
-        val f = try raw.toDouble catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"bad ivf probe fraction conf: $raw")
-        }
-        require(f > 0 && f <= 1, s"bad ivf probe fraction conf: $raw (want (0,1])")
-        f
-      }.getOrElse(0.125)
-      math.min(cells, math.max(1, math.ceil(cells * frac).toInt))
-    }
-  }
+    * (VERDICT r6 #5 / r7 #3): nprobe holds the PROBED CORPUS FRACTION
+    * constant as the cell count grows — nprobe = clamp(ceil(cells ×
+    * [[IvfProbeFraction]]), 1, cells). Rationale, measured in PERF.md's
+    * AnnRecall table: recall@10 at FIXED nprobe=2 decayed 0.42→0.20 as
+    * cells grew 16→64 (probed fraction 2/16→2/64), because IVF recall
+    * tracks the fraction of the corpus re-ranked, not the absolute probe
+    * count. Holding the fraction at 1/8 keeps recall roughly flat across
+    * corpus growth; the price — candidate mass per query grows linearly
+    * with the corpus — is inherent to flat-recall IVF and is the
+    * documented trade every IVF deployment makes (probe more cells or
+    * lose recall). At the production 16-cell quantizer this yields
+    * nprobe=2, i.e. exactly the shape the DuckDB twin mirrors. */
+  private[ops] def ivfNprobe(cells: Int): Int =
+    math.min(cells, math.max(1, math.ceil(cells * IvfProbeFraction).toInt))
 
   /** Every corpus vector with its IVF cell: nearest of the 16 seed
     * centroids by cosine (argmax via `greatest(struct(csim, -cent_id))` —
@@ -544,19 +522,17 @@ object SimilarityQueries {
     * scaled-integer mean aggregate collected as driver state
     * (CAST(c AS FLOAT) ≡ Double.toFloat, IEEE round-to-nearest on both
     * engines — every round is bit-reproducible on any partitioning).
-    * `rounds` defaults to `spark.graft.kmeans.rounds` (default 1 — the
-    * unrolled twin's depth, bit-identical; r10 turned "more rounds = a
-    * loop over the same two steps" from a claim into code). Each round is
+    * `rounds` defaults to 1 — the unrolled twin's depth, bit-identical
+    * (r10 turned "more rounds = a loop over the same two steps" from a
+    * claim into code; only tests run more). Each round is
     * one corpus pass + one ≤k·dim-row collect — the standard scalable
     * Lloyd shape at any corpus size. An empty cell drops out of the
     * aggregate and the codebook shrinks, same as the single-round
     * behavior. */
   private[graft] def kmeansCentroids(s: SparkSession, d: String,
                                      k: Int = 16,
-                                     roundsOverride: Option[Int] = None): Array[(Long, Array[Float])] = {
-    val rounds = roundsOverride.getOrElse(
-      s.conf.get("spark.graft.kmeans.rounds", "1").toInt)
-    require(rounds >= 1, s"spark.graft.kmeans.rounds must be >= 1, got $rounds")
+                                     rounds: Int = 1): Array[(Long, Array[Float])] = {
+    require(rounds >= 1, s"kmeans rounds must be >= 1, got $rounds")
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     def update(cents: Array[(Long, Array[Float])]): Array[(Long, Array[Float])] =
       kmeansAssign(e, cents)
@@ -652,7 +628,7 @@ object SimilarityQueries {
       // probes, and scores stay bit-identical to the all-Spark form and
       // the DuckDB oracle.
       val head = headVecs(s, d, 16)
-      val nprobe = ivfNprobe(s, 16)
+      val nprobe = ivfNprobe(16)
       val cents = head.map { case (id, ce) =>
         (id, ce, math.sqrt(dotLocal(ce, ce))) }
       // queries → nprobe probe cells (csim DESC, cent_id ASC), in the driver

@@ -882,19 +882,18 @@ object TextQueries {
     * vocabulary-bounded term→df map, #partitions maps cross the wire once,
     * and the sorted parallel arrays come out of the final merge.
     *
-    * r10: the vocabulary scalar IS pruned — `spark.graft.tfidf.min_df`
-    * (default 1 = bit-identical to the unfloored plan, the fixtures and
-    * the DuckDB twin) floors df inside [[graft.functions.TermDfAgg]]'s
+    * r10: the vocabulary scalar can be pruned — `minDf` (1 in the
+    * registered query = bit-identical to the unfloored plan, the fixtures
+    * and the DuckDB twin) floors df inside [[graft.functions.TermDfAgg]]'s
     * final eval, so the driver never materializes the web-scale typo tail
-    * (at `min_df = 2` the hapax majority of a raw-crawl vocabulary never
+    * (at `minDf = 2` the hapax majority of a raw-crawl vocabulary never
     * leaves the aggregate). Terms under the floor are absent from the
     * vocabulary and score no TF-IDF entry — the standard min-df contract;
     * `n_docs` still counts every document so surviving IDFs are unchanged. */
-  private[graft] def docTfidf(documents: DataFrame): DataFrame = {
+  private[graft] def docTfidf(documents: DataFrame,
+                              minDf: Long = 1L): DataFrame = {
     graft.functions.GraftFunctions.register(documents.sparkSession)
-    val minDf = documents.sparkSession.conf
-      .get("spark.graft.tfidf.min_df", "1").toLong
-    require(minDf >= 1L, s"spark.graft.tfidf.min_df must be >= 1, got $minDf")
+    require(minDf >= 1L, s"tfidf minDf must be >= 1, got $minDf")
     val docs = documents.filter(col("text").isNotNull)
     val vocab = docs
       .agg(expr(s"term_df(term_counts(text), ${minDf}L)").as("v"))

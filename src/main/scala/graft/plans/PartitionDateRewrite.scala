@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.model.BeaconSchemas
+
 /** Catalyst optimizer rule: make the reference's `DATE(ts) <= 'd'` verify
   * predicates (and plain timestamp-range predicates) partition-prunable
   * without the caller naming the partition column.
@@ -40,22 +42,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * `block_date` could belong to a different table than `ts`), only for the
   * writer's timestamp column names, and is idempotent (a derived conjunct
   * already present — semantically — is never re-added, so the fixed-point
-  * optimizer batch converges). `spark.graft.partitionDateRewrite.enabled=false`
-  * disables.
+  * optimizer batch converges). Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.PartitionDateRewrite`
+  * turns it off.
   */
 object PartitionDateRewrite extends Rule[LogicalPlan] {
 
   val PartitionColumn = "block_date"
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.partitionDateRewrite.enabled", "true").toBoolean
-
   /** Timestamp columns the BeaconIO writers derive `block_date` from. */
-  private def tsColumns: Set[String] =
-    conf.getConfString("spark.graft.partitionDateRewrite.tsColumns",
-      "block_timestamp,epoch_timestamp,timestamp").split(",").map(_.trim).toSet
+  private val tsColumns: Set[String] = BeaconSchemas.tables.values.map(_._2).toSet
 
-  override def apply(plan: LogicalPlan): LogicalPlan = if (!enabled) plan else {
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan transform {
       case f @ Filter(cond, child: LeafNode) =>
         child.output.find(a => a.name == PartitionColumn &&
@@ -69,7 +67,6 @@ object PartitionDateRewrite extends Rule[LogicalPlan] {
           case None => f
         }
     }
-  }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)

@@ -891,17 +891,24 @@ object BeaconStreaming {
         col("amount"))
   }
 
-  /** D6 — dual sink: every micro-batch appends the hourly history layout and
-    * overwrites the `latest` snapshot — `foreachBatch` is the streaming
-    * form of the reference's validators dual write
-    * (`build_hourly_export_dag.py:143-149`). */
+  /** D6 — dual sink: every micro-batch appends its rows to the hourly
+    * history layout and overwrites the `latest` snapshot — `foreachBatch`
+    * is the streaming form of the reference's validators dual write
+    * (`build_hourly_export_dag.py:143-149`). History is appended, not
+    * replaced per hour as [[BeaconIO.writeSnapshotWithLatest]] does for an
+    * hourly export replay: a micro-batch landing in an hour that already
+    * holds rows adds to it. */
   def dualSink(df: DataFrame, tsCol: String, historyPath: String,
                latestPath: String, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        BeaconIO.writeSnapshotWithLatest(batch, tsCol, historyPath, latestPath,
-          format = "parquet")
+        val cached = batch.cache()
+        try {
+          BeaconIO.withBlockDateHour(cached, tsCol).write.mode("append")
+            .partitionBy("block_date", "hour").parquet(historyPath)
+          cached.write.mode("overwrite").parquet(latestPath)
+        } finally cached.unpersist()
       }
 
   /** One bounded invocation (the cron-fired analog): process everything
@@ -1695,7 +1702,7 @@ object BeaconStreaming {
     // Lloyd: cosine argmax with the lowest-slot tie-break, mean update
     var fitted = seeds.toArray
     for (_ <- 1 to rounds) {
-      val assign = train.map { case (vid, v) =>
+      val assign = train.map { case (_, v) =>
         (fitted.zipWithIndex.map { case (c, i) => (-cos(v, c), i) }
           .min._2, v)
       }

@@ -1,7 +1,6 @@
 package graft.verify
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** Assertion-query framework (SURVEY.md §2-E E9, §2-B B11).
   *
@@ -15,105 +14,53 @@ import org.apache.spark.sql.functions._
   */
 object Checks {
 
-  final case class Check(name: String, condition: SparkSession => Column)
-
-  /** Evaluate one check: a one-row plan whose only column is
-    * `assert_true(cond, msg)` — throws `SparkRuntimeException(msg)` when the
-    * invariant is violated, mirroring the failing-CAST channel. */
-  def run(spark: SparkSession, cond: Column, message: String): Unit =
-    spark.range(1).select(assert_true(cond, lit(message)).as("ok")).collect()
-
-  /** NULL-tolerant `max+1 = cnt` — an empty table yields NULL max, which the
-    * reference's BigQuery IF treats as false (check fails), not as a crash. */
-  private def maxPlusOneEqualsCount(row: org.apache.spark.sql.Row): Column = {
-    val mx = Option(row.getAs[java.lang.Long]("mx"))
-    val cnt = row.getAs[Long]("cnt")
-    mx.map(m => lit(m.longValue + 1L) === lit(cnt)).getOrElse(lit(false))
+  /** The check as one single-aggregate SQL (B14 templating): the
+    * reference's IF + failing-assert shape over one scan, run via
+    * `spark.sql` under ANSI mode. A NULL `MAX` (no rows up to `ds`) makes
+    * the IF condition NULL, so the check fails, as in BigQuery. */
+  def renderedSql(check: String, ds: String): String = {
+    def maxPlusOne(table: String, tsCol: String, key: String, cnt: String,
+                   message: String) =
+      s"""SELECT IF(MAX($key) + 1 = $cnt, 1, assert_true(false, '$message'))
+         |FROM $table WHERE DATE($tsCol) <= '$ds'""".stripMargin
+    check match {
+      case "blocks_count" =>
+        maxPlusOne("beacon_blocks", "block_timestamp", "block_slot", "COUNT(*)",
+          s"Total number of beacon blocks is not equal to last block number plus one on $ds")
+      case "blocks_have_latest" =>
+        s"""SELECT IF(COUNT(*) > 0, 1, assert_true(false, 'There are no blocks on $ds'))
+           |FROM beacon_blocks WHERE DATE(block_timestamp) = '$ds'""".stripMargin
+      case "committees_count" =>
+        maxPlusOne("beacon_committees", "epoch_timestamp", "epoch", "COUNT(DISTINCT epoch)",
+          s"Total number of epochs in beacon committees is not equal to last epoch plus one on $ds")
+      case "validators_count" =>
+        maxPlusOne("beacon_validators", "timestamp", "epoch", "COUNT(DISTINCT epoch)",
+          s"Total number of epochs in beacon validators is not equal to last epoch plus one on $ds")
+      case other => throw new IllegalArgumentException(s"unknown check: $other")
+    }
   }
 
-  // ---- the four reference checks, parameterized on `ds` ----
-  // Each is offered in both forms: rendered SQL (spark.sql) and a
-  // DataFrame-builder (below). Table names are plain temp/catalog names;
-  // the caller registers `beacon_blocks` etc. first.
+  // ---- the four reference checks, parameterized on `ds`; the caller
+  // registers `beacon_blocks` etc. first. Each is one action on its SQL. ----
+
+  private def run(spark: SparkSession, check: String, ds: String): Unit =
+    spark.sql(renderedSql(check, ds)).collect()
 
   /** blocks_count.sql:1-11 — completeness: MAX(block_slot)+1 = COUNT(*)
     * cumulatively up to ds (holds because skipped slots emit rows too). */
-  def blocksCount(spark: SparkSession, ds: String): Unit = {
-    val agg = spark.table("beacon_blocks")
-      .filter(to_date(col("block_timestamp")) <= lit(ds))
-      .agg(max("block_slot").as("mx"), count(lit(1)).as("cnt"))
-    val row = agg.collect()(0)
-    run(spark, maxPlusOneEqualsCount(row),
-      s"Total number of beacon blocks is not equal to last block number plus one on $ds")
-  }
+  def blocksCount(spark: SparkSession, ds: String): Unit = run(spark, "blocks_count", ds)
 
   /** blocks_have_latest.sql:1-6 — freshness: COUNT(*) > 0 on ds exactly. */
-  def blocksHaveLatest(spark: SparkSession, ds: String): Unit = {
-    val cnt = spark.table("beacon_blocks")
-      .filter(to_date(col("block_timestamp")) === lit(ds))
-      .count()
-    run(spark, lit(cnt) > 0, s"There are no blocks on $ds")
-  }
+  def blocksHaveLatest(spark: SparkSession, ds: String): Unit =
+    run(spark, "blocks_have_latest", ds)
 
   /** committees_count.sql:1-11 — MAX(epoch)+1 = COUNT(DISTINCT epoch). */
-  def committeesCount(spark: SparkSession, ds: String): Unit = {
-    val row = spark.table("beacon_committees")
-      .filter(to_date(col("epoch_timestamp")) <= lit(ds))
-      .agg(max("epoch").as("mx"), countDistinct(col("epoch")).as("cnt"))
-      .collect()(0)
-    run(spark, maxPlusOneEqualsCount(row),
-      s"Total number of epochs in beacon committees is not equal to last epoch plus one on $ds")
-  }
+  def committeesCount(spark: SparkSession, ds: String): Unit =
+    run(spark, "committees_count", ds)
 
   /** validators_count.sql:1-11 — same invariant over beacon_validators. */
-  def validatorsCount(spark: SparkSession, ds: String): Unit = {
-    val row = spark.table("beacon_validators")
-      .filter(to_date(col("timestamp")) <= lit(ds))
-      .agg(max("epoch").as("mx"), countDistinct(col("epoch")).as("cnt"))
-      .collect()(0)
-    run(spark, maxPlusOneEqualsCount(row),
-      s"Total number of epochs in beacon validators is not equal to last epoch plus one on $ds")
-  }
-
-  /** The rendered-SQL form (B14 templating): same IF + failing-assert shape
-    * as the reference, executed via `spark.sql` under ANSI mode. */
-  def renderedSql(check: String, ds: String): String = check match {
-    case "blocks_count" =>
-      s"""SELECT IF(
-         |  (SELECT MAX(block_slot) FROM beacon_blocks
-         |   WHERE DATE(block_timestamp) <= '$ds') + 1 =
-         |  (SELECT COUNT(*) FROM beacon_blocks
-         |   WHERE DATE(block_timestamp) <= '$ds'),
-         |  1,
-         |  assert_true(false, 'Total number of beacon blocks is not equal to last block number plus one on $ds'))
-         |""".stripMargin
-    case "blocks_have_latest" =>
-      s"""SELECT IF(
-         |  (SELECT COUNT(*) FROM beacon_blocks
-         |   WHERE DATE(block_timestamp) = '$ds') > 0,
-         |  1,
-         |  assert_true(false, 'There are no blocks on $ds'))
-         |""".stripMargin
-    case "committees_count" =>
-      s"""SELECT IF(
-         |  (SELECT MAX(epoch) FROM beacon_committees
-         |   WHERE DATE(epoch_timestamp) <= '$ds') + 1 =
-         |  (SELECT COUNT(DISTINCT epoch) FROM beacon_committees
-         |   WHERE DATE(epoch_timestamp) <= '$ds'),
-         |  1,
-         |  assert_true(false, 'Total number of epochs in beacon committees is not equal to last epoch plus one on $ds'))
-         |""".stripMargin
-    case "validators_count" =>
-      s"""SELECT IF(
-         |  (SELECT MAX(epoch) FROM beacon_validators
-         |   WHERE DATE(timestamp) <= '$ds') + 1 =
-         |  (SELECT COUNT(DISTINCT epoch) FROM beacon_validators
-         |   WHERE DATE(timestamp) <= '$ds'),
-         |  1,
-         |  assert_true(false, 'Total number of epochs in beacon validators is not equal to last epoch plus one on $ds'))
-         |""".stripMargin
-    case other => throw new IllegalArgumentException(s"unknown check: $other")
-  }
+  def validatorsCount(spark: SparkSession, ds: String): Unit =
+    run(spark, "validators_count", ds)
 
   /** Run every wired check for a logical date (the daily DAG wires blocks +
     * committees; validators_count exists but is unwired in the reference —

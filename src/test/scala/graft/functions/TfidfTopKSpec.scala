@@ -64,33 +64,31 @@ class TfidfTopKSpec extends SparkTestBase {
     assert(floor2.getLong(2) === 3L)
   }
 
-  test("q_doc_tfidf honors spark.graft.tfidf.min_df: default identical, 2 excludes hapaxes") {
+  test("q_doc_tfidf minDf floor: default identical, 2 excludes hapaxes") {
     import spark.implicits._
     val docs = Seq((1L, "aa aa bb cc"), (2L, "bb cc dd"), (3L, "cc ee"))
       .toDF("doc_id", "text")
-    def run() = graft.ops.TextQueries.docTfidf(docs)
+    def rows(df: DataFrame) = df
       .orderBy("doc_id", "rnk")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
-    val dflt = run()
-    spark.conf.set("spark.graft.tfidf.min_df", "1")
-    try assert(run() === dflt)
-    finally spark.conf.unset("spark.graft.tfidf.min_df")
-    spark.conf.set("spark.graft.tfidf.min_df", "2")
-    try {
-      val floored = run()
-      // sub-floor terms (df=1: aa, dd, ee) score nothing; survivors keep
-      // the EXACT (tf, df, score) they had unfloored — n_docs is unmoved —
-      // and ranks close up per doc over the surviving entries
-      assert(floored.map(_._3).toSet === Set("bb", "cc"))
-      val unflooredSurvivors = dflt.filter(t => Set("bb", "cc")(t._3))
-        .map(t => (t._1, t._3, t._4, t._5, t._6))
-      assert(floored.map(t => (t._1, t._3, t._4, t._5, t._6)).sorted ===
-        unflooredSurvivors.sorted)
-      floored.groupBy(_._1).foreach { case (_, rows) =>
-        assert(rows.map(_._2).sorted === (1 to rows.length))
-      }
-    } finally spark.conf.unset("spark.graft.tfidf.min_df")
+    val dflt = rows(graft.ops.TextQueries.docTfidf(docs))
+    assert(rows(graft.ops.TextQueries.docTfidf(docs, minDf = 1)) === dflt)
+    val floored = rows(graft.ops.TextQueries.docTfidf(docs, minDf = 2))
+    // sub-floor terms (df=1: aa, dd, ee) score nothing; survivors keep
+    // the EXACT (tf, df, score) they had unfloored — n_docs is unmoved —
+    // and ranks close up per doc over the surviving entries
+    assert(floored.map(_._3).toSet === Set("bb", "cc"))
+    val unflooredSurvivors = dflt.filter(t => Set("bb", "cc")(t._3))
+      .map(t => (t._1, t._3, t._4, t._5, t._6))
+    assert(floored.map(t => (t._1, t._3, t._4, t._5, t._6)).sorted ===
+      unflooredSurvivors.sorted)
+    floored.groupBy(_._1).foreach { case (_, rows) =>
+      assert(rows.map(_._2).sorted === (1 to rows.length))
+    }
+    intercept[IllegalArgumentException] {
+      graft.ops.TextQueries.docTfidf(docs, minDf = 0)
+    }
   }
 
   test("tfidf_topk orders by score desc then term asc and bounds at k") {

@@ -49,7 +49,7 @@ object BudgetFloorProbe {
     import graft.tables.Tables
 
     def base = Tables.documents(spark, sfDir)
-    val shards = 64
+    val shards = CorpusQueries.BudgetShards
     val shift = 63 - Integer.numberOfTrailingZeros(shards)
 
     def docsOf(b: DataFrame): DataFrame = b.filter(col("text").isNotNull)
@@ -118,11 +118,8 @@ object BudgetFloorProbe {
         .collect()
       val totals = stRows.groupBy(_.getString(0)).view
         .mapValues(_.map(_.getLong(2)).sum).toSeq
-      // read E from the session conf exactly like the registered
-      // budgetSample — a hardcoded 4 would silently measure a different
-      // allocation whenever the conf overrides epochs (ADVICE r14)
-      val epochs = spark.conf.get("spark.graft.unimax.epochs", "4").toLong
-      val alloc = CorpusQueries.unimaxAllocLocal(totals, epochs)
+      // the registered budgetSample's E, not a copy of its value
+      val alloc = CorpusQueries.unimaxAllocLocal(totals, CorpusQueries.UnimaxEpochs)
       val lookup = stRows.groupBy(_.getString(0)).toSeq.flatMap {
         case (src, rows) =>
           val sorted = rows.sortBy(_.getLong(1))

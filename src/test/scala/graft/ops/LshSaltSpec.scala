@@ -10,16 +10,9 @@ import graft.SparkTestBase
   * engineered to trip it. */
 class LshSaltSpec extends SparkTestBase {
 
-  private def pairsWith(sig: DataFrame, threshold: Int, salts: Int): Set[(Long, Long, Long)] = {
-    spark.conf.set("spark.graft.lsh.salt.threshold", threshold.toString)
-    spark.conf.set("spark.graft.lsh.salt.factor", salts.toString)
-    try DedupQueries.lshPairsFromSig(sig).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    finally {
-      spark.conf.unset("spark.graft.lsh.salt.threshold")
-      spark.conf.unset("spark.graft.lsh.salt.factor")
-    }
-  }
+  private def pairsWith(sig: DataFrame, threshold: Int, salts: Int): Set[(Long, Long, Long)] =
+    DedupQueries.lshPairsFromSig(sig, saltThreshold = threshold, salts = salts)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("adversarial single bucket: salted pairs = unsalted pairs, C(n,2) of them") {
     import spark.implicits._

@@ -221,28 +221,24 @@ class OpPropertiesSpec extends SparkTestBase {
     }
   }
 
-  test("unimax epochs conf: default identical, E=1 caps every source at one epoch") {
-    def alloc() = CorpusQueries.queries("q_mix_unimax")(
+  test("unimax epochs: default identical, E=1 caps every source at one epoch") {
+    val fixture = graft.tables.Tables.documents(
       spark, "/root/testdata/sf0.001")
+    def alloc(epochs: Long) = CorpusQueries.unimaxAlloc(fixture, epochs)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).sortBy(_._1).toSeq
-    val dflt = alloc()
-    spark.conf.set("spark.graft.unimax.epochs", "4")
-    try assert(alloc() === dflt)
-    finally spark.conf.unset("spark.graft.unimax.epochs")
-    spark.conf.set("spark.graft.unimax.epochs", "1")
-    try {
-      val e1 = alloc()
-      // at E=1 no source may be allocated beyond its own token count
-      e1.foreach { case (src, nTok, cap, a, _) =>
-        assert(cap === nTok, src)
-        assert(a <= nTok, src)
-      }
-      // tighter caps can only shrink (or hold) each source's allocation
-      dflt.zip(e1).foreach { case ((s4, _, _, a4, _), (s1, _, _, a1, _)) =>
-        assert(s4 === s1); assert(a1 <= a4, s4)
-      }
-    } finally spark.conf.unset("spark.graft.unimax.epochs")
+    val dflt = alloc(CorpusQueries.UnimaxEpochs)
+    assert(alloc(4) === dflt)
+    val e1 = alloc(1)
+    // at E=1 no source may be allocated beyond its own token count
+    e1.foreach { case (src, nTok, cap, a, _) =>
+      assert(cap === nTok, src)
+      assert(a <= nTok, src)
+    }
+    // tighter caps can only shrink (or hold) each source's allocation
+    dflt.zip(e1).foreach { case ((s4, _, _, a4, _), (s1, _, _, a1, _)) =>
+      assert(s4 === s1); assert(a1 <= a4, s4)
+    }
   }
 
   test("unimaxAllocLocal drift gate: row-equal to the declarative allocation") {
@@ -253,17 +249,14 @@ class OpPropertiesSpec extends SparkTestBase {
     // crafted corpus with cap ties (same cap, distinct sources — the
     // (cap, source) tie-break must agree) for several E values
     def check(df: org.apache.spark.sql.DataFrame, E: Long): Unit = {
-      spark.conf.set("spark.graft.unimax.epochs", E.toString)
-      try {
-        val declared = CorpusQueries.unimaxAlloc(df)
-          .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-        val totals = df.filter($"text".isNotNull)
-          .selectExpr("source",
-            "CAST(size(split(trim(text), '\\\\s+')) AS BIGINT) AS n")
-          .collect().groupBy(_.getString(0)).view
-          .mapValues(_.map(_.getLong(1)).sum).toSeq
-        assert(CorpusQueries.unimaxAllocLocal(totals, E) === declared)
-      } finally spark.conf.unset("spark.graft.unimax.epochs")
+      val declared = CorpusQueries.unimaxAlloc(df, epochs = E)
+        .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
+      val totals = df.filter($"text".isNotNull)
+        .selectExpr("source",
+          "CAST(size(split(trim(text), '\\\\s+')) AS BIGINT) AS n")
+        .collect().groupBy(_.getString(0)).view
+        .mapValues(_.map(_.getLong(1)).sum).toSeq
+      assert(CorpusQueries.unimaxAllocLocal(totals, E) === declared)
     }
     val fixture = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
     val ties = Seq(
@@ -308,25 +301,6 @@ class OpPropertiesSpec extends SparkTestBase {
     } yield (p, sk, (p * 31 + sk * 17) % 100000 + 100,
       (p * 13 + sk * 7) % 9999 + 1)
     assert(rows.sorted === expected.sorted)
-  }
-
-  test("q_budget_sample: reliable-checkpoint gate returns identical rows") {
-    // ADVICE r14: localCheckpoint blocks live on executors only — the
-    // conf-gated reliable path must produce the SAME take (the gate only
-    // swaps the materialization mechanism, never the plan semantics)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val baseline = CorpusQueries.queries("q_budget_sample")(
-      spark, "/root/testdata/sf0.001").collect().map(_.toString).sorted
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set("spark.graft.budget.reliableCheckpoint", "true")
-    try {
-      val reliable = CorpusQueries.queries("q_budget_sample")(
-        spark, "/root/testdata/sf0.001").collect().map(_.toString).sorted
-      assert(reliable === baseline)
-    } finally {
-      spark.conf.unset("spark.graft.budget.reliableCheckpoint")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
   }
 
   test("q_budget_sample: greedy take respects the UniMax allocation per source") {
@@ -427,21 +401,15 @@ class OpPropertiesSpec extends SparkTestBase {
       (301L to 380L).map(i => (i, s"s${i % 3}",
         Seq.fill((i % 4 + 1).toInt)("tok").mkString(" "))))
       .toDF("doc_id", "source", "text")
-    def run(shards: Int) = {
-      spark.conf.set("spark.graft.budget.shards", shards.toString)
-      try CorpusQueries.budgetSample(df)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3))).sortBy(_._1).toSeq
-      finally spark.conf.unset("spark.graft.budget.shards")
-    }
+    def run(shards: Int) = CorpusQueries.budgetSample(df, shards = shards)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3))).sortBy(_._1).toSeq
     val n64 = run(64)
     assert(n64.nonEmpty)
     assert(run(1) === n64)
     assert(run(256) === n64)
-    // junk conf fails loudly, not silently
-    spark.conf.set("spark.graft.budget.shards", "63")
-    try intercept[IllegalArgumentException] { CorpusQueries.budgetSample(df) }
-    finally spark.conf.unset("spark.graft.budget.shards")
+    // a non-power-of-two shard count fails loudly, not silently
+    intercept[IllegalArgumentException] { run(63) }
   }
 
   test("lineDedup: C4 line filters, corpus-wide first-wins, source-order reassembly") {
@@ -645,11 +613,8 @@ class OpPropertiesSpec extends SparkTestBase {
       assert(nonLast.filter(col("toks") < 2048 - 50).isEmpty,
         s"interior sequence under-filled at N=$n")
     }
-    def withShards(n: Long): org.apache.spark.sql.DataFrame = {
-      spark.conf.set("spark.graft.pack.shards", n.toString)
-      try CorpusQueries.queries("q_pack")(spark, sfDir)
-      finally spark.conf.unset("spark.graft.pack.shards")
-    }
+    def withShards(n: Long): org.apache.spark.sql.DataFrame =
+      CorpusQueries.pack(graft.tables.Tables.documents(spark, sfDir), Some(n))
     // identical invariants at N=8 and N=64 (VERDICT r6 #3 done-criterion)
     val at8 = withShards(8)
     val at64 = withShards(64)

@@ -278,16 +278,13 @@ class PqSpec extends SparkTestBase {
       f"residual PQ should reconstruct better: $resErr%.5f vs raw $rawErr%.5f")
   }
 
-  test("kmeans rounds conf: deterministic, default-identical, inertia non-increasing") {
+  test("kmeans rounds: deterministic, default-identical, inertia non-increasing") {
     val r1 = SimilarityQueries.kmeansCentroids(spark, dir)
-    val r1b = SimilarityQueries.kmeansCentroids(spark, dir,
-      roundsOverride = Some(1))
+    val r1b = SimilarityQueries.kmeansCentroids(spark, dir, rounds = 1)
     assert(r1.map(_._1).toSeq === r1b.map(_._1).toSeq)
     r1.zip(r1b).foreach { case ((_, a), (_, b)) => assert(a.toSeq === b.toSeq) }
-    val r2 = SimilarityQueries.kmeansCentroids(spark, dir,
-      roundsOverride = Some(2))
-    val r2b = SimilarityQueries.kmeansCentroids(spark, dir,
-      roundsOverride = Some(2))
+    val r2 = SimilarityQueries.kmeansCentroids(spark, dir, rounds = 2)
+    val r2b = SimilarityQueries.kmeansCentroids(spark, dir, rounds = 2)
     r2.zip(r2b).foreach { case ((_, a), (_, b)) => assert(a.toSeq === b.toSeq) }
     // a second round moves at least one centroid on the fixture
     assert(r1.map(_._2.toSeq) !== r2.map(_._2.toSeq))

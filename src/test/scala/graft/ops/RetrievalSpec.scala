@@ -52,7 +52,7 @@ class RetrievalSpec extends SparkTestBase {
     assert(s(1L) - s(2L) < s(2L) - s(3L))
   }
 
-  test("log-idf variant: Lucene scale, same structural contracts, conf-switchable") {
+  test("log-idf variant: Lucene scale, same structural contracts") {
     val d = docs(
       (1L, "spark spark spark pad1 pad2 pad3"),
       (2L, "spark spark pad0 pad1 pad2 pad3"),
@@ -68,15 +68,6 @@ class RetrievalSpec extends SparkTestBase {
     val rat = RetrievalQueries.bm25Scored(d)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(log(1L) < rat(1L))
-    // the conf flips every bm25Scored consumer to the log form
-    spark.conf.set("spark.graft.bm25.idf", "log")
-    try {
-      val viaConf = RetrievalQueries.bm25Scored(d)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(viaConf === log)
-      spark.conf.set("spark.graft.bm25.idf", "junk")
-      intercept[IllegalArgumentException] { RetrievalQueries.bm25Scored(d) }
-    } finally spark.conf.unset("spark.graft.bm25.idf")
     // and the registered variant emits a ranked top-10 on the fixture
     val out = RetrievalQueries.queries("q_bm25_logidf")(spark, sfDir).collect()
     assert(out.length == 10 && out.map(_.getInt(1)).toSeq == (1 to 10))

@@ -8,22 +8,26 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.io.BeaconIO
+import graft.model.BeaconSchemas
 
 class PartitionDateRewriteSpec extends SparkTestBase {
 
   /** 3 days × 2 rows written through the real daily writer (parquet so the
-    * scan is FileSourceScanExec and partition pruning is observable). */
-  private lazy val base: String = {
+    * scan is FileSourceScanExec and partition pruning is observable),
+    * partitioned on `tsCol`. */
+  private def written(tsCol: String): String = {
     import spark.implicits._
     val rows = for {
       day <- 1 to 3
       slot <- 0 to 1
     } yield (day * 10L + slot, Timestamp.valueOf(f"2020-12-0$day 0$slot:00:00"))
-    val df = rows.toDF("block_slot", "block_timestamp")
-    val dir = tmpDir("pdr")
-    BeaconIO.writeDaily(df, "block_timestamp", dir, format = "parquet")
+    val df = rows.toDF("block_slot", tsCol)
+    val dir = tmpDir(s"pdr-$tsCol")
+    BeaconIO.writeDaily(df, tsCol, dir, format = "parquet")
     dir
   }
+
+  private lazy val base: String = written("block_timestamp")
 
   private def scanOf(df: DataFrame): FileSourceScanExec = {
     val plan = df.queryExecution.executedPlan match {
@@ -37,13 +41,19 @@ class PartitionDateRewriteSpec extends SparkTestBase {
   private def read() = spark.read.parquet(base)
 
   test("DATE(ts) <= d gains a block_date partition filter and prunes (B2)") {
-    val df = read().filter(to_date(col("block_timestamp")) <= lit("2020-12-02"))
-    val scan = scanOf(df)
-    assert(scan.partitionFilters.exists(_.references.exists(_.name == "block_date")),
-      scan.partitionFilters.mkString("; "))
-    // physically pruned: only 2 of the 3 date directories are read
-    assert(scan.selectedPartitions.partitionCount === 2)
-    assert(df.count() === 4)
+    // every beacon table's partition-source column, not only blocks'
+    val tsCols = BeaconSchemas.tables.values.map(_._2).toSeq.sorted
+    assert(tsCols === Seq("block_timestamp", "epoch_timestamp", "timestamp"))
+    for (tsCol <- tsCols) {
+      val df = spark.read.parquet(written(tsCol))
+        .filter(to_date(col(tsCol)) <= lit("2020-12-02"))
+      val scan = scanOf(df)
+      assert(scan.partitionFilters.exists(_.references.exists(_.name == "block_date")),
+        s"$tsCol: " + scan.partitionFilters.mkString("; "))
+      // physically pruned: only 2 of the 3 date directories are read
+      assert(scan.selectedPartitions.partitionCount === 2, tsCol)
+      assert(df.count() === 4, tsCol)
+    }
   }
 
   test("DATE(ts) = d prunes to exactly one partition (B3)") {
@@ -63,13 +73,13 @@ class PartitionDateRewriteSpec extends SparkTestBase {
       .filter(to_date(col("block_timestamp")) <= lit("2020-12-02"))
       .select("block_slot").collect().map(_.getLong(0)).sorted.toSeq
     val withRule = run()
-    spark.conf.set("spark.graft.partitionDateRewrite.enabled", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.PartitionDateRewrite")
     try {
       val without = run()
       assert(scanOf(read().filter(to_date(col("block_timestamp")) <= lit("2020-12-02")))
         .selectedPartitions.partitionCount === 3) // no pruning without the rule
       assert(withRule === without)
-    } finally spark.conf.set("spark.graft.partitionDateRewrite.enabled", "true")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("the reference's verbatim verify predicate prunes via spark.sql (B2/E9)") {

@@ -81,6 +81,16 @@ class BeaconStreamingSpec extends SparkTestBase {
     assert(latest.count() === 5L)
     assert(latest.agg(max("epoch")).collect()(0).getLong(0) === 1L)
     assert(spark.read.parquet(s"$dir/history").count() === 10L)
+
+    // a third landing in the hour that already holds the second one's rows
+    // (a minute later) adds to that hour's history instead of replacing it
+    BeaconFixtures.write(s"$dir/in/v3.json",
+      BeaconFixtures.validatorLines(2, 5, epochSpacingSeconds = 3660).drop(5))
+    BeaconStreaming.runAvailableNow(w).awaitTermination(120000)
+    assert(spark.read.parquet(s"$dir/latest").count() === 5L)
+    val history = spark.read.parquet(s"$dir/history")
+    assert(history.select("block_date", "hour").distinct().count() === 2L)
+    assert(history.count() === 15L)
   }
 
   test("session windows group by inactivity gap (D8)") {
