@@ -13,9 +13,10 @@ import org.apache.spark.sql.SparkSession
   *   silently pass a failed check.
   * - `nanosAsLong`: the testdata `events` table stores TIMESTAMP(NANOS)
   *   which the parquet reader otherwise rejects.
-  * - dynamic partition overwrite: per-date idempotent re-loads, the scalable
-  *   equivalent of the reference's WRITE_TRUNCATE
-  *   (`/root/reference/dags/ethereum2etl_airflow/build_load_dag.py:82`).
+  *
+  * No write mode is set here: every beacon-table write replaces one
+  * directory through [[graft.io.BeaconIO.commit]], so the session's
+  * partition-overwrite mode never decides what a write replaces.
   */
 object GraftSession {
 
@@ -24,7 +25,6 @@ object GraftSession {
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
     .config("spark.sql.parquet.aggregatePushdown", "true")
     .config("spark.ui.enabled", "false")

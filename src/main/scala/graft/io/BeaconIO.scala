@@ -2,13 +2,14 @@ package graft.io
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.model.BeaconSchemas
 
-/** Schema-declared ingest + partitioned publish for the beacon tables.
+/** Schema-declared ingest + the one directory commit for the beacon tables.
   *
   * Semantics re-expressed from the reference's load/export stages:
   * - **JSONL load with BQ semantics** (A13): declared schema, unknown JSON
@@ -18,16 +19,18 @@ import graft.model.BeaconSchemas
   *   natively when given an explicit schema — never schema inference.
   * - **Hive-style date layout** (A8/A9): `block_date=YYYY-MM-DD[/hour=HH]`
   *   (`build_export_dag.py:61-74`, `build_hourly_export_dag.py:63-66`).
-  *   The partition column is *materialized from the event timestamp* at
-  *   write, so every `DATE(ts) <= d` predicate becomes partition-prunable
-  *   (SURVEY.md §4.1 — the design choice that replaces BigQuery's
-  *   TimePartitioning and keeps 100 TB scans bounded).
-  * - **Idempotent re-runs** (D5): dynamic partition overwrite — a replayed
-  *   logical date overwrites exactly its own partitions, the scalable
-  *   equivalent of the reference's WRITE_TRUNCATE full reload
+  *   Each run owns the directory of its logical date/hour; the warehouse
+  *   partition holds the rows whose event timestamp falls in it, so every
+  *   `DATE(ts) <= d` predicate is partition-prunable (SURVEY.md §4.1 — the
+  *   design choice that replaces BigQuery's TimePartitioning and keeps
+  *   100 TB scans bounded).
+  * - **Idempotent re-runs** (D5): every write is one [[commit]] of one
+  *   directory, a whole new generation swapped in by rename — a replayed
+  *   unit replaces exactly the directory it owns and nothing else, the
+  *   per-unit form of the reference's WRITE_TRUNCATE
   *   (`build_load_dag.py:82`).
-  * - **Dual "latest" sink** (A10/D6): history append + full overwrite of a
-  *   `latest` path, mirroring `export_path_for_tag(dir, 'latest')`
+  * - **Dual "latest" sink** (A10/D6): a history directory per unit plus a
+  *   whole-directory `latest`, mirroring `export_path_for_tag(dir, 'latest')`
   *   (`build_hourly_export_dag.py:68-71,143-149`).
   */
 object BeaconIO {
@@ -58,42 +61,6 @@ object BeaconIO {
     withBlockDate(df, tsCol)
       .withColumn("hour", format_string("%02d", hour(col(tsCol))))
 
-  /** A8/D5: daily-partitioned publish; re-runs overwrite only the partitions
-    * present in `df` (dynamic mode, set by GraftSession). Export stage uses
-    * `format="json"` (the reference's exchange format —
-    * `build_load_dag.py:81`); warehouse tables use `"parquet"`. */
-  def writeDaily(df: DataFrame, tsCol: String, basePath: String,
-                 format: String = "json"): Unit =
-    withBlockDate(df, tsCol)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("block_date")
-      .option("timestampFormat", TimestampWriteFormat)
-      .format(format).save(basePath)
-
-  /** A9: hourly layout `block_date=…/hour=HH`. */
-  def writeHourly(df: DataFrame, tsCol: String, basePath: String,
-                  format: String = "json"): Unit =
-    withBlockDateHour(df, tsCol)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("block_date", "hour")
-      .option("timestampFormat", TimestampWriteFormat)
-      .format(format).save(basePath)
-
-  /** A10: replace the hour's snapshot in history AND fully overwrite the
-    * `latest` path — the reference's hourly validators export, where a
-    * replayed hour must replace itself. */
-  def writeSnapshotWithLatest(df: DataFrame, tsCol: String,
-                              historyPath: String, latestPath: String,
-                              format: String = "json"): Unit = {
-    val cached = df.cache()
-    try {
-      writeHourly(cached, tsCol, historyPath, format)
-      cached.write.mode(SaveMode.Overwrite)
-        .option("timestampFormat", TimestampWriteFormat)
-        .format(format).save(latestPath)
-    } finally cached.unpersist()
-  }
-
   /** Partition-pruned single-date read (`only_last_date` analog,
     * `build_load_dag.py:88-92`): the filter lands on the partition column,
     * so only that date's directories are listed and scanned. */
@@ -109,7 +76,7 @@ object BeaconIO {
     * through the Hadoop FS connector — works against any scheme. */
   def writeRangeMeta(basePath: String, date: LocalDate, name: String,
                      range: (Long, Long)): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$basePath/block_date=$date/$name")
+    val p = new Path(s"$basePath/block_date=$date/$name")
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val out = fs.create(p, true)
     try out.write(s"${range._1},${range._2}".getBytes("UTF-8"))
@@ -119,7 +86,7 @@ object BeaconIO {
   /** Read back a `"start,end"` sidecar (`get_block_range` parse —
     * `build_export_dag.py:83-88`). */
   def readRangeMeta(basePath: String, date: LocalDate, name: String): (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(s"$basePath/block_date=$date/$name")
+    val p = new Path(s"$basePath/block_date=$date/$name")
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val in = fs.open(p)
     val text =
@@ -129,6 +96,105 @@ object BeaconIO {
       case Array(a, b) => (a.toLong, b.toLong)
       case _ => throw new IllegalArgumentException(
         s"malformed range meta at $p: '$text'")
+    }
+  }
+
+  // ---- the directory commit (D5) ----
+
+  /** Where [[commit]] stages a generation (`gen = "next"`) and retires the
+    * live one (`gen = "old"`): `<parent>/.<name>.<gen>`. The leading dot
+    * matters: Spark's file index skips `.`-names, but it lists an `_`-name
+    * that contains `=`, and `block_date=X.next` would read as a partition. */
+  private[graft] def sibling(path: String, gen: String): String = {
+    val p = new Path(path)
+    new Path(p.getParent, s".${p.getName}.$gen").toString
+  }
+
+  /** Replace the directory `path` with `df`, crash-safely. `df` is written
+    * as a complete generation into the `.next` sibling; only then is the
+    * live directory touched, and by atomic renames only: retire it to
+    * `.old`, promote `.next`, delete `.old`. The one non-atomic step (that
+    * delete) touches a retired copy, never the sole complete generation,
+    * and [[recover]] heals every window between the steps:
+    *   - during the `.next` write → the live generation is untouched;
+    *   - after retire, before promote → [[recover]] adopts the complete
+    *     `.next` (its `_SUCCESS` marker is the committer's last file);
+    *   - `.next` incomplete with the live dir retired → [[recover]]
+    *     resurrects `.old`;
+    *   - mid-`.old`-delete → the live dir is already the new generation;
+    *     the stray `.old` is garbage that the next commit clears.
+    * A streaming state table derives each generation from the last, so a
+    * micro-batch redelivered after any of these windows must re-merge
+    * idempotently (max-struct, hll_union, first-wins union — each pinned
+    * by its sliced-replay test).
+    *
+    * Leftovers at the target are healed before writing: a stray `.old` is
+    * deleted and a stale `.next` overwritten. A missing live directory
+    * with a retired or complete sibling is refused instead, before
+    * anything is touched: a `df` derived from the target read it as
+    * missing, and writing it would bury the newer generation —
+    * [[recover]] is the heal path.
+    *
+    * Rows matching `reject` fail the commit before the swap and leave the
+    * live directory as it was. They are counted by an Observation on the
+    * write job itself, so the check costs no second scan.
+    *
+    * Renames are atomic on HDFS and posix; on a raw object store use a
+    * transactional table format, whose swap would live here alone. */
+  private[graft] def commit(df: DataFrame, path: String,
+                            format: String = "parquet",
+                            partitionBy: Seq[String] = Nil,
+                            reject: Option[Column] = None): Unit = {
+    val live = new Path(path)
+    val fs = live.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val next = new Path(sibling(path, "next"))
+    val old = new Path(sibling(path, "old"))
+    if (!fs.exists(live) && (fs.exists(old) || fs.exists(new Path(next, "_SUCCESS"))))
+      throw new IllegalStateException(
+        s"commit: $path is missing while a retired or complete sibling " +
+          "generation exists — the caller skipped BeaconIO.recover; " +
+          "refusing to overwrite the only complete generation")
+    val obs = Observation()
+    reject.fold(df)(r => df.observe(obs, count(when(r, 1)).as("rejected")))
+      .write.mode(SaveMode.Overwrite).format(format).partitionBy(partitionBy: _*)
+      .option("timestampFormat", TimestampWriteFormat).save(next.toString)
+    val rejected = if (reject.isEmpty) 0L else obs.get("rejected").asInstanceOf[Long]
+    if (rejected > 0) {
+      fs.delete(next, true)
+      throw new IllegalStateException(
+        s"commit: $rejected rows do not belong in $path; it is left as it was")
+    }
+    // next is complete (the write returned) — swap by renames only
+    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(live) && !fs.rename(live, old))
+      throw new java.io.IOException(s"commit: retire failed: $live -> $old")
+    if (!fs.rename(next, live))
+      throw new java.io.IOException(s"commit: promote failed: $next -> $live")
+    fs.delete(old, true)
+  }
+
+  /** Heal [[commit]]'s rename windows at `path`; call it before reading a
+    * directory that a crashed run may have left mid-swap, and before
+    * deriving a new generation from it. If the live directory is missing:
+    * adopt a complete `.next` and drop `.old`, else resurrect `.old`. If
+    * it exists, a stray `.old` is garbage from a crash mid-cleanup. */
+  private[graft] def recover(spark: SparkSession, path: String): Unit = {
+    val live = new Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val next = new Path(sibling(path, "next"))
+    val old = new Path(sibling(path, "old"))
+    if (!fs.exists(live)) {
+      if (fs.exists(new Path(next, "_SUCCESS"))) {
+        if (!fs.rename(next, live))
+          throw new java.io.IOException(s"recover: adopt failed: $next -> $live")
+        fs.delete(old, true)
+      } else if (fs.exists(old)) {
+        fs.delete(next, true) // a partial generation is never adopted
+        if (!fs.rename(old, live))
+          throw new java.io.IOException(s"recover: resurrect failed: $old -> $live")
+      }
+    } else if (fs.exists(old)) {
+      fs.delete(old, true)
     }
   }
 

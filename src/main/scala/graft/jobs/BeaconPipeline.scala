@@ -1,6 +1,6 @@
 package graft.jobs
 
-import java.time.LocalDate
+import java.time.{Duration, Instant, LocalDate, ZoneOffset}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,112 +58,102 @@ final class JsonlBeaconSource(baseDir: String) extends BeaconSource {
 
 object BeaconPipeline {
 
+  /** The daily export's validators are the current set (the reference's
+    * `start_epoch=None` call, `build_export_dag.py:135-143`), so its
+    * warehouse table is replaced whole, always exactly the latest day's
+    * snapshot (`build_load_dag.py:82,88-91,127`). */
+  private val SnapshotTable = "beacon_validators"
+
   /** Daily export (`build_export_dag.py`): resolve the date's slot/epoch
-    * ranges (A4/A5), pull each entity, publish partitioned JSONL under
-    * `export/{table}/block_date=…` (A8). */
+    * ranges (A4/A5), pull each entity, and commit each as the directory
+    * `export/{table}/block_date=ds` the run owns (A8, `:61-64`), then
+    * publish the ranges as sidecars next to the data (`:121-123`). */
   def dailyExport(spark: SparkSession, source: BeaconSource, ds: LocalDate,
                   exportBase: String): Unit = {
     val slots = BeaconFunctions.slotRangeForDate(ds)
     val epochs = BeaconFunctions.epochRangeForSlots(slots)
-    BeaconIO.writeDaily(source.blocks(spark, slots), "block_timestamp",
-      s"$exportBase/beacon_blocks")
-    BeaconIO.writeDaily(source.validatorsLatest(spark), "timestamp",
-      s"$exportBase/beacon_validators")
-    BeaconIO.writeDaily(source.committees(spark, epochs), "epoch_timestamp",
-      s"$exportBase/beacon_committees")
-    // A4/A5 — publish the resolved ranges as sidecars next to the data
-    // (`build_export_dag.py:121-123` uploads blocks_meta.txt/epochs_meta.txt)
+    def unitDir(table: String) = s"$exportBase/$table/block_date=$ds"
+    exportDir(source.blocks(spark, slots), unitDir("beacon_blocks"))
+    exportDir(source.validatorsLatest(spark), unitDir(SnapshotTable))
+    exportDir(source.committees(spark, epochs), unitDir("beacon_committees"))
     BeaconIO.writeRangeMeta(s"$exportBase/beacon_blocks", ds, "blocks_meta.txt", slots)
     BeaconIO.writeRangeMeta(s"$exportBase/beacon_committees", ds, "epochs_meta.txt", epochs)
   }
 
   /** Hourly export (`build_hourly_export_dag.py`): hour-clamped ranges
-    * (A6/A7), hourly layout (A9), plus the validators dual history+latest
-    * sink (A10/D6). */
+    * (A6/A7) committed under `block_date=ds/hour=HH` (A9), plus the
+    * validators dual sink (A10/D6): the hour's snapshot in history and the
+    * whole `beacon_validators_latest` directory. */
   def hourlyExport(spark: SparkSession, source: BeaconSource, ds: LocalDate, hour: Int,
                    exportBase: String): Unit = {
     val slots = BeaconFunctions.slotRangeForHour(ds, hour)
     val epochs = BeaconFunctions.epochRangeForSlots(slots)
-    BeaconIO.writeHourly(source.blocks(spark, slots), "block_timestamp",
-      s"$exportBase/beacon_blocks")
-    BeaconIO.writeHourly(source.committees(spark, epochs), "epoch_timestamp",
-      s"$exportBase/beacon_committees")
-    BeaconIO.writeSnapshotWithLatest(source.validators(spark, epochs), "timestamp",
-      s"$exportBase/beacon_validators", s"$exportBase/beacon_validators_latest")
+    def unitDir(table: String) = f"$exportBase/$table/block_date=$ds/hour=$hour%02d"
+    exportDir(source.blocks(spark, slots), unitDir("beacon_blocks"))
+    exportDir(source.committees(spark, epochs), unitDir("beacon_committees"))
+    val validators = source.validators(spark, epochs).cache()
+    try {
+      exportDir(validators, unitDir("beacon_validators"))
+      exportDir(validators, s"$exportBase/beacon_validators_latest")
+    } finally validators.unpersist()
   }
 
-  /** Load stage (`build_load_dag.py:76-96`): JSONL exchange files → managed
-    * parquet tables partitioned by the materialized date column, then the
-    * verify gate (E9). Dynamic partition overwrite keeps replays idempotent
-    * (D5) — semantically WRITE_TRUNCATE per logical date.
-    *
-    * `onlyLastDate` tables reproduce the reference's validators semantics
-    * (`build_load_dag.py:82,88-91,127`): read ONLY the logical date's
-    * partition (input-path pruning, not a full-tree scan) and fully
-    * truncate-replace the destination — the table is always exactly the
-    * latest day's snapshot. */
+  /** Export files are JSONL, the reference's exchange format
+    * (`build_load_dag.py:81`). */
+  private def exportDir(df: DataFrame, dir: String): Unit = {
+    BeaconIO.recover(df.sparkSession, dir)
+    BeaconIO.commit(df, dir, format = "json")
+  }
+
+  /** Load stage (`build_load_dag.py:76-96`): each table reads only the
+    * logical date's export directory (input-path pruned, O(day)) and
+    * commits the warehouse partition `block_date=ds` the run owns (see
+    * [[commitUnit]]); the validators snapshot replaces its whole table.
+    * Then the verify gate (E9). A replay replaces exactly the run's own
+    * directories (D5) — semantically WRITE_TRUNCATE per logical date. */
   def load(spark: SparkSession, exportBase: String, warehouseBase: String,
-           ds: LocalDate, verify: Boolean = true,
-           onlyLastDate: Set[String] = Set("beacon_validators")): Unit = {
+           ds: LocalDate, verify: Boolean = true): Unit = {
+    val start = ds.atStartOfDay(ZoneOffset.UTC).toInstant
     for ((table, (_, tsCol)) <- BeaconSchemas.tables) {
-      val srcPath =
-        if (onlyLastDate(table)) s"$exportBase/$table/block_date=$ds"
-        else s"$exportBase/$table"
-      val df = spark.read.option("basePath", s"$exportBase/$table")
-        .schema(partitionedSchema(table))
-        .option("timestampFormat", BeaconIO.TimestampFormat)
-        // the reference loads `gs://…/{task}/*.json` (`build_load_dag.py:92`)
-        // — the glob is what keeps the A4/A5 meta sidecars out of the rows
-        .option("pathGlobFilter", "*.json")
-        .json(srcPath)
-      val writer = df.drop("block_date", "hour")
-        .transform(BeaconIO.withBlockDate(_, tsCol))
-        .write.mode("overwrite").partitionBy("block_date")
-      // static overwrite = WRITE_TRUNCATE (whole table replaced); the
-      // session default (dynamic) only replaces the partitions present
-      (if (onlyLastDate(table)) writer.option("partitionOverwriteMode", "static")
-       else writer)
-        .parquet(s"$warehouseBase/$table")
+      val rows = readExport(spark, table, s"$exportBase/$table/block_date=$ds")
+      val dest = s"$warehouseBase/$table"
+      if (table == SnapshotTable) {
+        BeaconIO.recover(spark, dest)
+        BeaconIO.commit(BeaconIO.withBlockDate(rows, tsCol), dest,
+          partitionBy = Seq("block_date"))
+      } else
+        commitUnit(rows, tsCol, s"$dest/block_date=$ds", start, Duration.ofDays(1))
       // read back with the declared schema: robust to an empty partition set
       // (an empty-but-valid logical hour must not crash the load)
-      spark.read.schema(partitionedSchema(table))
-        .parquet(s"$warehouseBase/$table").createOrReplaceTempView(table)
+      spark.read.schema(partitionedSchema(table)).parquet(dest)
+        .createOrReplaceTempView(table)
     }
     if (verify) Checks.runAll(spark, ds.toString)
   }
 
   /** Hourly load (`build_hourly_load_dag.py:92-152`): per logical hour,
-    * load each entity's hour partition (input-path pruned — never the full
-    * tree), append validators to the hourly-history table AND overwrite the
-    * `latest` table (A10/D6, `:138-152`), then run the hourly verify set
-    * (blocks_count + blocks_have_latest — `:151-152`; the committees/
-    * validators checks are commented out in the reference's hourly DAG). */
+    * read each entity's hour export (input-path pruned — never the full
+    * tree) and commit the warehouse partition `block_date=ds/hour=HH` the
+    * run owns; validators fill the hourly-history table, and the flat
+    * latest export replaces the whole `latest` table (A10/D6, `:138-152`).
+    * Then the hourly verify set (blocks_count + blocks_have_latest —
+    * `:151-152`; the committees/validators checks are commented out in the
+    * reference's hourly DAG). */
   def hourlyLoad(spark: SparkSession, exportBase: String, warehouseBase: String,
                  ds: LocalDate, hour: Int, verify: Boolean = true): Unit = {
-    val hh = f"$hour%02d"
-    def readHour(table: String): org.apache.spark.sql.DataFrame =
-      spark.read.option("basePath", s"$exportBase/$table")
-        .schema(hourlySchema(table))
-        .option("timestampFormat", BeaconIO.TimestampFormat)
-        .option("pathGlobFilter", "*.json")
-        .json(s"$exportBase/$table/block_date=$ds/hour=$hh")
-    def publish(df: org.apache.spark.sql.DataFrame, tsCol: String, dest: String): Unit =
-      df.drop("block_date", "hour")
-        .transform(BeaconIO.withBlockDateHour(_, tsCol))
-        .write.mode("overwrite").partitionBy("block_date", "hour")
-        .parquet(s"$warehouseBase/$dest")
-
-    publish(readHour("beacon_blocks"), "block_timestamp", "beacon_blocks")
-    publish(readHour("beacon_committees"), "epoch_timestamp", "beacon_committees")
-    // validators: every hour's snapshot accumulates in the history table…
-    publish(readHour("beacon_validators"), "timestamp", "beacon_validators_hourly")
-    // …and the flat latest export overwrites the latest table (WRITE_TRUNCATE)
-    val (vSchema, _) = BeaconSchemas.tables("beacon_validators")
-    spark.read.schema(vSchema)
-      .option("timestampFormat", BeaconIO.TimestampFormat)
-      .option("pathGlobFilter", "*.json")
-      .json(s"$exportBase/beacon_validators_latest")
-      .write.mode("overwrite").parquet(s"$warehouseBase/beacon_validators_latest")
+    val unit = f"block_date=$ds/hour=$hour%02d"
+    val start = ds.atTime(hour, 0).toInstant(ZoneOffset.UTC)
+    for ((table, dest) <- Seq("beacon_blocks" -> "beacon_blocks",
+        "beacon_committees" -> "beacon_committees",
+        "beacon_validators" -> "beacon_validators_hourly")) {
+      val (_, tsCol) = BeaconSchemas.tables(table)
+      commitUnit(readExport(spark, table, s"$exportBase/$table/$unit"), tsCol,
+        s"$warehouseBase/$dest/$unit", start, Duration.ofHours(1))
+    }
+    val latest = s"$warehouseBase/beacon_validators_latest"
+    BeaconIO.recover(spark, latest)
+    BeaconIO.commit(
+      readExport(spark, "beacon_validators", s"$exportBase/beacon_validators_latest"), latest)
 
     if (verify) {
       spark.read.schema(hourlySchema("beacon_blocks"))
@@ -174,7 +164,34 @@ object BeaconPipeline {
     }
   }
 
-  /** Declared schema + the Hive partition columns the export layout adds. */
+  /** One export directory, read with the table's declared schema. The
+    * reference loads only the `.json` objects of a task's directory
+    * (`build_load_dag.py:92`) — the glob is what keeps the A4/A5 meta
+    * sidecars out of the rows. */
+  private def readExport(spark: SparkSession, table: String, dir: String): DataFrame =
+    spark.read.schema(BeaconSchemas.tables(table)._1)
+      .option("timestampFormat", BeaconIO.TimestampFormat)
+      .option("pathGlobFilter", "*.json")
+      .json(dir)
+
+  /** Commit the warehouse partition `dest` of the unit `[start, start +
+    * len)` from that unit's export. The export also holds the epoch that
+    * straddles into the unit from the previous one — `epochRangeForSlots`
+    * covers every epoch whose start slot lies in a unit, so the previous
+    * unit's export holds it too — and those rows drop here. Any other row
+    * (a NULL timestamp, or one outside both units) fails the load before
+    * the swap, leaving the live partition as it was. */
+  private def commitUnit(rows: DataFrame, tsCol: String, dest: String,
+                         start: Instant, len: Duration): Unit = {
+    val ts = col(tsCol)
+    def within(from: Instant, to: Instant) =
+      coalesce(ts >= lit(from) && ts < lit(to), lit(false))
+    BeaconIO.recover(rows.sparkSession, dest)
+    BeaconIO.commit(rows.filter(!within(start.minus(len), start)), dest,
+      reject = Some(!within(start, start.plus(len))))
+  }
+
+  /** Declared schema + the Hive partition columns the warehouse layout adds. */
   private def partitionedSchema(table: String) = {
     val (base, _) = BeaconSchemas.tables(table)
     base.add("block_date", org.apache.spark.sql.types.StringType, nullable = true)

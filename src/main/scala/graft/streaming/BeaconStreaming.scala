@@ -891,25 +891,37 @@ object BeaconStreaming {
         col("amount"))
   }
 
-  /** D6 — dual sink: every micro-batch appends its rows to the hourly
-    * history layout and overwrites the `latest` snapshot — `foreachBatch`
-    * is the streaming form of the reference's validators dual write
-    * (`build_hourly_export_dag.py:143-149`). History is appended, not
-    * replaced per hour as [[BeaconIO.writeSnapshotWithLatest]] does for an
-    * hourly export replay: a micro-batch landing in an hour that already
-    * holds rows adds to it. */
+  /** D6 — dual sink: each micro-batch commits its rows as the history
+    * directory `batch=<batchId>` (in the hourly `block_date=…/hour=HH`
+    * layout inside) and replaces the `latest` snapshot — `foreachBatch` is
+    * the streaming form of the reference's validators dual write
+    * (`build_hourly_export_dag.py:143-149`). A micro-batch landing in an
+    * hour that already holds rows adds to it; a batch replayed after a
+    * crash (before its offset commit) replaces its own directory, so the
+    * history never holds it twice. */
   def dualSink(df: DataFrame, tsCol: String, historyPath: String,
                latestPath: String, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cached = batch.cache()
-        try {
-          BeaconIO.withBlockDateHour(cached, tsCol).write.mode("append")
-            .partitionBy("block_date", "hour").parquet(historyPath)
-          cached.write.mode("overwrite").parquet(latestPath)
-        } finally cached.unpersist()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        dualSinkBatch(batch, tsCol, historyPath, latestPath, batchId)
       }
+
+  /** One micro-batch of [[dualSink]]. */
+  private[streaming] def dualSinkBatch(batch: DataFrame, tsCol: String,
+                                       historyPath: String, latestPath: String,
+                                       batchId: Long): Unit = {
+    val s = batch.sparkSession
+    val history = s"$historyPath/batch=$batchId"
+    val cached = batch.cache()
+    try {
+      BeaconIO.recover(s, history)
+      BeaconIO.commit(BeaconIO.withBlockDateHour(cached, tsCol), history,
+        partitionBy = Seq("block_date", "hour"))
+      BeaconIO.recover(s, latestPath)
+      BeaconIO.commit(cached, latestPath)
+    } finally cached.unpersist()
+  }
 
   /** One bounded invocation (the cron-fired analog): process everything
     * available now, then stop — D3's `AvailableNow`. */
@@ -937,7 +949,7 @@ object BeaconStreaming {
     *
     * Scale: the per-batch cost is one collapsed-delta join against the
     * snapshot — O(snapshot) per batch in this plain-parquet form, made
-    * crash-safe by [[commitStateTable]]'s temp-generation swap (a
+    * crash-safe by [[BeaconIO.commit]]'s generation swap (a
     * transactional table format would make it O(touched partitions) —
     * that swap lives entirely inside [[cdcApplyBatch]]). */
   def cdcApplySink(changelog: DataFrame, snapshotPath: String,
@@ -955,105 +967,6 @@ object BeaconStreaming {
   private def tableExists(s: SparkSession, path: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(path)
     hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** Sibling temp generation for the state-table swap. */
-  private val NextGenSuffix = ".next"
-
-  /** Sibling retired generation for the state-table swap (r17). */
-  private val OldGenSuffix = ".old"
-
-  /** Crash-safe replacement of a plain-parquet state table (r16, ADVICE
-    * r15; swap hardened r17, ADVICE r16): the merged generation lands
-    * FULLY DURABLE in a sibling `<path>.next` dir before the previous
-    * generation is touched, then swaps in via ATOMIC RENAMES ONLY —
-    * retire the live dir to `<path>.old` (atomic), promote `.next`
-    * (atomic), delete `.old`. The r16 sequence recursively DELETED the
-    * live dir before promoting, and a recursive delete is not atomic on
-    * posix or object stores: a crash mid-delete left a PARTIALLY-deleted
-    * live table that [[recoverStateTable]] (which healed only the
-    * fully-deleted window) could not distinguish from a complete one —
-    * the next read silently consumed a partial snapshot. Now the only
-    * non-atomic step (the `.old` delete) touches a retired copy, never
-    * the sole complete generation, and every crash window is covered:
-    *   - during the `.next` write → live generation untouched;
-    *   - after retire, before promote → [[recoverStateTable]] adopts the
-    *     complete `.next` (its `_SUCCESS` marker proves the write
-    *     finished) and drops `.old`;
-    *   - if `.next` were somehow incomplete with the live dir retired →
-    *     [[recoverStateTable]] resurrects `.old`;
-    *   - mid-`.old`-delete → live dir is already the new generation; the
-    *     stray `.old` is garbage and the next commit or recover clears
-    *     it.
-    * In every window the redelivered batch re-merges idempotently
-    * (max-struct, hll_union, first-wins union — all spec-pinned via the
-    * sliced-replay tests). The dir rename is atomic on HDFS/posix; on
-    * raw object stores (no atomic rename) use a transactional table
-    * format instead — that swap lives entirely inside this helper. */
-  private[streaming] def commitStateTable(merged: DataFrame,
-                                          path: String): Unit = {
-    val s = merged.sparkSession
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val next = new org.apache.hadoop.fs.Path(path + NextGenSuffix)
-    val old = new org.apache.hadoop.fs.Path(path + OldGenSuffix)
-    // ADVICE r17: a missing live dir with a sibling generation present
-    // means the caller skipped recoverStateTable and `merged` was derived
-    // from a missing (or empty) table — the r17 branch silently
-    // resurrected AFTER the overwrite below had already destroyed the
-    // only complete newer generation, regressing state. Fail loudly
-    // BEFORE touching anything; recoverStateTable is the heal path.
-    if (!fs.exists(hp) &&
-        (fs.exists(old) ||
-          fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS"))))
-      throw new IllegalStateException(
-        s"commitStateTable: live state table $path is missing while a " +
-          "retired or complete sibling generation exists — the caller " +
-          "skipped recoverStateTable; refusing to overwrite the only " +
-          "complete generation")
-    merged.write.mode("overwrite").parquet(next.toString)
-    // next is fully durable (write returned) — now swap, renames only
-    if (fs.exists(old))
-      fs.delete(old, true) // garbage from a crash mid-cleanup
-    if (fs.exists(hp) && !fs.rename(hp, old))
-      throw new java.io.IOException(
-        s"state-table retire failed: $hp -> $old")
-    if (!fs.rename(next, hp))
-      throw new java.io.IOException(
-        s"state-table swap failed: $next -> $hp")
-    fs.delete(old, true)
-  }
-
-  /** Heal [[commitStateTable]]'s rename windows. Called before every
-    * state-table read. If the live dir is missing: adopt a COMPLETE
-    * `.next` (its `_SUCCESS` marker is the last file the committer
-    * writes, so a partial `.next` is never adopted) and drop the retired
-    * `.old`; otherwise resurrect `.old` (the crash hit before `.next`
-    * completed — impossible under the commit's own ordering, covered
-    * anyway per ADVICE r16). If the live dir exists, a stray `.old` is
-    * garbage from a crash mid-cleanup — clear it so the next retire
-    * rename has a free target. */
-  private[streaming] def recoverStateTable(s: SparkSession,
-                                           path: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val next = new org.apache.hadoop.fs.Path(path + NextGenSuffix)
-    val old = new org.apache.hadoop.fs.Path(path + OldGenSuffix)
-    if (!fs.exists(hp)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS"))) {
-        if (!fs.rename(next, hp))
-          throw new java.io.IOException(
-            s"state-table adopt failed: $next -> $hp")
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        fs.delete(next, true) // partial next, never adoptable
-        if (!fs.rename(old, hp))
-          throw new java.io.IOException(
-            s"state-table resurrect failed: $old -> $hp")
-      }
-    } else if (fs.exists(old)) {
-      fs.delete(old, true)
-    }
   }
 
   /** Bootstrap the snapshot from a base observation log: latest row per
@@ -1079,7 +992,7 @@ object BeaconStreaming {
   private[streaming] def cdcApplyBatch(batch: DataFrame,
                                        snapshotPath: String): Unit = {
     val s = batch.sparkSession
-    recoverStateTable(s, snapshotPath)
+    BeaconIO.recover(s, snapshotPath)
     val delta = batch.select(col("user_id").cast("long").as("user_id"),
         expr("unix_micros(CAST(ts AS TIMESTAMP))").as("tsu"),
         col("event_id").cast("long").as("event_id"),
@@ -1120,13 +1033,13 @@ object BeaconStreaming {
             .otherwise(col("s.state_event_id"))).as("state_event_id"),
         (coalesce(col("s.from_changelog"), lit(false)) ||
           col("dw").isNotNull).as("from_changelog"))
-    commitStateTable(merged, snapshotPath)
+    BeaconIO.commit(merged, snapshotPath)
   }
 
   /** The CDC snapshot's read view: current keys only (tombstoned keys'
     * NULL-state shield rows drop here). */
   def cdcCurrentView(s: SparkSession, snapshotPath: String): DataFrame = {
-    recoverStateTable(s, snapshotPath)
+    BeaconIO.recover(s, snapshotPath)
     s.read.parquet(snapshotPath).filter(col("state").isNotNull)
       .select("user_id", "state", "state_value", "state_ts_us")
   }
@@ -1157,7 +1070,7 @@ object BeaconStreaming {
   private[streaming] def sketchUnionBatch(batch: DataFrame,
                                           tablePath: String): Unit = {
     val s = batch.sparkSession
-    recoverStateTable(s, tablePath)
+    BeaconIO.recover(s, tablePath)
     val b = batch.select(col("event_type").cast("string").as("event_type"),
         expr(graft.ops.EventQueries.dayIdxSql(
             "unix_micros(CAST(ts AS TIMESTAMP))")).as("day_idx"),
@@ -1178,13 +1091,13 @@ object BeaconStreaming {
         when(col("o.sk").isNull, col("b.bsk"))
           .when(col("b.bsk").isNull, col("o.sk"))
           .otherwise(expr("hll_union(o.sk, b.bsk)")).as("sk"))
-    commitStateTable(merged, tablePath)
+    BeaconIO.commit(merged, tablePath)
   }
 
   /** The sketch table's read view: per-type distinct-user estimate over
     * the union of all daily sketches — the q_sketch_union output shape. */
   def sketchUnionView(s: SparkSession, tablePath: String): DataFrame = {
-    recoverStateTable(s, tablePath)
+    BeaconIO.recover(s, tablePath)
     s.read.parquet(tablePath)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
@@ -1234,9 +1147,9 @@ object BeaconStreaming {
       }
 
   /** One micro-batch of the ingest dedup: clean `batch` against the
-    * registry at `registryPath`, write cleaned docs to `cleanedPath`
-    * (overwrite — batchId-keyed by the sink for exactly-once), register
-    * new winners. */
+    * registry at `registryPath`, commit cleaned docs as `cleanedPath`
+    * (batchId-keyed by the sink, so a replay replaces its own directory —
+    * exactly-once), register new winners. */
   private[streaming] def substrDedupBatch(batch: DataFrame,
                                           registryPath: String,
                                           cleanedPath: String,
@@ -1244,7 +1157,7 @@ object BeaconStreaming {
                                           batchId: Long = 0L): Unit = {
     val s = batch.sparkSession
     graft.functions.GraftFunctions.register(s)
-    recoverStateTable(s, registryPath)
+    BeaconIO.recover(s, registryPath)
     recordArrivalOrder(batch, registryPath, batchId)
     val toks = graft.ops.CorpusQueries.substrToks(batch, gram)
       .localCheckpoint(true) // two consumers (occ + reassembly) per batch
@@ -1278,12 +1191,13 @@ object BeaconStreaming {
     val kills = occ.join(j, Seq("gh"))
       .filter(struct(col("doc_id"), col("s")) =!= col("win"))
       .select(col("doc_id"), col("s"))
-    graft.ops.CorpusQueries.substrReassemble(toks, kills, gram)
-      .write.mode("overwrite").parquet(cleanedPath)
+    BeaconIO.recover(s, cleanedPath)
+    BeaconIO.commit(graft.ops.CorpusQueries.substrReassemble(toks, kills, gram),
+      cleanedPath)
     // register this batch's NEW winners by APPEND, not rewrite (r17,
     // VERDICT r16 #5): first-wins entries are IMMUTABLE — the registry
     // is append-only by construction — so the O(registry)-per-batch
-    // commitStateTable rewrite is unnecessary here. The append is
+    // BeaconIO.commit rewrite is unnecessary here. The append is
     // O(delta): only this batch's unseen grams land, existing files are
     // never touched, so accumulated state cannot be lost in ANY crash
     // window (strictly stronger than the generation swap, which this
@@ -1293,7 +1207,7 @@ object BeaconStreaming {
     // and the left_anti appends exactly the missing suffix — convergent
     // (the replay spec pins registry byte-stability on full
     // redelivery). Maintenance note: one small file set per batch —
-    // compact offline through the commitStateTable seam if file count
+    // compact offline through BeaconIO.commit if file count
     // ever dominates the standing read.
     j.join(standing, Seq("gh"), "left_anti")
       .select(col("gh"), col("win.doc_id").as("win_doc"),
@@ -1333,7 +1247,7 @@ object BeaconStreaming {
     if (mm.isNullAt(0)) return // empty batch: nothing to order
     val (lo, hi) = (mm.getLong(0), mm.getLong(1))
     val orderPath = registryPath + OrderSuffix
-    recoverStateTable(s, orderPath)
+    BeaconIO.recover(s, orderPath)
     val prior =
       if (tableExists(s, orderPath)) s.read.parquet(orderPath)
       else s.range(0).select(col("id").as("batch_id"),
@@ -1345,7 +1259,7 @@ object BeaconStreaming {
     val row = s.range(1).select(lit(batchId).as("batch_id"),
       lit(lo).as("min_doc"), lit(hi).as("max_doc"),
       lit(violated).as("violated"))
-    commitStateTable(
+    BeaconIO.commit(
       prior.filter(col("batch_id") =!= batchId).unionAll(row), orderPath)
   }
 
@@ -1354,7 +1268,7 @@ object BeaconStreaming {
     * differ from the batch op's (still one copy per span — but not the
     * globally-first one). */
   def substrDedupOrderView(s: SparkSession, registryPath: String): DataFrame = {
-    recoverStateTable(s, registryPath + OrderSuffix)
+    BeaconIO.recover(s, registryPath + OrderSuffix)
     s.read.parquet(registryPath + OrderSuffix)
       .select("batch_id", "min_doc", "max_doc", "violated")
   }
@@ -1374,7 +1288,7 @@ object BeaconStreaming {
     * [[graft.ops.CorpusQueries.substrDedupOf]] — the REGISTERED batch
     * operator, not a re-implementation; (2) batch-canonical registry =
     * the global (doc_id, start) min per gram, swapped via
-    * [[commitStateTable]] (append-only maintenance resumes on top of
+    * [[BeaconIO.commit]] (append-only maintenance resumes on top of
     * the swapped generation); (3) each `batch=N` output dir is
     * rewritten — atomically, per dir — with its own docs' canonical
     * rows (a semi-join against the dir's doc_ids, off one checkpointed
@@ -1393,7 +1307,7 @@ object BeaconStreaming {
     val s = docs.sparkSession
     graft.functions.GraftFunctions.register(s)
     val orderPath = registryPath + OrderSuffix
-    recoverStateTable(s, orderPath)
+    BeaconIO.recover(s, orderPath)
     if (!tableExists(s, orderPath)) return false
     val ledger = s.read.parquet(orderPath).localCheckpoint(true)
     if (ledger.filter(col("violated")).isEmpty) return false
@@ -1404,8 +1318,8 @@ object BeaconStreaming {
     val occ = graft.ops.CorpusQueries.substrOcc(
         graft.ops.CorpusQueries.substrToks(docs, gram))
       .filter(col("doc_id").isNotNull)
-    recoverStateTable(s, registryPath)
-    commitStateTable(
+    BeaconIO.recover(s, registryPath)
+    BeaconIO.commit(
       occ.groupBy("gh")
         .agg(min(struct(col("doc_id"), col("s"))).as("w"))
         .select(col("gh"), col("w.doc_id").as("win_doc"),
@@ -1419,13 +1333,13 @@ object BeaconStreaming {
         .map(_.getPath).filter(_.getName.startsWith("batch="))
       for (dir <- dirs) {
         val ids = s.read.parquet(dir.toString).select("doc_id")
-        commitStateTable(
+        BeaconIO.commit(
           cleaned.join(ids, Seq("doc_id"), "left_semi"), dir.toString)
       }
     }
     // (4): the healed state IS batch-canonical — clear the flags so the
     // monitor reads calm and repeat reconciles are no-ops
-    commitStateTable(
+    BeaconIO.commit(
       ledger.withColumn("violated", lit(false)), orderPath)
     cleaned.unpersist(blocking = true)
     true
@@ -1441,13 +1355,13 @@ object BeaconStreaming {
     * index uses, so the monitor watches exactly the cells queries probe —
     * collapses to per-cell counts (map-side combined; a million-vector
     * batch becomes ≤ #cells rows before anything touches storage) and
-    * merges into a crash-safe [[commitStateTable]] table of cumulative
+    * merges into a crash-safe [[BeaconIO.commit]] table of cumulative
     * per-cell arrival counts. Count addition is commutative/associative,
     * so any micro-batch slicing converges to the same occupancy; at-least
     * -once redelivery of a batch double-counts it — bounded staleness in
     * a MONITOR (the drift verdict, not the data path), the standard
     * trade, and exactly-once arrives by swapping the sink for a
-    * transactional format inside commitStateTable.
+    * transactional format inside BeaconIO.commit.
     *
     * The state is #cells rows — O(16) here, O(√N)-ish for a real IVF —
     * regardless of how many vectors ever arrived. */
@@ -1482,7 +1396,7 @@ object BeaconStreaming {
   private[streaming] def servingCentroids(s: SparkSession, fitDir: String,
                                           tablePath: String): Array[(Long, Array[Float])] = {
     val cb = tablePath + CodebookSuffix
-    recoverStateTable(s, cb)
+    BeaconIO.recover(s, cb)
     if (tableExists(s, cb))
       s.read.parquet(cb).collect()
         .map(r => (r.getAs[Long]("cent_id"),
@@ -1499,7 +1413,7 @@ object BeaconStreaming {
                                        batchId: Long = 0L): Unit = {
     val s = batch.sparkSession
     graft.functions.GraftFunctions.register(s)
-    recoverStateTable(s, tablePath)
+    BeaconIO.recover(s, tablePath)
     val cents = servingCentroids(s, fitDir, tablePath)
     val assigned = graft.ops.SimilarityQueries
       .cellAssignCents(batch, s, cents)
@@ -1514,7 +1428,7 @@ object BeaconStreaming {
       .select(coalesce(col("o.cell"), col("b.cell")).as("cell"),
         (coalesce(col("o.n"), lit(0L)) + coalesce(col("b.bn"), lit(0L)))
           .as("n"))
-    commitStateTable(merged, tablePath)
+    BeaconIO.commit(merged, tablePath)
     // reservoir fold (r17): keep ≤ ReservoirPerCell recent vectors per
     // cell. The per-batch pick rides the bounded topk_by heap (map-side,
     // O(k) buffers — never a window over the arrival stream); only then
@@ -1523,7 +1437,7 @@ object BeaconStreaming {
     // the (cell, vec_id) dedup keeps the newest sighting so redelivery
     // is idempotent.
     val resPath = tablePath + ReservoirSuffix
-    recoverStateTable(s, resPath)
+    BeaconIO.recover(s, resPath)
     val picked = assigned.groupBy("cell")
       .agg(expr(s"topk_by(CAST($batchId AS DOUBLE), vec_id, " +
         s"$ReservoirPerCell)").as("t"))
@@ -1543,7 +1457,7 @@ object BeaconStreaming {
       .withColumn("rn", row_number().over(wRecent))
       .filter(col("rn") <= ReservoirPerCell)
       .drop("rd", "rn")
-    commitStateTable(grownRes, resPath)
+    BeaconIO.commit(grownRes, resPath)
     assigned.unpersist(blocking = true)
   }
 
@@ -1563,14 +1477,14 @@ object BeaconStreaming {
     * (n_arrivals, n_train, tv, drifted). */
   def annDriftView(s: SparkSession, fitDir: String, tablePath: String,
                    threshold: Double = 0.25): DataFrame = {
-    recoverStateTable(s, tablePath)
+    BeaconIO.recover(s, tablePath)
     val arr = s.read.parquet(tablePath)
     // reference occupancy: after a retrain the committed BASELINE table
     // (the re-fit's own training distribution under the new codebook)
     // is the epoch's reference; before any retrain it derives from the
     // fit corpus under the serving centroids (== the frozen quantizer)
     val basePath = tablePath + BaselineSuffix
-    recoverStateTable(s, basePath)
+    BeaconIO.recover(s, basePath)
     val train =
       if (tableExists(s, basePath)) s.read.parquet(basePath)
       else graft.ops.SimilarityQueries.cellAssignCents(
@@ -1598,7 +1512,7 @@ object BeaconStreaming {
     * the action [[annDriftView]]'s verdict had no consumer for. When
     * `drifted`, the codebook is re-fit FROM THE RESERVOIR (the bounded
     * per-cell window of recent arrivals [[annDriftBatch]] maintains) and
-    * swapped in through the [[commitStateTable]] seam; when calm, this
+    * swapped in through [[BeaconIO.commit]]; when calm, this
     * is a no-op returning false (spec-pinned: the calm replay leaves
     * every table and every assignment untouched, so recall is the
     * frozen index's recall by construction).
@@ -1632,7 +1546,7 @@ object BeaconStreaming {
     if (vRow.isNullAt(vRow.fieldIndex("tv")) ||
       !vRow.getAs[Boolean]("drifted")) return false
     val resPath = tablePath + ReservoirSuffix
-    recoverStateTable(s, resPath)
+    BeaconIO.recover(s, resPath)
     if (!tableExists(s, resPath)) return false
     // ADVICE r17: the reservoir dedups per (cell, vec_id) — a vector
     // re-assigned to a DIFFERENT cell after a codebook swap persists in
@@ -1723,7 +1637,7 @@ object BeaconStreaming {
 
     // the three-commit epoch swap (see Scaladoc for the crash window)
     import s.implicits._
-    commitStateTable(
+    BeaconIO.commit(
       newCodebook.toSeq.toDF("cent_id", "centroid"),
       tablePath + CodebookSuffix)
     // same vec_id dedup for the committed baseline (ADVICE r17): the
@@ -1733,11 +1647,11 @@ object BeaconStreaming {
     val resDF = s.read.parquet(resPath)
       .withColumn("rv", row_number().over(wv)).filter(col("rv") === 1)
       .select("vec_id", "embedding")
-    commitStateTable(
+    BeaconIO.commit(
       graft.ops.SimilarityQueries.cellAssignCents(resDF, s, newCodebook)
         .groupBy("cell").agg(count(lit(1)).as("tn")),
       basePath)
-    commitStateTable(
+    BeaconIO.commit(
       s.range(0).select(col("id").as("cell"), col("id").as("n")),
       tablePath)
     true

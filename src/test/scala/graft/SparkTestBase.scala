@@ -18,6 +18,17 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Fixture writer for a date-partitioned table: one
+    * [[graft.io.BeaconIO.commit]] of `base/block_date=d` per date `d` of
+    * `tsCol` in `df`. */
+  def commitDaily(df: DataFrame, tsCol: String, base: String): Unit = {
+    val dated = graft.io.BeaconIO.withBlockDate(df, tsCol)
+    for (r <- dated.select("block_date").distinct().collect())
+      graft.io.BeaconIO.commit(
+        dated.filter(dated("block_date") === r.getString(0)).drop("block_date"),
+        s"$base/block_date=${r.getString(0)}")
+  }
 }
 
 object SparkTestBase {

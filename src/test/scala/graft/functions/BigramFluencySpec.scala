@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkTestBase
 
 /** Hardening contract of the registered `bigram_fluency` SQL function —

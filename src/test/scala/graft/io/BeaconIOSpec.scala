@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{BeaconFixtures, SparkTestBase}
@@ -41,7 +42,7 @@ class BeaconIOSpec extends SparkTestBase {
     val dir = tmpDir("daily")
     BeaconFixtures.write(s"$dir/blocks.json", BeaconFixtures.blockLines(3700)) // spans 2 days
     val df = BeaconIO.readBeaconTable(spark, "beacon_blocks", s"$dir/blocks.json")
-    BeaconIO.writeDaily(df, "block_timestamp", s"$dir/out", format = "parquet")
+    commitDaily(df, "block_timestamp", s"$dir/out")
 
     val dirs = new java.io.File(s"$dir/out").listFiles().map(_.getName).filter(_.startsWith("block_date=")).sorted
     assert(dirs.toSeq === Seq("block_date=2020-12-01", "block_date=2020-12-02"))
@@ -52,16 +53,16 @@ class BeaconIOSpec extends SparkTestBase {
     assert(plan.contains("block_date"), "partition filter must appear in the scan")
   }
 
-  test("dynamic partition overwrite keeps other dates intact (D5 idempotent replay)") {
+  test("committing one date keeps the other dates intact (D5 idempotent replay)") {
     val dir = tmpDir("dyn")
     BeaconFixtures.write(s"$dir/blocks.json", BeaconFixtures.blockLines(3700))
     val all = BeaconIO.readBeaconTable(spark, "beacon_blocks", s"$dir/blocks.json")
-    BeaconIO.writeDaily(all, "block_timestamp", s"$dir/out", format = "parquet")
+    commitDaily(all, "block_timestamp", s"$dir/out")
     val before = spark.read.parquet(s"$dir/out").count()
 
-    // replay only day 2: overwrite mode must not clobber day 1
+    // replay only day 2: its commit must not clobber day 1
     val day2 = all.filter(to_date(col("block_timestamp")) === "2020-12-02")
-    BeaconIO.writeDaily(day2, "block_timestamp", s"$dir/out", format = "parquet")
+    commitDaily(day2, "block_timestamp", s"$dir/out")
     val after = spark.read.parquet(s"$dir/out")
     assert(after.count() === before, "replaying one partition must not drop the others")
     assert(after.filter(col("block_date") === "2020-12-01").count() === 3599L)
@@ -73,17 +74,19 @@ class BeaconIOSpec extends SparkTestBase {
     BeaconFixtures.write(s"$dir/v.json",
       BeaconFixtures.validatorLines(2, 5, epochSpacingSeconds = 3600))
     val df = BeaconIO.readBeaconTable(spark, "beacon_validators", s"$dir/v.json")
-    val epoch0 = df.filter(col("epoch") === 0)
-    BeaconIO.writeSnapshotWithLatest(epoch0, "timestamp",
-      s"$dir/history", s"$dir/latest", format = "parquet")
+    // the hourly export's validators dual sink: the hour's history
+    // directory plus the whole `latest` directory
+    def snapshot(rows: DataFrame, hour: String): Unit = {
+      BeaconIO.commit(rows, s"$dir/history/block_date=2020-12-01/hour=$hour")
+      BeaconIO.commit(rows, s"$dir/latest")
+    }
+    snapshot(df.filter(col("epoch") === 0), "12")
     val hist = new java.io.File(s"$dir/history/block_date=2020-12-01").listFiles()
       .map(_.getName).filter(_.startsWith("hour=")).toSeq
     assert(hist === Seq("hour=12"))
 
     // second snapshot: history gains an hour partition, latest is replaced
-    val epoch1 = df.filter(col("epoch") === 1)
-    BeaconIO.writeSnapshotWithLatest(epoch1, "timestamp",
-      s"$dir/history", s"$dir/latest", format = "parquet")
+    snapshot(df.filter(col("epoch") === 1), "13")
     assert(spark.read.parquet(s"$dir/latest").count() === 5L)
     assert(spark.read.parquet(s"$dir/latest").agg(max("epoch")).collect()(0).getLong(0) === 1L)
     assert(spark.read.parquet(s"$dir/history").count() === 10L)
@@ -93,10 +96,140 @@ class BeaconIOSpec extends SparkTestBase {
     val dir = tmpDir("readdate")
     BeaconFixtures.write(s"$dir/blocks.json", BeaconFixtures.blockLines(3700))
     val df = BeaconIO.readBeaconTable(spark, "beacon_blocks", s"$dir/blocks.json")
-    BeaconIO.writeDaily(df, "block_timestamp", s"$dir/out", format = "parquet")
+    commitDaily(df, "block_timestamp", s"$dir/out")
     val one = BeaconIO.readDate(spark, s"$dir/out", java.time.LocalDate.parse("2020-12-01"))
     assert(one.count() === 3599L)
     val scanned = one.queryExecution.executedPlan.toString
     assert(scanned.contains("block_date"), "read must carry the partition predicate")
+  }
+
+  test("a .next or .old sibling leaves a table read unchanged: same partitions, rows") {
+    val dir = tmpDir("sibling-read")
+    BeaconFixtures.write(s"$dir/blocks.json", BeaconFixtures.blockLines(3700))
+    val df = BeaconIO.readBeaconTable(spark, "beacon_blocks", s"$dir/blocks.json")
+    commitDaily(df, "block_timestamp", s"$dir/out")
+    def snapshot() = {
+      val t = spark.read.parquet(s"$dir/out")
+      (t.select(col("block_date").cast("string")).distinct().collect()
+        .map(_.getString(0)).sorted.toSeq,
+        t.select("block_slot").collect().map(_.getLong(0)).sorted.toSeq)
+    }
+    val before = snapshot()
+    // a commit caught mid-swap: a complete next generation of one partition
+    // plus a retired copy, both beside the live directory
+    val part = s"$dir/out/block_date=2020-12-02"
+    df.limit(7).write.parquet(BeaconIO.sibling(part, "next"))
+    df.limit(3).write.parquet(BeaconIO.sibling(part, "old"))
+    assert(new java.io.File(BeaconIO.sibling(part, "next")).getName === ".block_date=2020-12-02.next")
+    assert(snapshot() === before)
+    assert(before._1 === Seq("2020-12-01", "2020-12-02"))
+    assert(before._2.length === 3700)
+  }
+
+  test("commit crash windows: a partial .next is never adopted, a complete one is") {
+    import spark.implicits._
+    val dir = tmpDir("state-swap")
+    val p = s"$dir/tbl"
+    val next = BeaconIO.sibling(p, "next")
+    val fs = new org.apache.hadoop.fs.Path(p)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def gen(v: Long) = Seq((1L, v)).toDF("k", "v")
+    def readV() = spark.read.parquet(p).collect().map(_.getLong(1)).toSeq
+
+    // normal path: commit g1 then g2 — table follows, no .next residue
+    BeaconIO.commit(gen(1), p)
+    BeaconIO.commit(gen(2), p)
+    assert(readV() === Seq(2L))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(next)))
+
+    // crash DURING the .next write (partial dir, no _SUCCESS): the live
+    // table is untouched and recovery must NOT adopt the partial dir
+    gen(99).write.parquet(next)
+    fs.delete(new org.apache.hadoop.fs.Path(next + "/_SUCCESS"), false)
+    BeaconIO.recover(spark, p)
+    assert(readV() === Seq(2L))
+
+    // crash AFTER the .next write, after the old delete, BEFORE the
+    // rename: recovery adopts the complete generation instead of letting
+    // the next batch re-init
+    fs.delete(new org.apache.hadoop.fs.Path(next), true)
+    gen(3).write.parquet(next)
+    fs.delete(new org.apache.hadoop.fs.Path(p), true)
+    BeaconIO.recover(spark, p)
+    assert(readV() === Seq(3L))
+    // and a subsequent commit over the recovered table works normally
+    BeaconIO.commit(gen(4), p)
+    assert(readV() === Seq(4L))
+  }
+
+  test("commit rename windows: .next beats .old, .old resurrects, stray .old clears") {
+    import spark.implicits._
+    val dir = tmpDir("state-swap-r17")
+    val p = s"$dir/tbl"
+    val (next, old) = (BeaconIO.sibling(p, "next"), BeaconIO.sibling(p, "old"))
+    val fs = new org.apache.hadoop.fs.Path(p)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def gen(v: Long) = Seq((1L, v)).toDF("k", "v")
+    def readV() = spark.read.parquet(p).collect().map(_.getLong(1)).toSeq
+    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+
+    // crash between RETIRE and PROMOTE with .next complete (the normal
+    // mid-swap window of the rename sequence): live dir gone, old gen in
+    // .old, new gen complete in .next — recovery adopts .next and drops
+    // the retired copy
+    BeaconIO.commit(gen(1), p)
+    gen(2).write.parquet(next)
+    assert(fs.rename(path(p), path(old)))
+    BeaconIO.recover(spark, p)
+    assert(readV() === Seq(2L))
+    assert(!fs.exists(path(old)) && !fs.exists(path(next)))
+
+    // same window but .next PARTIAL (no _SUCCESS — per the commit's own
+    // ordering this cannot happen, covered anyway): the retired
+    // generation is the sole complete copy and must resurrect
+    gen(99).write.parquet(next)
+    fs.delete(path(next + "/_SUCCESS"), false)
+    assert(fs.rename(path(p), path(old)))
+    BeaconIO.recover(spark, p)
+    assert(readV() === Seq(2L), "retired .old must resurrect, not the partial .next")
+    assert(!fs.exists(path(old)) && !fs.exists(path(next)))
+
+    // crash mid-CLEANUP (live dir already the new generation, stray
+    // .old left behind): recover clears it; a commit with the stray
+    // still present must also proceed (it needs .old free as a rename
+    // target)
+    gen(0).write.parquet(old)
+    BeaconIO.recover(spark, p)
+    assert(!fs.exists(path(old)))
+    assert(readV() === Seq(2L))
+    gen(0).write.parquet(old)
+    BeaconIO.commit(gen(3), p)
+    assert(readV() === Seq(3L))
+    assert(!fs.exists(path(old)) && !fs.exists(path(next)))
+
+    // at no point above was the table ever PARTIALLY deleted: the only
+    // recursive deletes in the swap touch .old/.next siblings, which is
+    // the whole point of the rename-only sequence
+
+    // a caller that skips recover and commits into the {live missing,
+    // .old present (or complete .next)} window must FAIL LOUDLY before
+    // touching anything — otherwise it would overwrite the complete newer
+    // .next with a merge derived from a missing live table, then promote
+    // it, regressing state
+    gen(4).write.parquet(next)
+    assert(fs.rename(path(p), path(old)))
+    val ex = intercept[IllegalStateException] {
+      BeaconIO.commit(gen(-1), p)
+    }
+    assert(ex.getMessage.contains("skipped BeaconIO.recover"))
+    // both complete generations untouched by the refused commit
+    assert(spark.read.parquet(next).collect()
+      .map(_.getLong(1)).toSeq === Seq(4L))
+    assert(spark.read.parquet(old).collect()
+      .map(_.getLong(1)).toSeq === Seq(3L))
+    // the documented heal path still resolves the window normally
+    BeaconIO.recover(spark, p)
+    assert(readV() === Seq(4L))
+    assert(!fs.exists(path(old)) && !fs.exists(path(next)))
   }
 }

@@ -117,4 +117,110 @@ class BeaconPipelineSpec extends SparkTestBase {
     assert(blocks.count() === ((3600 - 23) / 12 + 1).toLong)
     assert(new java.io.File(s"$work/export_hourly/beacon_validators_latest").exists())
   }
+
+  /** Every warehouse table's rows, as sorted strings. */
+  private def warehouseRows(wh: String): Map[String, Seq[String]] =
+    new java.io.File(wh).listFiles().filter(_.isDirectory).map(_.getName)
+      .filterNot(_.startsWith(".")).map { t =>
+        t -> spark.read.parquet(s"$wh/$t").collect().map(_.toString).toSeq.sorted
+      }.toMap
+
+  private def committeesPerEpoch(wh: String): Map[Long, Long] =
+    spark.read.parquet(s"$wh/beacon_committees").groupBy("epoch").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("3 consecutive days from genesis: checks green, sidecars kept, epochs whole") {
+    val work = tmpDir("three-days")
+    // 340 epochs: all of day 1 (slots 0..3598), all of day 2 and the
+    // start of day 3; each later day's export holds the epoch straddling
+    // its midnight
+    BeaconFixtures.writeDay(s"$work/fixtures", nSlots = 340 * 32, nValidators = 2)
+    val source = new JsonlBeaconSource(s"$work/fixtures")
+    val days = (0 until 3).map(BeaconFixtures.GenesisDay.plusDays(_))
+    for (ds <- days) // load runs every check and throws on a failed one
+      BeaconPipeline.replayDay(spark, source, ds, work)
+    for (ds <- days) {
+      assert(new java.io.File(s"$work/export/beacon_blocks/block_date=$ds/blocks_meta.txt").exists(), ds)
+      assert(new java.io.File(s"$work/export/beacon_committees/block_date=$ds/epochs_meta.txt").exists(), ds)
+    }
+    val perEpoch = committeesPerEpoch(s"$work/warehouse")
+    assert(perEpoch.keySet === (0L until 340L).toSet)
+    assert(perEpoch.values.toSet === Set(8L), "every epoch keeps all 4 slots × 2 committees")
+    assert(spark.read.parquet(s"$work/warehouse/beacon_blocks").count() === 340L * 32)
+  }
+
+  test("3 consecutive hours: hour 12 keeps all 80 committees rows") {
+    val work = tmpDir("three-hours")
+    BeaconFixtures.writeDay(s"$work/fixtures", nSlots = 928, nValidators = 2)
+    val source = new JsonlBeaconSource(s"$work/fixtures")
+    val ds = BeaconFixtures.GenesisDay
+    for (h <- 12 to 14) {
+      BeaconPipeline.hourlyExport(spark, source, ds, h, s"$work/export")
+      BeaconPipeline.hourlyLoad(spark, s"$work/export", s"$work/warehouse", ds, h)
+    }
+    // hour 12 = slots 0..297 = epochs 0..9; hour 13's export also holds
+    // epoch 9, which starts in hour 12
+    val hour12 = spark.read.json(s"$work/export/beacon_committees/block_date=$ds/hour=12")
+    assert(hour12.count() === 80L)
+    val perEpoch = committeesPerEpoch(s"$work/warehouse")
+    assert(perEpoch.keySet === (0L until 29L).toSet)
+    assert(perEpoch.values.toSet === Set(8L))
+    val perHour = spark.read.parquet(s"$work/warehouse/beacon_committees")
+      .groupBy("hour").agg(min("epoch"), max("epoch")).orderBy("hour").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(perHour === Seq((12, 0L, 9L), (13, 10L, 18L), (14, 19L, 28L)))
+  }
+
+  test("replaying an earlier unit after a later one leaves the warehouse unchanged") {
+    val work = tmpDir("replay-earlier")
+    BeaconFixtures.writeDay(s"$work/fixtures", nSlots = 3700, nValidators = 2) // spans 2 days
+    val source = new JsonlBeaconSource(s"$work/fixtures")
+    val ds = BeaconFixtures.GenesisDay
+    val (hourly, daily) = (s"$work/hourly", s"$work/daily")
+    for (h <- 12 to 14) {
+      BeaconPipeline.hourlyExport(spark, source, ds, h, s"$hourly/export")
+      BeaconPipeline.hourlyLoad(spark, s"$hourly/export", s"$hourly/warehouse", ds, h)
+    }
+    val hours = warehouseRows(s"$hourly/warehouse")
+    BeaconPipeline.hourlyLoad(spark, s"$hourly/export", s"$hourly/warehouse", ds, 12)
+    assert(warehouseRows(s"$hourly/warehouse") === hours, "hour 12's load replayed")
+    // an export replay republishes `latest` as of hour 12, as the
+    // reference's `latest` path is whatever the last run wrote
+    BeaconPipeline.hourlyExport(spark, source, ds, 12, s"$hourly/export")
+    BeaconPipeline.hourlyLoad(spark, s"$hourly/export", s"$hourly/warehouse", ds, 12)
+    val latest = "beacon_validators_latest"
+    assert(warehouseRows(s"$hourly/warehouse") - latest === hours - latest,
+      "hour 12 exported and loaded again")
+    assert(spark.read.parquet(s"$hourly/warehouse/$latest").agg(max("epoch"))
+      .collect()(0).getLong(0) === 9L)
+
+    for (d <- Seq(ds, ds.plusDays(1))) BeaconPipeline.replayDay(spark, source, d, daily)
+    val days = warehouseRows(s"$daily/warehouse")
+    BeaconPipeline.load(spark, s"$daily/export", s"$daily/warehouse", ds)
+    assert(warehouseRows(s"$daily/warehouse") === days, "day 1's load replayed")
+    BeaconPipeline.replayDay(spark, source, ds, daily)
+    assert(warehouseRows(s"$daily/warehouse") === days, "day 1 exported and loaded again")
+  }
+
+  test("a row dated outside the unit fails the load and leaves the live partition") {
+    val work = tmpDir("outside-row")
+    BeaconFixtures.writeDay(s"$work/fixtures", nSlots = 64, nValidators = 2)
+    val ds = BeaconFixtures.GenesisDay
+    BeaconPipeline.replayDay(spark, new JsonlBeaconSource(s"$work/fixtures"), ds, work)
+    val part = s"$work/warehouse/beacon_blocks/block_date=$ds"
+    val before = spark.read.parquet(part).collect().map(_.toString).toSeq.sorted
+    val planted = s"$work/export/beacon_blocks/block_date=$ds/planted.json"
+    // two days after the unit, then no timestamp at all
+    for (line <- Seq(
+        """{"block_slot":99999,"block_timestamp":"2020-12-03T00:00:11Z","skipped":true}""",
+        """{"block_slot":99999,"skipped":true}""")) {
+      BeaconFixtures.write(planted, Seq(line))
+      val ex = intercept[IllegalStateException] {
+        BeaconPipeline.load(spark, s"$work/export", s"$work/warehouse", ds, verify = false)
+      }
+      assert(ex.getMessage.contains("1 rows do not belong in"), ex.getMessage)
+      assert(spark.read.parquet(part).collect().map(_.toString).toSeq.sorted === before)
+      assert(!new java.io.File(graft.io.BeaconIO.sibling(part, "next")).exists())
+    }
+  }
 }

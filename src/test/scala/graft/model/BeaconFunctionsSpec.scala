@@ -2,7 +2,6 @@ package graft.model
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Stage decomposition probe for q_ann_ivfpq (r10). Measured: with the
   * post-explode row filter, the fan-out stage cost 0.95 s of the 1.4 s

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, SparkEntry}
+import graft.GraftSession
 
 /** VERDICT r9 #8 (stretch): q_line_dedup's residual — can the partial
   * SortAggregate before the line-key exchange be deleted by

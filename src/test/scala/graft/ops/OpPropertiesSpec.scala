@@ -312,7 +312,7 @@ class OpPropertiesSpec extends SparkTestBase {
     out.groupBy(_._1).foreach { case (src, rows) =>
       val a = alloc(src)
       // every kept doc started under the allocation (the take rule)...
-      rows.foreach { case (_, id, n, before) =>
+      rows.foreach { case (_, id, _, before) =>
         assert(before < a, s"$src doc $id: before=$before alloc=$a")
       }
       // ...so the total overshoot is bounded by the LAST doc alone
@@ -548,7 +548,10 @@ class OpPropertiesSpec extends SparkTestBase {
     assert(asg.filter(col("cell") < 0 || col("cell") >= 16).isEmpty)
     // the Lloyd round actually moves assignments off the naive seed for
     // some vectors (the recomputed means differ from the seed vectors)
-    val seedAsg = SimilarityQueries.queries("q_ann_ivf")(spark, sfDir)
+    val seedAsg = SimilarityQueries.ivfAssigned(spark, sfDir)
+      .select(col("vec_id"), col("cell").as("seed_cell"))
+    assert(!asg.join(seedAsg, "vec_id")
+      .filter(col("cell") =!= col("seed_cell")).isEmpty)
     assert(asg.select(countDistinct(col("cell"))).collect()(0).getLong(0) > 1L)
     // scaled-integer means make the whole round bit-reproducible
     val replay = SimilarityQueries.queries("q_ivf_kmeans")(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** PQ retrieval-quality harness (test scope): recall@k of ADC ranking
   * against the exact dot-product ranking, driver-computed over every
@@ -21,7 +20,6 @@ object PqRecall {
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
 
-    val sub = 16
     val books = SimilarityQueries.pqCodebooksCached(spark, sfDir)
     val cents = SimilarityQueries.kmeansCentroidsCached(spark, sfDir)
     val rows = graft.tables.Tables.embeddings(spark, sfDir)

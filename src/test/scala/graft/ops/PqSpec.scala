@@ -238,8 +238,6 @@ class PqSpec extends SparkTestBase {
   }
 
   test("residual PQ reconstructs strictly better than raw PQ") {
-    import org.apache.spark.sql.functions.{col => c}
-    val sub = 16
     val vecs = graft.tables.Tables.embeddings(spark, dir)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
     // raw PQ reconstruction error

@@ -167,7 +167,6 @@ class R17OpsSpec extends SparkTestBase {
   // --- q_colloc_lift --------------------------------------------------------
 
   test("q_colloc_lift: hand-counted bigrams, exact integer lift") {
-    import org.apache.spark.sql.SparkSession
     // corpus: "x y x y" (bigrams xy, yx, xy) + "z z" (zz) → N unigrams 6
     // n_xy = 2, n_x = 2, n_y = 2 → lift(x,y) = 2·6/(2·2) = 3.0 exactly
     val dir = tmpDir("colloc")

@@ -51,7 +51,6 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("sortedLayout range-partitions and sorts within partitions") {
-    import spark.implicits._
     val df = ScaleOps.sortedLayout(
       spark.range(1000).select((col("id") * 37 % 1000).as("k")), col("k"))
     val plan = df.queryExecution.executedPlan.toString

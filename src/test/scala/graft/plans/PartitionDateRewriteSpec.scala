@@ -7,13 +7,12 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.io.BeaconIO
 import graft.model.BeaconSchemas
 
 class PartitionDateRewriteSpec extends SparkTestBase {
 
-  /** 3 days × 2 rows written through the real daily writer (parquet so the
-    * scan is FileSourceScanExec and partition pruning is observable),
+  /** 3 days × 2 rows committed one date partition at a time (parquet so
+    * the scan is FileSourceScanExec and partition pruning is observable),
     * partitioned on `tsCol`. */
   private def written(tsCol: String): String = {
     import spark.implicits._
@@ -23,7 +22,7 @@ class PartitionDateRewriteSpec extends SparkTestBase {
     } yield (day * 10L + slot, Timestamp.valueOf(f"2020-12-0$day 0$slot:00:00"))
     val df = rows.toDF("block_slot", tsCol)
     val dir = tmpDir(s"pdr-$tsCol")
-    BeaconIO.writeDaily(df, tsCol, dir, format = "parquet")
+    commitDaily(df, tsCol, dir)
     dir
   }
 

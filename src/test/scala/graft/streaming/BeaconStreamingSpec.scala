@@ -93,6 +93,25 @@ class BeaconStreamingSpec extends SparkTestBase {
     assert(history.count() === 15L)
   }
 
+  test("dual sink: replaying one batch id leaves history at the single-run count") {
+    val dir = tmpDir("stream-dual-replay")
+    BeaconFixtures.write(s"$dir/in/v1.json",
+      BeaconFixtures.validatorLines(2, 5, epochSpacingSeconds = 3600))
+    def invoke(): Unit = BeaconStreaming.runAvailableNow(BeaconStreaming.dualSink(
+      BeaconStreaming.fileSource(spark, BeaconSchemas.beaconValidators, s"$dir/in"),
+      "timestamp", s"$dir/history", s"$dir/latest", s"$dir/chk"))
+      .awaitTermination(120000)
+    invoke()
+    val once = spark.read.parquet(s"$dir/history").count()
+    assert(once === 10L)
+    // a crash after the sink ran but before the offset commit: the restarted
+    // query runs batch 0 again, under the same batch id
+    for (f <- Seq("0", ".0.crc")) new java.io.File(s"$dir/chk/commits/$f").delete()
+    invoke()
+    assert(spark.read.parquet(s"$dir/history").count() === once)
+    assert(spark.read.parquet(s"$dir/latest").count() === 10L)
+  }
+
   test("session windows group by inactivity gap (D8)") {
     val dir = tmpDir("stream-sess")
     // two bursts of blocks separated by a >10 min gap: slots 0..9 then 60..69
@@ -497,7 +516,6 @@ class BeaconStreamingSpec extends SparkTestBase {
   }
 
   test("streaming line dedup: gates stateless, first arrival wins across batches") {
-    import spark.implicits._
     val dir = tmpDir("stream-linededup")
     val keepA = "alpha beta gamma delta epsilon."
     val keepB = "one two three four five six!"
@@ -534,7 +552,6 @@ class BeaconStreamingSpec extends SparkTestBase {
   }
 
   test("streaming line dedup: a line re-appearing past the watermark horizon is kept again") {
-    import spark.implicits._
     // the scaladoc's stated bounded-state delta, pinned: with a 2-hour
     // watermark, state for line A (seen at 00:00) is evictable once the
     // watermark passes 02:00 — so A re-arriving at 05:00, AFTER a batch
@@ -657,7 +674,6 @@ class BeaconStreamingSpec extends SparkTestBase {
   }
 
   test("streaming bm25 scoring equals the batch scorer on the same rows") {
-    import spark.implicits._
     val sfDir = "/root/testdata/sf0.001"
     val fit = graft.tables.Tables.documents(spark, sfDir)
     // stream two fit-corpus docs (frozen stats coincide with the batch
@@ -819,7 +835,6 @@ class BeaconStreamingSpec extends SparkTestBase {
   }
 
   test("streaming probe scoring is bit-identical to batch on fit-corpus rows") {
-    import spark.implicits._
     // fit corpus from the real fixture so the probe has signal to learn
     val fit = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
     val fitRows = fit.filter(col("text").isNotNull)
@@ -1476,7 +1491,7 @@ class BeaconStreamingSpec extends SparkTestBase {
     val dup = res.limit(3)
       .withColumn("cell", col("cell") + 1L)
       .withColumn("seq", lit(99L))
-    BeaconStreaming.commitStateTable(res.unionByName(dup), resPath)
+    graft.io.BeaconIO.commit(res.unionByName(dup), resPath)
     assert(BeaconStreaming.annRetrain(spark, sfDir, s"$dir/tbl"),
       "the planted drift must still trigger the retrain")
     val baselineTotal = spark.read.parquet(s"$dir/tbl.baseline")
@@ -1484,112 +1499,6 @@ class BeaconStreamingSpec extends SparkTestBase {
     assert(baselineTotal === nVecs,
       s"baseline must count each vector once: got $baselineTotal " +
         s"for $nVecs distinct vectors")
-  }
-
-  test("commitStateTable crash windows: prior generation survives a mid-write crash; a complete .next is adopted, a partial one is not") {
-    import spark.implicits._
-    val dir = tmpDir("state-swap")
-    val p = s"$dir/tbl"
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def gen(v: Long) = Seq((1L, v)).toDF("k", "v")
-    def readV() = spark.read.parquet(p).collect().map(_.getLong(1)).toSeq
-
-    // normal path: commit g1 then g2 — table follows, no .next residue
-    BeaconStreaming.commitStateTable(gen(1), p)
-    BeaconStreaming.commitStateTable(gen(2), p)
-    assert(readV() === Seq(2L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(p + ".next")))
-
-    // crash DURING the .next write (partial dir, no _SUCCESS): the live
-    // table is untouched and recovery must NOT adopt the partial dir
-    gen(99).write.parquet(p + ".next")
-    fs.delete(new org.apache.hadoop.fs.Path(p + ".next/_SUCCESS"), false)
-    BeaconStreaming.recoverStateTable(spark, p)
-    assert(readV() === Seq(2L))
-
-    // crash AFTER the .next write, after the old delete, BEFORE the
-    // rename (the window ADVICE r15 flagged): recovery adopts the
-    // complete generation instead of letting the next batch re-init
-    fs.delete(new org.apache.hadoop.fs.Path(p + ".next"), true)
-    gen(3).write.parquet(p + ".next")
-    fs.delete(new org.apache.hadoop.fs.Path(p), true)
-    BeaconStreaming.recoverStateTable(spark, p)
-    assert(readV() === Seq(3L))
-    // and a subsequent commit over the recovered table works normally
-    BeaconStreaming.commitStateTable(gen(4), p)
-    assert(readV() === Seq(4L))
-  }
-
-  test("commitStateTable r17 rename windows: retired .old resurrects, " +
-    "complete .next wins over .old, stray .old is cleared") {
-    import spark.implicits._
-    val dir = tmpDir("state-swap-r17")
-    val p = s"$dir/tbl"
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def gen(v: Long) = Seq((1L, v)).toDF("k", "v")
-    def readV() = spark.read.parquet(p).collect().map(_.getLong(1)).toSeq
-    def path(s: String) = new org.apache.hadoop.fs.Path(s)
-
-    // crash between RETIRE and PROMOTE with .next complete (the normal
-    // mid-swap window of the rename sequence): live dir gone, old gen in
-    // .old, new gen complete in .next — recovery adopts .next and drops
-    // the retired copy
-    BeaconStreaming.commitStateTable(gen(1), p)
-    gen(2).write.parquet(p + ".next")
-    assert(fs.rename(path(p), path(p + ".old")))
-    BeaconStreaming.recoverStateTable(spark, p)
-    assert(readV() === Seq(2L))
-    assert(!fs.exists(path(p + ".old")) && !fs.exists(path(p + ".next")))
-
-    // same window but .next PARTIAL (no _SUCCESS — per the commit's own
-    // ordering this cannot happen, covered anyway per ADVICE r16): the
-    // retired generation is the sole complete copy and must resurrect
-    gen(99).write.parquet(p + ".next")
-    fs.delete(path(p + ".next/_SUCCESS"), false)
-    assert(fs.rename(path(p), path(p + ".old")))
-    BeaconStreaming.recoverStateTable(spark, p)
-    assert(readV() === Seq(2L), "retired .old must resurrect, not the partial .next")
-    assert(!fs.exists(path(p + ".old")) && !fs.exists(path(p + ".next")))
-
-    // crash mid-CLEANUP (live dir already the new generation, stray
-    // .old left behind): recover clears it; a commit with the stray
-    // still present must also proceed (it needs .old free as a rename
-    // target)
-    gen(0).write.parquet(p + ".old")
-    BeaconStreaming.recoverStateTable(spark, p)
-    assert(!fs.exists(path(p + ".old")))
-    assert(readV() === Seq(2L))
-    gen(0).write.parquet(p + ".old")
-    BeaconStreaming.commitStateTable(gen(3), p)
-    assert(readV() === Seq(3L))
-    assert(!fs.exists(path(p + ".old")) && !fs.exists(path(p + ".next")))
-
-    // at no point above was the table ever PARTIALLY deleted: the only
-    // recursive deletes in the swap touch .old/.next siblings, which is
-    // the whole point of the rename-only sequence (ADVICE r16)
-
-    // ADVICE r17: a caller that skips recoverStateTable and commits into
-    // the {live missing, .old present (or complete .next)} window must
-    // FAIL LOUDLY before touching anything — the r17 branch silently
-    // overwrote the complete newer .next with a merge derived from a
-    // missing live table, then promoted it, regressing state
-    gen(4).write.parquet(p + ".next")
-    assert(fs.rename(path(p), path(p + ".old")))
-    val ex = intercept[IllegalStateException] {
-      BeaconStreaming.commitStateTable(gen(-1), p)
-    }
-    assert(ex.getMessage.contains("skipped recoverStateTable"))
-    // both complete generations untouched by the refused commit
-    assert(spark.read.parquet(p + ".next").collect()
-      .map(_.getLong(1)).toSeq === Seq(4L))
-    assert(spark.read.parquet(p + ".old").collect()
-      .map(_.getLong(1)).toSeq === Seq(3L))
-    // the documented heal path still resolves the window normally
-    BeaconStreaming.recoverStateTable(spark, p)
-    assert(readV() === Seq(4L))
-    assert(!fs.exists(path(p + ".old")) && !fs.exists(path(p + ".next")))
   }
 
   test("substrDedupSink arrival-order ledger: in-order clean, " +
@@ -1683,7 +1592,6 @@ class BeaconStreamingSpec extends SparkTestBase {
 
   test("substrDedup registry append converges after a simulated " +
     "partial-append crash (r17 O(delta) maintenance)") {
-    import spark.implicits._
     val dir = tmpDir("substr-partial-append")
     val reg = s"$dir/reg"
     val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")

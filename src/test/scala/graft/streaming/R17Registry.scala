@@ -12,7 +12,7 @@ import graft.tables.Tables
   * the per-batch wall as the registry grows. The r16 registry commit
   * rewrote O(registry) per batch via the generation swap; r17 appends
   * O(delta). For contrast the harness also times ONE full-registry
-  * rewrite through commitStateTable at the final size — the per-batch
+  * rewrite through BeaconIO.commit at the final size — the per-batch
   * price the swap path would have paid at that point.
   *
   * Run: sbt "Test/runMain graft.streaming.R17Registry". Results in
@@ -56,7 +56,7 @@ object R17Registry {
     val full = spark.read.parquet(reg)
     System.gc()
     val t0 = System.nanoTime()
-    BeaconStreaming.commitStateTable(full, s"$base/regswap")
+    graft.io.BeaconIO.commit(full, s"$base/regswap")
     println(f"one full-registry rewrite at final size: " +
       f"${(System.nanoTime() - t0) / 1e9}%.3f s")
     spark.stop()
