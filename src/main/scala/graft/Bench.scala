@@ -11,7 +11,12 @@ import org.apache.spark.sql.SparkSession
   * window landed ≥3 consecutive reps on ONE query and blew through its
   * median (q_cosine_topk recorded 6.39 s vs 0.35 s isolated, same code).
   * Interleaving spreads any contended minute across many queries' single
-  * reps, which the per-query median then discards (VERDICT r5 #1). */
+  * reps, which the per-query median then discards (VERDICT r5 #1).
+  *
+  * It is also the A/B harness: `SPARK_GRAFT_ONLY=q_a,q_b` restricts the
+  * run to the variants under comparison (add `q_scan_filter` as the floor
+  * control), every rep sees the same host drift, and the per-rep JSONL
+  * sidecar holds each timing (`tools/twin_bench.py` reads it). */
 object Bench {
   /** 1-minute load average from /proc/loadavg (-1.0 where unreadable —
     * non-Linux hosts). Recorded at start and end of the run: thrice now
@@ -26,15 +31,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val loadStart = load1m()
     val benchT0 = System.nanoTime()
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, appName = "graft-bench")
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // full materialization of every output row (InternalRow scan) —
@@ -73,7 +73,8 @@ object Bench {
         }
       }
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid)
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (an A/B set, or a local
+    // iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
   * `vector_sub(a, b)[i] = a[i] - b[i]` (FLOAT subtract, the exact op
   * `zip_with(a, b, (x, y) -> x - y)` evaluates per element).
   *
-  * Why an expression (r12, ResidualServeProbe): the residual column of
+  * Why an expression (r12, PERF.md "r12 surface growth"): the residual column of
   * the two-stage PQ index is CONSUMED many times — pqAssign references
   * it through 4 subspaces × K candidate sub-dots, and the serving
   * fan-out references the resulting codes once per query. A zip_with

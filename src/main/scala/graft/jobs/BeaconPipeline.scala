@@ -2,6 +2,7 @@ package graft.jobs
 
 import java.time.{Duration, Instant, LocalDate, ZoneOffset}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,7 +84,8 @@ object BeaconPipeline {
   /** Hourly export (`build_hourly_export_dag.py`): hour-clamped ranges
     * (A6/A7) committed under `block_date=ds/hour=HH` (A9), plus the
     * validators dual sink (A10/D6): the hour's snapshot in history and the
-    * whole `beacon_validators_latest` directory. */
+    * whole `beacon_validators_latest` directory, unless that holds a newer
+    * snapshot (see [[exportLatest]]). */
   def hourlyExport(spark: SparkSession, source: BeaconSource, ds: LocalDate, hour: Int,
                    exportBase: String): Unit = {
     val slots = BeaconFunctions.slotRangeForHour(ds, hour)
@@ -94,8 +96,27 @@ object BeaconPipeline {
     val validators = source.validators(spark, epochs).cache()
     try {
       exportDir(validators, unitDir("beacon_validators"))
-      exportDir(validators, s"$exportBase/beacon_validators_latest")
+      exportLatest(validators, s"$exportBase/beacon_validators_latest")
     } finally validators.unpersist()
+  }
+
+  /** Replace the `latest` export with `snapshot` only if no live one
+    * exists or the snapshot's max epoch is at least the live one's: a
+    * replay of an earlier hour after a later one (a backfill or a retried
+    * run) must not roll `latest` back, and an empty snapshot never
+    * replaces a non-empty one. `hourlyLoad` copies this directory, so the
+    * warehouse table follows. */
+  private def exportLatest(snapshot: DataFrame, dir: String): Unit = {
+    val spark = snapshot.sparkSession
+    BeaconIO.recover(spark, dir)
+    def maxEpoch(df: DataFrame): Option[Long] =
+      Option(df.agg(max("epoch")).head().get(0)).map(_.asInstanceOf[Long])
+    val live = new Path(dir)
+    val liveMax =
+      if (!live.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(live)) None
+      else maxEpoch(readExport(spark, "beacon_validators", dir))
+    if (liveMax.forall(l => maxEpoch(snapshot).exists(_ >= l)))
+      BeaconIO.commit(snapshot, dir, format = "json")
   }
 
   /** Export files are JSONL, the reference's exchange format

@@ -44,10 +44,9 @@ object CorpusQueries {
       .filter(col("doc_id") === col("keeper"))
       .drop("keeper")
 
-  /** q_dist_drift's pipeline over an arbitrary documents frame (factored
-    * r19 for the growth harness — the registered query binds it to the sf
-    * dir; body unchanged from the r18 diet). Buffer bounds, stated for
-    * the growth probe (VERDICT r18 #5): perB's per-bucket collect_list
+  /** q_dist_drift's pipeline over an arbitrary documents frame (the
+    * registered query binds it to the sf dir). Buffer bounds (VERDICT
+    * r18 #5): perB's per-bucket collect_list
     * holds ≤ #sources structs (one per source present in the bucket) and
     * totRow's list exactly #sources — both independent of corpus size;
     * the corpus CDF window is single-partition but bounded by #buckets
@@ -671,8 +670,8 @@ object CorpusQueries {
     // (concat_ws('\n', arr) then split-on-'\n' is the identity on lines
     // that cannot contain '\n'; group text has no outer whitespace so
     // the wrapper's trim was already a no-op) and the twin is unchanged,
-    // hash-green. Measured gain only ~3-5% (LDStage — codegen had
-    // already pipelined the churn); kept as the cleaner shape.
+    // hash-green. Measured gain only ~3-5% (PERF.md, "Retired probes" —
+    // codegen had already pipelined the churn); kept as the cleaner shape.
     "q_line_dedup" -> ((s, d) =>
       lineDedupFromLines(Tables.documents(s, d)
         .filter(col("text").isNotNull)
@@ -726,7 +725,7 @@ object CorpusQueries {
     * one joined string (the registered query's synthetic view, a
     * pre-split crawl with one line per record) skip materializing and
     * re-splitting a document-sized string per row. Honest measurement
-    * (LDStage, interleaved): only ~3-5% end-to-end — whole-stage codegen
+    * (PERF.md, "Retired probes"): only ~3-5% end-to-end — whole-stage codegen
     * already pipelined the churn inside the scan stage — kept because it
     * is not slower and the lines-level entry point is a real API. */
   private[graft] def lineDedupFromLines(lineRows: DataFrame): DataFrame = {
@@ -738,7 +737,7 @@ object CorpusQueries {
     // sort) — the pre-exchange partial would pay a full sort of the
     // exploded line stream to deduplicate only INTRA-partition repeats,
     // which at one-group-per-distinct-line cardinality is almost nothing
-    // (measured 7% end-to-end, graft.ops.LineDedupProbe; the same
+    // (measured 7% end-to-end, PERF.md "r10 q_line_dedup"; the same
     // repartition on the doc regroup is a measured wash — its
     // ObjectHashAggregate partial never sorts). Trade, stated: raw
     // exploded rows cross the exchange, so a corpus whose duplicate
@@ -796,8 +795,9 @@ object CorpusQueries {
     *      reducer — linear work at O(1) memory, measured 1.09–1.63×
     *      natural wall across windows at the 64× hub octave. BOTH
     *      auto-remedies were built and measured in ONE interleaved
-    *      window (R18SubstrHub; cross-run ambient on this host drifts
-    *      1.7×, so only within-window reads adjudicate): hybrid n_occ-
+    *      window (PERF.md, "r18 substr hot-gram adjudication"; cross-run
+    *      ambient on this host drifts 1.7×, so only within-window reads
+    *      adjudicate): hybrid n_occ-
     *      threshold routing through a salted side-path cost +49% on the
     *      natural corpus (two extra winner-aggregate passes over the
     *      exchange — min(struct) sort-aggregates, so each pass re-sorts
@@ -874,10 +874,8 @@ object CorpusQueries {
           " OR NOT array_contains(dead, p)))").as("clean_text"))
   }
 
-  /** q_split_assign's pipeline over an arbitrary documents frame —
-    * factored (r14) so the ScaleGrowth-style harness times the SAME code
-    * the registered query executes. See the registration comment for the
-    * LCG-bucket determinism contract. */
+  /** q_split_assign's pipeline over an arbitrary documents frame. See the
+    * registration comment for the LCG-bucket determinism contract. */
   private[graft] def splitAssignOf(docs: DataFrame): DataFrame =
     docs
       .select(col("source"), col("n_chars"),
@@ -891,8 +889,8 @@ object CorpusQueries {
       .groupBy("source", "split")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"))
 
-  /** q_group_sample's pipeline over an arbitrary documents frame —
-    * factored (r14) for the growth harness. Requires GraftFunctions
+  /** q_group_sample's pipeline over an arbitrary documents frame.
+    * Requires GraftFunctions
     * registered on the session. See the registration comment for the
     * exact-BIGINT rank-key contract; the physical plan keeps the
     * per-source take map-side via Spark's WindowGroupLimit (judge-audited
@@ -981,8 +979,8 @@ object CorpusQueries {
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
         expr("md5_low63(CAST(doc_id AS STRING))").as("ord"))
       .withColumn("shard", shiftright(col("ord"), shift))
-    // r14 diet (BudgetFloorProbe, VERDICT r13 #1): tokenize ONCE. The
-    // narrow (doc_id, source, n_tokens, ord, shard) projection is eagerly
+    // r14 diet (PERF.md "r14 q_budget_sample", VERDICT r13 #1): tokenize
+    // ONCE. The narrow (doc_id, source, n_tokens, ord, shard) projection is eagerly
     // materialized — at 100 TB re-tokenizing the corpus costs far more
     // than re-reading ~40 B/doc — and every statistic the take needs
     // derives from ONE bounded (#sources × shards)-row aggregate of it,
@@ -1218,7 +1216,7 @@ object CorpusQueries {
   private val BenchmarkMaxId = 50
 
   /** The decontamination pipeline behind q_decontaminate, reusable over any
-    * document relation (ScaleGrowth times it on replicated corpora).
+    * document relation.
     *
     * The gram set is ONE codegen'd per-row expression
     * ([[graft.functions.WordGramSet]]) — the composed
@@ -1229,9 +1227,8 @@ object CorpusQueries {
     * row; a short doc's null gram set instead rides to the join and
     * dies on the null key. */
   /** q_chunk's pipeline over an arbitrary documents frame (needs doc_id,
-    * text) — factored out so the ScaleGrowth harness can drive it on
-    * replicated corpora, and visible to the streaming spec which proves
-    * the stateless projection composes with a stream unchanged. */
+    * text) — visible to the streaming spec, which proves the stateless
+    * projection composes with a stream unchanged. */
   private[graft] def chunks(docs: DataFrame): DataFrame =
     docs
       .filter(col("text").isNotNull)

@@ -849,7 +849,7 @@ object DedupQueries {
     // makes float rounding strictly LOOSEN the prefilter, never drop a
     // qualifying row. Collisions concentrate on the highest-df (= last)
     // prefix positions, exactly where this bound bites — measured 328.8k
-    // raw matches → 131.6k surviving rows at sf0.1 (R18PosFilterProbe),
+    // raw matches → 131.6k surviving rows at sf0.1 (PERF.md, "r18 diet"),
     // a 2.5× cut in what the array joins carry.
     val cands = prefix.alias("a").join(prefix.alias("b"),
         col("a.sh") === col("b.sh") &&
@@ -883,10 +883,9 @@ object DedupQueries {
       .filter(col("jaccard") >= t)
   }
 
-  /** q_lsh_recall's pipeline over an arbitrary documents frame (factored
-    * r18 for the growth harness — the registered query binds it to the
-    * sf dir). Empty truth reads recall NULL, matching the twin's NULLIF
-    * (ADVICE r17). */
+  /** q_lsh_recall's pipeline over an arbitrary documents frame (the
+    * registered query binds it to the sf dir). Empty truth reads recall
+    * NULL, matching the twin's NULLIF (ADVICE r17). */
   private[graft] def lshRecallOf(s: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val sigset = ScaleOps.spread(docs)

@@ -46,9 +46,7 @@ import graft.tables.Tables
 object EventQueries {
 
   // DataFrame-input builders (private[ops]): the registered queries call
-  // them with Tables.events; EventGrowth times the SAME builders over
-  // replicated inputs, so the growth harness cannot drift from the
-  // registered shapes.
+  // them with Tables.events, the specs with hand-built frames.
   /** The fixture's `value`-seconds → interval-duration-µs spelling
     * (floored, 1 µs floor so every interval is non-empty) — ONE
     * definition shared by every batch consumer (concurrencyPeakOf,
@@ -473,16 +471,18 @@ object EventQueries {
     // only while click_id is non-negative (gap_us > 0 holds by the join
     // band). event_ids are non-negative in every fixture generation, but
     // that was asserted only in prose — a signed-id domain change must
-    // fail loudly, not silently reorder the argmin. The branch is two
-    // long compares per row, dead in the common path.
+    // fail loudly, not silently reorder the argmin. The group's
+    // min(click_id) rides in the same aggregate and the final projection
+    // raises on it, so no per-row branch sits inside the argmin.
     attributionOf(ev)
       .groupBy("user_id", "purchase_id", "amount")
-      .agg(min(expr(s"IF(click_id >= 0, CAST(gap_us AS DECIMAL(19,0)) * $P" +
-        s" + CAST(click_id AS DECIMAL(19,0))," +
-        s" CAST(raise_error('attributionLastOf: negative click_id breaks" +
-        s" the decimal argmin pack') AS DECIMAL(38,0)))")).as("b"))
+      .agg(min(expr(s"CAST(gap_us AS DECIMAL(19,0)) * $P" +
+          " + CAST(click_id AS DECIMAL(19,0))")).as("b"),
+        min(col("click_id")).as("min_click"))
       .select(col("user_id"), col("purchase_id"),
-        expr(s"CAST(b % $P AS BIGINT)").as("click_id"),
+        expr(s"IF(min_click >= 0, CAST(b % $P AS BIGINT)," +
+          " CAST(raise_error('attributionLastOf: negative click_id breaks" +
+          " the decimal argmin pack') AS BIGINT))").as("click_id"),
         expr(s"CAST(b DIV $P AS BIGINT)").as("gap_us"),
         col("amount"))
   }
@@ -635,8 +635,7 @@ object EventQueries {
     "q_ohlc_bars" -> ((s, d) => ohlcBarsOf(Tables.events(s, d)))
   )
 
-  /** q_ohlc_bars' pipeline over an arbitrary events frame (r17),
-    * factored for the growth harness. */
+  /** q_ohlc_bars' pipeline over an arbitrary events frame (r17). */
   private[graft] def ohlcBarsOf(ev: DataFrame): DataFrame =
     ev.filter(col("ts").isNotNull && col("value").isNotNull)
       .select(col("user_id"),

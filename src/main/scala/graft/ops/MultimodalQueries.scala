@@ -17,11 +17,8 @@ object MultimodalQueries {
 
   /** Per-media 64-bit average-hash as two BIGINT halves — shared by
     * q_media_phash (exact groups) and q_phash_neardup (banded pairs) so
-    * the code derivation cannot drift between the two consumers.
-    * DataFrame-input form (private[ops]): EventGrowth times the SAME
-    * builder over replicated media, so the growth harness cannot drift
-    * from the registered shape. */
-  private[ops] def phashCodesOf(media: DataFrame): DataFrame = {
+    * the code derivation cannot drift between the two consumers. */
+  private def phashCodesOf(media: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(media.sparkSession)
     // r13: the pack is ONE native codegen'd expression
     // ([[graft.functions.AHash64]] — bit-identical to the r12 composed
@@ -132,7 +129,7 @@ object MultimodalQueries {
       col("lo").as("la"), col("hi").as("ha"))
     val b = bands.select(col("bi"), col("bv"), col("media_id").as("b"),
       col("lo").as("lb"), col("hi").as("hb"))
-    // r15 diet (PhashFloorProbe): cross-band duplicate candidates are
+    // r15 diet (PERF.md "r15 q_phash_neardup"): cross-band duplicate candidates are
     // rejected by the FIRST-AGREEING-BAND predicate — a pair emits only
     // from its lowest agreeing band, decided per candidate row from the
     // carried codes (three cheap mask compares) — instead of a trailing

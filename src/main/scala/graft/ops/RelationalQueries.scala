@@ -77,7 +77,8 @@ object RelationalQueries {
     // two aggregates and two narrow projections instead of four window
     // stages and two joins — fewer stages at any scale, and locally it
     // was the window chains, not the fact passes, that owned the time
-    // (MadFloorProbe: stats−hist = 0.66 s of the 1.05 s total).
+    // (PERF.md "late-r15 additions": stats−hist = 0.66 s of the 1.05 s
+    // total).
     // The med fold binds through a one-element transform LAMBDA on
     // purpose: a plain med_q column reference inside the deviation
     // lambda gets INLINED by project collapse — the whole median fold

@@ -239,9 +239,8 @@ object RetrievalQueries {
       .select(col("doc_id"), col("score"))
 
   /** rnk-ed top-k of a (doc_id, score) stream via the bounded heap —
-    * selection and order identical to ROW_NUMBER(score DESC, doc_id).
-    * (private[ops]: RrfFloorProbe times the fusion stages separately.) */
-  private[ops] def topK(scored: DataFrame, k: Int): DataFrame = {
+    * selection and order identical to ROW_NUMBER(score DESC, doc_id). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(scored.sparkSession)
     scored.groupBy()
       .agg(expr(s"topk_by(score, doc_id, $k)").as("top"))
@@ -266,10 +265,8 @@ object RetrievalQueries {
     * `query_term_stats` pass computes tf for all of them. */
   private[ops] val MultiTerms: Seq[String] = MultiQueries.flatten.distinct
 
-  /** Per-query left-associated score over the shared term features.
-    * (private[ops]: BmMultiFloorProbe times staged variants of the same
-    * score text.) */
-  private[ops] def multiScoreSql(q: Int): String =
+  /** Per-query left-associated score over the shared term features. */
+  private def multiScoreSql(q: Int): String =
     MultiQueries(q)
       .map(t => MultiTerms.indexOf(t))
       .map(i => termScoreNamed(s"tf$i", s"df$i"))
@@ -300,7 +297,7 @@ object RetrievalQueries {
     // nq queries × 100 TB this is the plan you want: no nq-way corpus
     // replication before scoring, no window, no join.
     //
-    // SERVING composition (r13, BmMultiFloorProbe): the corpus stats ride
+    // SERVING composition (r13, PERF.md "r13 q_bm25_multi"): the corpus stats ride
     // as frozen literals from [[bm25StatsCached]] — a production
     // multi-query batch is served from a BUILT index whose n_docs/avgdl
     // and per-vocab-term df already exist; q_bm25 remains the registered
@@ -337,7 +334,7 @@ object RetrievalQueries {
     }),
 
     // The hybrid SERVING composition: both model inputs ride as frozen
-    // literals (r12, RrfFloorProbe) — the BM25 corpus stats from
+    // literals (r12, PERF.md "r12 q_hybrid_rrf") — the BM25 corpus stats from
     // [[bm25StatsCached]] (index-build state; q_bm25 is the registered
     // operator paying the build) and the query embedding + norm from
     // [[queryVecCached]] (arrives with the request in production). The

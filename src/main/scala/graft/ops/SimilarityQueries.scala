@@ -152,7 +152,7 @@ object SimilarityQueries {
     * (VERDICT r6 #5 / r7 #3): nprobe holds the PROBED CORPUS FRACTION
     * constant as the cell count grows — nprobe = clamp(ceil(cells ×
     * [[IvfProbeFraction]]), 1, cells). Rationale, measured in PERF.md's
-    * AnnRecall table: recall@10 at FIXED nprobe=2 decayed 0.42→0.20 as
+    * recall@10-vs-scale table: recall@10 at FIXED nprobe=2 decayed 0.42→0.20 as
     * cells grew 16→64 (probed fraction 2/16→2/64), because IVF recall
     * tracks the fraction of the corpus re-ranked, not the absolute probe
     * count. Holding the fraction at 1/8 keeps recall roughly flat across
@@ -218,14 +218,11 @@ object SimilarityQueries {
     headVecs(s, fitDir, 16)
 
   /** q_semdedup's group-and-expand body over an arbitrary assigned frame
-    * (vec_id, emb, nv, cell) — factored r19 for the growth harness (the
-    * registered query binds it to [[ivfAssigned]]; body unchanged from
-    * the r18 diet). Buffer bound, stated for the growth probe (VERDICT
-    * r18 #5): the per-cell collect_list holds one (vec_id, emb, nv)
-    * struct per cell member, and production SemDeDup sizes k ∝ corpus so
-    * cell occupancy stays ~10³ regardless of scale — the probe holds
-    * occupancy constant by scaling the centroid count with the corpus and
-    * measures the wall clock stays linear. */
+    * (vec_id, emb, nv, cell) — the registered query binds it to
+    * [[ivfAssigned]]. Buffer bound (VERDICT r18 #5): the per-cell
+    * collect_list holds one (vec_id, emb, nv) struct per cell member, and
+    * production SemDeDup sizes k ∝ corpus so cell occupancy stays ~10³
+    * regardless of scale. */
   private[graft] def semdedupFromAssigned(assigned: DataFrame): DataFrame =
     assigned
       .groupBy("cell")
@@ -293,7 +290,7 @@ object SimilarityQueries {
   /** ADC shortlist width for the re-rank composition (`q_ann_pq_rerank`):
     * the candidate count each query carries into the exact-dot stage.
     * 100 is the standard serving ratio (R ≫ k, Jégou et al. 2011 §V);
-    * PERF.md r10's PqRecall run measured recall@3 0.031 → 0.301 at this
+    * PERF.md "r10 new-operator numbers" measured recall@3 0.031 → 0.301 at this
     * width on the sf0.1 fixture. */
   private[ops] val RerankShortlist = 100
 
@@ -333,7 +330,7 @@ object SimilarityQueries {
   }
 
   /** Fan-out-first per-query scoring over a codes frame, shared by every
-    * ADC search (r12 — ResidualServeProbe/AnnPqShapeProbe): the
+    * ADC search (r12 — PERF.md "r12 surface growth"): the
     * pre-explode array carries ONLY the query ids behind cheap gates
     * (vec_id / cent_id predicates — non-hit queries null out inside the
     * array and die in the same projection's HOF filter, the r10
@@ -419,7 +416,7 @@ object SimilarityQueries {
       Seq.fill(dim)(Float.NaN))
     cents.foreach { case (cid, ce) => dense(cid.toInt) = ce.toSeq }
     val centsLit = typedLit(dense.toSeq)
-    // native codegen'd subtract (r12, ResidualServeProbe): a zip_with
+    // native codegen'd subtract (r12, PERF.md "r12 surface growth"): a zip_with
     // here drags every consuming projection out of whole-stage codegen,
     // and without codegen's subexpression elimination the interpreted
     // lambda re-evaluates at every one of the serving fan-out's ~20
@@ -750,7 +747,7 @@ object SimilarityQueries {
       // the in-bucket expansion is per-group work. sort_array orders
       // members by vec_id (first struct field), which IS the id_a < id_b
       // rule. The cosine formula (dot / (na·nb)) is unchanged to the op.
-      // NO ScaleOps.spread (r12 diet, EmbedNeardupProbe): the bucket
+      // NO ScaleOps.spread (PERF.md "r12 q_embed_neardup diet"): the bucket
       // exchange right below already distributes the quadratic expansion
       // work, and the pre-exchange per-row work (one 8-plane signature +
       // one norm) is trivial — the probe measured the projection at the
@@ -1071,7 +1068,7 @@ object SimilarityQueries {
       val books = pqCodebooksCached(s, d)
       val queries = headVecs(s, d, 5)
       val codes = pqAssign(Tables.embeddings(s, d).select("vec_id", "embedding"), books).drop("embedding")
-      // fan-out-first + post-Generate CASE score (r12, AnnPqShapeProbe:
+      // fan-out-first + post-Generate CASE score (r12, PERF.md "r12 surface growth":
       // 0.715 → 0.350 s min — see [[adcFanoutFirst]]); ADC table_m keyed
       // by cent_id (see adcScoreExpr)
       adcFanoutFirst(codes, queries,
@@ -1232,7 +1229,7 @@ object SimilarityQueries {
         cents.foreach { case (cid, ce) => table(cid.toInt) = dotD(qv, ce) }
         element_at(typedLit(table.toSeq), (col("cent_id") + 1).cast("int"))
       }
-      // FAN OUT FIRST, SCORE AFTER the Generate (r12, ResidualServeProbe
+      // FAN OUT FIRST, SCORE AFTER the Generate (r12, PERF.md "r12 surface growth"
       // — the lesson now shared as [[adcFanoutFirst]]): with score
       // structs inside the array build, the optimizer re-inlined the
       // ENTIRE residual code computation at every one of the 20

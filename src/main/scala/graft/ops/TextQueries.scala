@@ -368,8 +368,7 @@ object TextQueries {
   )
 
   /** q_doc_tfidf's pipeline over an arbitrary documents frame (needs
-    * doc_id, text) — factored out so the ScaleGrowth harness can drive it
-    * on replicated corpora.
+    * doc_id, text).
     *
     * Stage accounting (r7: 7.1× twin, r8: 4.8×, r9: ~2.7×): tf is a
     * PER-ROW [[graft.functions.TermCounts]] expression, and r9 deleted

@@ -184,15 +184,14 @@ class BeaconPipelineSpec extends SparkTestBase {
     val hours = warehouseRows(s"$hourly/warehouse")
     BeaconPipeline.hourlyLoad(spark, s"$hourly/export", s"$hourly/warehouse", ds, 12)
     assert(warehouseRows(s"$hourly/warehouse") === hours, "hour 12's load replayed")
-    // an export replay republishes `latest` as of hour 12, as the
-    // reference's `latest` path is whatever the last run wrote
+    // an export replay keeps `latest` at hour 14's snapshot: hour 12's is
+    // older, so it does not roll the table back
     BeaconPipeline.hourlyExport(spark, source, ds, 12, s"$hourly/export")
     BeaconPipeline.hourlyLoad(spark, s"$hourly/export", s"$hourly/warehouse", ds, 12)
-    val latest = "beacon_validators_latest"
-    assert(warehouseRows(s"$hourly/warehouse") - latest === hours - latest,
+    assert(warehouseRows(s"$hourly/warehouse") === hours,
       "hour 12 exported and loaded again")
-    assert(spark.read.parquet(s"$hourly/warehouse/$latest").agg(max("epoch"))
-      .collect()(0).getLong(0) === 9L)
+    assert(spark.read.parquet(s"$hourly/warehouse/beacon_validators_latest")
+      .agg(max("epoch")).collect()(0).getLong(0) === 28L)
 
     for (d <- Seq(ds, ds.plusDays(1))) BeaconPipeline.replayDay(spark, source, d, daily)
     val days = warehouseRows(s"$daily/warehouse")

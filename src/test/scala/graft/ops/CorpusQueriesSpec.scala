@@ -149,8 +149,7 @@ class CorpusQueriesSpec extends SparkTestBase {
     assert(bounded === reference)
     // r18: the conf-gated salt hatch is RETIRED by measurement (both
     // auto-remedies cost more than the 1.09–1.63× straggler they cure —
-    // R18SubstrHub, adjudication in the operator's scaladoc and
-    // PERF.md). The single-exchange plan asserted against the
+    // adjudication in the operator's scaladoc and PERF.md). The single-exchange plan asserted against the
     // collect_list reference above is the only plan.
   }
 

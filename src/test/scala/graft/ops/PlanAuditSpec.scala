@@ -205,8 +205,8 @@ class PlanAuditSpec extends SparkTestBase {
     // q_anomaly_mad: med/MAD come back as ONE broadcast (never a
     // sort-merge of the facts), and the medians fold row-locally over
     // the collected per-type histogram — NO WindowExec anywhere (the
-    // pre-diet form paid four cumulative-window stages; MadFloorProbe
-    // measured them at 0.66 s of the 1.05 s total)
+    // pre-diet form paid four cumulative-window stages, measured at
+    // 0.66 s of the 1.05 s total — PERF.md "late-r15 additions")
     val mad = physical("q_anomaly_mad")
     assert(mad.exists(_.isInstanceOf[BroadcastHashJoinExec]),
       "q_anomaly_mad: expected the broadcast (med, mad) lookup")

@@ -7,7 +7,10 @@ import graft.SparkTestBase
 /** Contracts of the product-quantization pair (q_pq_codes / q_ann_pq)
   * beyond the hash-green DuckDB twins: assignment optimality against an
   * independent driver-side recompute, ADC linearity, determinism, and
-  * that the learned codebooks beat a degenerate quantizer. */
+  * that the learned codebooks beat a degenerate quantizer. Two pins on
+  * the IVF side: q_ann_recall's registered row equals a recount over the
+  * two registered pipelines it grades, and q_semdedup's group-and-expand
+  * equals the within-cell self-join it replaced. */
 class PqSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
@@ -321,5 +324,52 @@ class PqSpec extends SparkTestBase {
     val oneErr = err((_, m) => books(m).head._2)
     assert(pqErr < oneErr,
       f"PQ should beat the degenerate quantizer: $pqErr%.4f vs $oneErr%.4f")
+  }
+
+  test("q_ann_recall: the registered row equals a recount over the two " +
+    "registered pipelines; bounds hold") {
+    graft.functions.GraftFunctions.register(spark)
+    val row = SimilarityQueries.queries("q_ann_recall")(spark, dir)
+      .collect().head
+    val (nt, nc, r) = (row.getAs[Long]("n_true"),
+      row.getAs[Long]("n_caught"), row.getAs[Double]("recall"))
+    // 5 queries × exact top-3 — the truth side is structurally 15
+    assert(nt === 15L)
+    assert(nc >= 0L && nc <= nt)
+    assert(r === nc.toDouble / nt.toDouble)
+    // independent recount: intersect the registered outputs directly
+    val truth = SimilarityQueries.queries("q_cosine_topk")(spark, dir)
+      .filter(col("rnk") <= 3)
+      .select("q_id", "neighbor_id")
+    val ivf = SimilarityQueries.queries("q_ann_ivf")(spark, dir)
+      .select("q_id", "neighbor_id")
+    val recount = truth.join(ivf, Seq("q_id", "neighbor_id")).count()
+    assert(nc === recount,
+      s"registered n_caught $nc must equal the pipelines' intersection " +
+        s"$recount — the recall row graded something else")
+  }
+
+  test("q_semdedup: group-and-expand equals the cell self-join") {
+    graft.functions.GraftFunctions.register(spark)
+    val got = SimilarityQueries.queries("q_semdedup")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    // the r13 self-join form, recomputed
+    val e = SimilarityQueries.ivfAssigned(spark, dir)
+    val a = e.select(col("cell"), col("vec_id").as("id_a"),
+      col("emb").as("ea"), col("nv").as("na"))
+    val b = e.select(col("cell"), col("vec_id").as("id_b"),
+      col("emb").as("eb"), col("nv").as("nb"))
+    val want = a.join(b, Seq("cell"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("cell"), col("id_b"),
+        (expr("vector_dot(ea, eb)") / (col("na") * col("nb"))).as("cos"))
+      .filter(col("cos") >= 0.25)
+      .groupBy("id_b", "cell")
+      .agg(count(lit(1)).as("n_dups"), max(col("cos")).as("max_cos"))
+      .select(col("id_b"), col("cell"), col("n_dups"), col("max_cos"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    assert(got.nonEmpty && got === want)
   }
 }

@@ -4,8 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.{SparkEntry, SparkTestBase}
 
@@ -13,7 +14,10 @@ import graft.{SparkEntry, SparkTestBase}
   * placement (in-memory union-find finish under the broadcast threshold) is
   * the one the DuckDB twin hash-verifies; each test also runs star
   * contraction to its fixed point (threshold `-1`) and requires the same
-  * labels, which chains the distributed path to the oracle. */
+  * labels, which chains the distributed path to the oracle. Two pins
+  * cover inputs the fixture lacks: edge endpoints outside the universe
+  * (restricted once, not joined per round) and a long path graph, the
+  * worst case for edge-only propagation. */
 class StarCcOracleSpec extends SparkTestBase {
 
   private val sfDir = "/root/testdata/sf0.01"
@@ -94,5 +98,43 @@ class StarCcOracleSpec extends SparkTestBase {
       }
     }
     assert(counted > 2, s"$counted jobs: the chain needs several rounds")
+  }
+
+  test("clusterLabels: edge endpoints outside the universe neither " +
+    "surface rows nor perturb labels") {
+    import spark.implicits._
+    // universe 0..9; edges chain 0-1-2, pair (5,6), PLUS junk edges whose
+    // doc_a (100) and doc_b (200) are outside the universe, and one (-1)
+    // that would relabel the chain if it were let in
+    val universe = spark.range(0, 10).select(col("id").as("doc_id"))
+    val edges = Seq((0L, 1L), (1L, 2L), (5L, 6L), (100L, 1L), (5L, 200L),
+      (-1L, 2L)).toDF("doc_a", "doc_b")
+    val (got, star) = CcPlacements.both(spark) {
+      CcPlacements.labelMap(DedupQueries.clusterLabels(universe, edges))
+    }
+    assert(got.keySet === (0L until 10L).toSet) // exactly the universe
+    assert(got(0L) == 0L && got(1L) == 0L && got(2L) == 0L)
+    assert(got(5L) == 5L && got(6L) == 5L)
+    assert((3L to 4L).forall(i => got(i) == i) &&
+      (7L to 9L).forall(i => got(i) == i))
+    assert(got === star)
+  }
+
+  test("clusterLabels: a 41-node chain collapses to min under both placements") {
+    // path graph 0–1–2–…–40: worst case for edge-only propagation (41
+    // rounds). All nodes must label 0.
+    val n = 41
+    val uSchema = StructType(Seq(StructField("doc_id", LongType)))
+    val eSchema = StructType(Seq(
+      StructField("doc_a", LongType), StructField("doc_b", LongType)))
+    val universe = mkDf(uSchema, (0 until n).map(i => Row(i.toLong)))
+    val edges = mkDf(eSchema,
+      (0 until n - 1).map(i => Row(i.toLong, (i + 1).toLong)))
+    val (got, star) = CcPlacements.both(spark) {
+      CcPlacements.labelMap(DedupQueries.clusterLabels(universe, edges))
+    }
+    assert(got.size === n)
+    assert(got.values.forall(_ == 0L))
+    assert(got === star)
   }
 }

@@ -1,33 +1,33 @@
-package graft.ops
+package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Octave-scaled testdata synthesizer (VERDICT r18 #7): the sf0.1 board is
-  * stage-floor-bound (~17 MB total — the driver's 8c/32c ratios read ≈1
-  * across the board, diagnosing the scale factor, not the queries), so the
-  * core-scaling evidence for the r18/r19 rewrites needs a bigger input.
-  * This builds an n× replica of sf0.1 under /tmp with FK-CONSISTENT key
-  * offsets (each key column shifts by copy × (max(key)+1) of its DOMAIN,
-  * so orders still join customers, lineitem still joins orders/part/
-  * supplier, embeddings still join documents), documents get per-copy
-  * word prefixes (disjoint shingle spaces — the R18Growth scheme: n× is n
-  * disjoint similarity problems, measuring VOLUME), and embeddings get a
+/** Scale-regime input: an n× replica of a test-data dir (sf0.1 for the
+  * scale runs), for measuring parallel work that the sf0.1 board (~17 MB,
+  * stage-floor bound) cannot show.
+  *
+  * Usage: `SPARK_GRAFT_SF_DIR=<sf0.1 dir> sbt "Test/runMain
+  * graft.tools.Replica [n] [outDir]"` (defaults: 8, /tmp/sf0.8). Point
+  * `graft.Bench` at the result with `SPARK_GRAFT_SF_DIR=<outDir>`. The
+  * replica is perf-only: the DuckDB oracle never sees it.
+  *
+  * Keys stay FK-consistent: each key column shifts by copy × (max(key)+1)
+  * of its domain, so orders still join customers, lineitem still joins
+  * orders/part/supplier and embeddings still join documents. Documents
+  * get per-copy word prefixes (disjoint shingle spaces, so n× is n
+  * disjoint similarity problems and measures volume), and embeddings a
   * per-copy circular rotation (distinct directions, no engineered
   * duplication). region/nation stay single-copy dimensions.
-  *
-  * Run: sbt "Test/runMain graft.ops.R19BigData 8 /tmp/sf0.8". The result
-  * is perf-only — the DuckDB oracle never sees it.
   */
-object R19BigData {
+object Replica {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 8
     val out = if (args.length > 1) args(1) else "/tmp/sf0.8"
-    val in = "/root/testdata/sf0.1"
-    val spark = graft.GraftSession.configure(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val in = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to the test-data dir to replicate"))
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors, appName = "graft-replica")
     def rd(t: String): DataFrame = spark.read.parquet(s"$in/$t.parquet")
 
     def dom(df: DataFrame, c: String): Long =
@@ -54,7 +54,7 @@ object R19BigData {
 
     def write(name: String, df: DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[bigdata] wrote $name")
+      println(s"[replica] wrote $name")
     }
 
     write("region", rd("region"))
@@ -79,7 +79,7 @@ object R19BigData {
         else d.withColumn("embedding",
           expr(s"concat(slice(embedding, ${c + 1}, ${64 - c})," +
             s" slice(embedding, 1, $c))"))))
-    println(s"[bigdata] done: $out (${n}x sf0.1)")
+    println(s"[replica] done: $out (${n}x $in)")
     spark.stop()
   }
 }

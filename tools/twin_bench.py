@@ -6,10 +6,12 @@ Every weak-list adjudication needs BOTH engines measured in ONE window:
 ambient VM-level CPU steal hits the sustained all-core Spark JVM while
 leaving (or even favoring) the short DuckDB twins, so numbers taken hours
 apart manufacture ratio disputes (5 of r13's 7 over-bar readings were
-pure window drift). This script runs `graft.AB` (interleaved Spark
-min-of-N, one JVM) and the DuckDB twins (min-of-N) back-to-back,
-records the 1-minute loadavg at each phase boundary, and emits the
-ratio table PERF.md's weak sweeps used to hand-build.
+pure window drift). This script runs `graft.Bench` restricted to the
+named queries (interleaved reps in one JVM, after Bench's untimed
+warm-up) and the DuckDB twins back-to-back, records the 1-minute loadavg
+at each phase boundary, and emits the ratio table PERF.md's weak sweeps
+used to hand-build. Both engines run Bench's 5 reps; the Spark med/min/max
+come from Bench's per-rep JSONL sidecar.
 
 FLOOR NORMALIZATION (PERF.md Methodology #6, automated in r15): the bare
 filtered scan `q_scan_filter` is ALWAYS swept alongside the requested
@@ -23,23 +25,23 @@ bottom names only members above the FLOOR-NORMALIZED threshold
 with pre-r15 sweeps.
 
 Usage:
-  python3 tools/twin_bench.py <sf_dir> <q1,q2,...> [--reps N]
+  python3 tools/twin_bench.py <sf_dir> <q1,q2,...>
       [--oracle-json PATH] [--out PATH.json] [--label NAME]
       [--weak-bar X] [--no-floor]
 
 The twin SQL comes from a Verify dump's oracle_sql.json (sf-independent
 SQL over view names; default /tmp/verify_out/oracle_sql.json — run
 `SPARK_GRAFT_ONLY=<qs> sbt "runMain graft.Verify <sf> /tmp/verify_out"`
-first if absent). Spark reps run FIRST (JVM warmup inside graft.AB's
-interleave), twins second; both phases print per-engine loads so an
-asymmetric-steal window is visible in the artifact itself.
+first if absent). Spark reps run FIRST, twins second; both phases print
+per-engine loads so an asymmetric-steal window is visible in the artifact
+itself.
 """
 import argparse
 import json
 import os
-import re
 import subprocess
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -49,41 +51,52 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 FLOOR_QUERY = "q_scan_filter"
 
+REPS = 5  # graft.Bench's reps per query
+
 
 def load1():
     return os.getloadavg()[0]
 
 
-def run_spark(sf_dir, queries, reps):
-    cmd = ["sbt", "-batch",
-           f"runMain graft.AB {sf_dir} {','.join(queries)} {reps}"]
-    p = subprocess.run(cmd, capture_output=True, text=True,
-                       cwd=os.path.dirname(os.path.dirname(
-                           os.path.abspath(__file__))))
+def run_spark(sf_dir, queries):
+    """med/min/max per query from one `graft.Bench` run over `queries`; a
+    query whose rep threw (sec -1) is left out."""
+    with tempfile.TemporaryDirectory() as tmp:
+        out_json = os.path.join(tmp, "bench.json")
+        env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(queries),
+                   SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_BENCH_OUT=out_json)
+        p = subprocess.run(["sbt", "-batch", "runMain graft.Bench"],
+                           capture_output=True, text=True, env=env,
+                           cwd=os.path.dirname(os.path.dirname(
+                               os.path.abspath(__file__))))
+        acc = {}
+        sidecar = out_json[:-len(".json")] + ".jsonl"
+        if os.path.exists(sidecar):
+            with open(sidecar) as f:
+                for line in f:
+                    rep = json.loads(line)
+                    acc.setdefault(rep["q"], []).append(rep["sec"])
     out = {}
-    pat = re.compile(
-        r"AB (\S+)\s+med=([\d.]+) min=([\d.]+) max=([\d.]+)")
-    for line in p.stdout.splitlines():
-        m = pat.search(line)
-        if m:
-            out[m.group(1)] = {"med": float(m.group(2)),
-                               "min": float(m.group(3)),
-                               "max": float(m.group(4))}
+    for q, vs in acc.items():
+        if min(vs) < 0:
+            continue
+        vs = sorted(vs)
+        out[q] = {"med": vs[len(vs) // 2], "min": vs[0], "max": vs[-1]}
     if not out:
         sys.stderr.write(p.stdout[-3000:] + p.stderr[-3000:])
-        raise SystemExit("graft.AB produced no AB lines")
+        raise SystemExit("graft.Bench timed no query")
     return out
 
 
-def run_twins(sf_dir, queries, oracle, reps):
+def run_twins(sf_dir, queries, oracle):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     out = {}
-    # interleave twins the same way graft.AB interleaves Spark queries
+    # interleave twins the same way graft.Bench interleaves Spark queries
     acc = {q: [] for q in queries}
-    for _ in range(reps):
+    for _ in range(REPS):
         for q in queries:
             t0 = time.perf_counter()
             con.execute(oracle[q]).fetchall()
@@ -110,7 +123,6 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
     ap.add_argument("queries")
-    ap.add_argument("--reps", type=int, default=7)
     ap.add_argument("--oracle-json",
                     default="/tmp/verify_out/oracle_sql.json")
     ap.add_argument("--out", default=None)
@@ -133,23 +145,23 @@ def main():
                          "(or rerun Verify without SPARK_GRAFT_ONLY to get "
                          "the full oracle json)")
 
-    rec = {"label": args.label, "sf_dir": args.sf_dir, "reps": args.reps,
+    rec = {"label": args.label, "sf_dir": args.sf_dir, "reps": REPS,
            "floor_query": FLOOR_QUERY if use_floor else None,
            "wall_start": time.strftime("%Y-%m-%dT%H:%M:%S"),
            "load_pre_spark": load1()}
-    spark = run_spark(args.sf_dir, queries, args.reps)
+    spark = run_spark(args.sf_dir, queries)
     rec["load_post_spark"] = load1()
-    twins = run_twins(args.sf_dir, queries, oracle, args.reps)
+    twins = run_twins(args.sf_dir, queries, oracle)
     rec["load_post_twin"] = load1()
     rec["wall_end"] = time.strftime("%Y-%m-%dT%H:%M:%S")
 
-    # A query missing from graft.AB's output means the Spark side THREW —
+    # A query missing from graft.Bench's sidecar means the Spark side THREW —
     # surface it loudly instead of silently dropping the row (pre-r15 a
     # Spark failure could vanish from the adjudication artifact).
     dropped = [q for q in queries if q not in spark]
     for q in dropped:
-        print(f"WARNING: {q} missing from graft.AB output — the Spark run "
-              "failed or its AB line was not emitted; row omitted",
+        print(f"WARNING: {q} missing from graft.Bench's timings — the Spark "
+              "run failed (stderr has why); row omitted",
               file=sys.stderr)
     rec["spark_missing"] = dropped
 
