@@ -1,9 +1,11 @@
 package graft.io
 
 import java.time.LocalDate
+import java.util.concurrent.{CompletionException, Executors}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -32,6 +34,13 @@ import graft.model.BeaconSchemas
   * - **Dual "latest" sink** (A10/D6): a history directory per unit plus a
   *   whole-directory `latest`, mirroring `export_path_for_tag(dir, 'latest')`
   *   (`build_hourly_export_dag.py:68-71,143-149`).
+  * - **Independent per-table jobs at once** ([[inParallel]]): the
+  *   reference's export is one task per entity with no edges between them,
+  *   and its load one chain per table fanning in to verify
+  *   (`build_load_dag.py:142-144`). The daily export, the daily load and
+  *   the streaming dual sink submit those jobs together so they share the
+  *   executors; each still commits only its own directory. Runs, and the
+  *   hourly pipeline's jobs, stay one at a time.
   */
 object BeaconIO {
 
@@ -73,11 +82,12 @@ object BeaconIO {
     * (`blocks_meta.txt`/`epochs_meta.txt`) and uploads it NEXT TO the data
     * (`/root/reference/dags/ethereum2etl_airflow/build_export_dag.py:76-102,121-123`)
     * so downstream consumers can learn the range without scanning. Written
-    * through the Hadoop FS connector — works against any scheme. */
-  def writeRangeMeta(basePath: String, date: LocalDate, name: String,
-                     range: (Long, Long)): Unit = {
+    * through the session's Hadoop configuration, as the data is, so its
+    * `spark.hadoop.*` settings (credentials, `fs.<scheme>.impl`) apply. */
+  def writeRangeMeta(spark: SparkSession, basePath: String, date: LocalDate,
+                     name: String, range: (Long, Long)): Unit = {
     val p = new Path(s"$basePath/block_date=$date/$name")
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(s"${range._1},${range._2}".getBytes("UTF-8"))
     finally out.close()
@@ -85,9 +95,10 @@ object BeaconIO {
 
   /** Read back a `"start,end"` sidecar (`get_block_range` parse —
     * `build_export_dag.py:83-88`). */
-  def readRangeMeta(basePath: String, date: LocalDate, name: String): (Long, Long) = {
+  def readRangeMeta(spark: SparkSession, basePath: String, date: LocalDate,
+                    name: String): (Long, Long) = {
     val p = new Path(s"$basePath/block_date=$date/$name")
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     val text =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
@@ -196,6 +207,30 @@ object BeaconIO {
     } else if (fs.exists(old)) {
       fs.delete(old, true)
     }
+  }
+
+  /** Run `bodies` at once and return when every one has finished. Each
+    * runs on its own pool thread under the caller's active session, job
+    * group, scheduler pool and local properties, so cancelling the group
+    * reaches its jobs and listeners attribute them to the caller. The
+    * first failure in argument order is rethrown, the others attached to
+    * it as suppressed. Callers pass independent bodies that each commit
+    * their own directory, so every [[commit]] stays crash-safe alone. */
+  private[graft] def inParallel(spark: SparkSession)(bodies: (() => Unit)*): Unit = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val pool = Executors.newFixedThreadPool(bodies.size)
+    try {
+      val failures = bodies
+        .map(body => SQLExecution.withThreadLocalCaptured(session, pool)(body()))
+        .flatMap { f =>
+          try { f.join(); None }
+          catch { case e: CompletionException => Some(e.getCause) }
+        }
+      for (first <- failures.headOption) {
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
   }
 
   // ---- catalog utilities (A15/A17–A19) ----

@@ -32,6 +32,11 @@ trait BeaconSource {
   def validatorsLatest(spark: SparkSession): DataFrame
   /** A3 — committees for an inclusive epoch range. */
   def committees(spark: SparkSession, epochRange: (Long, Long)): DataFrame
+  /** This source with `share` (0 < share <= 1) of its request-rate budget,
+    * for a fetch that runs at once with others against the same node:
+    * shares that sum to 1 keep the node's rate where one fetch at a time
+    * left it. A source without a budget returns itself. */
+  private[graft] def withRateShare(share: Double): BeaconSource = this
 }
 
 /** Fixture source: reads pre-staged JSONL (the exporter's exchange format)
@@ -66,19 +71,28 @@ object BeaconPipeline {
   private val SnapshotTable = "beacon_validators"
 
   /** Daily export (`build_export_dag.py`): resolve the date's slot/epoch
-    * ranges (A4/A5), pull each entity, and commit each as the directory
+    * ranges (A4/A5), pull the entities at once (one task each with no
+    * edges between them; the reference's `concurrency=1` runs them one at
+    * a time), and commit each as the directory
     * `export/{table}/block_date=ds` the run owns (A8, `:61-64`), then
-    * publish the ranges as sidecars next to the data (`:121-123`). */
+    * publish the ranges as sidecars next to the data (`:121-123`). Each
+    * fetch gets the source's rate budget in proportion to the ids it
+    * fetches (the snapshot is one), so a rate-limited node sees no more
+    * than from one fetch at a time and the three finish together. */
   def dailyExport(spark: SparkSession, source: BeaconSource, ds: LocalDate,
                   exportBase: String): Unit = {
     val slots = BeaconFunctions.slotRangeForDate(ds)
     val epochs = BeaconFunctions.epochRangeForSlots(slots)
     def unitDir(table: String) = s"$exportBase/$table/block_date=$ds"
-    exportDir(source.blocks(spark, slots), unitDir("beacon_blocks"))
-    exportDir(source.validatorsLatest(spark), unitDir(SnapshotTable))
-    exportDir(source.committees(spark, epochs), unitDir("beacon_committees"))
-    BeaconIO.writeRangeMeta(s"$exportBase/beacon_blocks", ds, "blocks_meta.txt", slots)
-    BeaconIO.writeRangeMeta(s"$exportBase/beacon_committees", ds, "epochs_meta.txt", epochs)
+    val (nSlots, nEpochs) = (slots._2 - slots._1 + 1, epochs._2 - epochs._1 + 1)
+    def shared(ids: Long) = source.withRateShare(ids.toDouble / (nSlots + nEpochs + 1))
+    BeaconIO.inParallel(spark)(
+      () => exportDir(shared(nSlots).blocks(spark, slots), unitDir("beacon_blocks")),
+      () => exportDir(shared(1).validatorsLatest(spark), unitDir(SnapshotTable)),
+      () => exportDir(shared(nEpochs).committees(spark, epochs), unitDir("beacon_committees")))
+    BeaconIO.writeRangeMeta(spark, s"$exportBase/beacon_blocks", ds, "blocks_meta.txt", slots)
+    BeaconIO.writeRangeMeta(spark, s"$exportBase/beacon_committees", ds, "epochs_meta.txt",
+      epochs)
   }
 
   /** Hourly export (`build_hourly_export_dag.py`): hour-clamped ranges
@@ -126,29 +140,33 @@ object BeaconPipeline {
     BeaconIO.commit(df, dir, format = "json")
   }
 
-  /** Load stage (`build_load_dag.py:76-96`): each table reads only the
-    * logical date's export directory (input-path pruned, O(day)) and
-    * commits the warehouse partition `block_date=ds` the run owns (see
+  /** Load stage (`build_load_dag.py:76-96`): the tables load at once, one
+    * chain each with no edges between them (the reference's shape, which
+    * its `concurrency=1` runs one at a time). Each reads only the logical date's
+    * export directory (input-path pruned, O(day)) and commits the
+    * warehouse partition `block_date=ds` the run owns (see
     * [[commitUnit]]); the validators snapshot replaces its whole table.
     * Then the verify gate (E9). A replay replaces exactly the run's own
     * directories (D5) — semantically WRITE_TRUNCATE per logical date. */
   def load(spark: SparkSession, exportBase: String, warehouseBase: String,
            ds: LocalDate, verify: Boolean = true): Unit = {
     val start = ds.atStartOfDay(ZoneOffset.UTC).toInstant
-    for ((table, (_, tsCol)) <- BeaconSchemas.tables) {
-      val rows = readExport(spark, table, s"$exportBase/$table/block_date=$ds")
-      val dest = s"$warehouseBase/$table"
-      if (table == SnapshotTable) {
-        BeaconIO.recover(spark, dest)
-        BeaconIO.commit(BeaconIO.withBlockDate(rows, tsCol), dest,
-          partitionBy = Seq("block_date"))
-      } else
-        commitUnit(rows, tsCol, s"$dest/block_date=$ds", start, Duration.ofDays(1))
-      // read back with the declared schema: robust to an empty partition set
-      // (an empty-but-valid logical hour must not crash the load)
-      spark.read.schema(partitionedSchema(table)).parquet(dest)
-        .createOrReplaceTempView(table)
-    }
+    BeaconIO.inParallel(spark)(BeaconSchemas.tables.toSeq.map {
+      case (table, (_, tsCol)) => () => {
+        val rows = readExport(spark, table, s"$exportBase/$table/block_date=$ds")
+        val dest = s"$warehouseBase/$table"
+        if (table == SnapshotTable) {
+          BeaconIO.recover(spark, dest)
+          BeaconIO.commit(BeaconIO.withBlockDate(rows, tsCol), dest,
+            partitionBy = Seq("block_date"))
+        } else
+          commitUnit(rows, tsCol, s"$dest/block_date=$ds", start, Duration.ofDays(1))
+        // read back with the declared schema: robust to an empty partition
+        // set (an empty-but-valid logical hour must not crash the load)
+        spark.read.schema(partitionedSchema(table)).parquet(dest)
+          .createOrReplaceTempView(table)
+      }
+    }: _*)
     if (verify) Checks.runAll(spark, ds.toString)
   }
 

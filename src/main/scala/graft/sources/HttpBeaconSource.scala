@@ -19,7 +19,10 @@ import graft.model.{BeaconFunctions, BeaconSchemas}
   *                      (E3 fallback — `build_export_dag.py:210-224`)
   * @param ratePerSecond optional per-task rate limit; like the reference's
   *                      per-worker `export_rate_limit`, the aggregate rate is
-  *                      `fetchTasks × ratePerSecond`
+  *                      `fetchTasks × ratePerSecond`. The daily export fetches
+  *                      its entities at once and splits this rate between
+  *                      them ([[BeaconSource.withRateShare]]), so the
+  *                      aggregate holds
   * @param fetchTasks    Spark partitions the slot/epoch range is split into —
   *                      the `export_max_workers` analog, except workers are
   *                      cluster-wide tasks instead of one machine's threads
@@ -68,6 +71,9 @@ final class HttpBeaconSource(cfg: BeaconApiConfig) extends BeaconSource {
   def validators(spark: SparkSession, r: (Long, Long)): DataFrame =
     readLines(spark, BeaconSchemas.beaconValidators,
       fetchRange(spark, r, BeaconApi.exportValidators))
+
+  override private[graft] def withRateShare(share: Double): BeaconSource =
+    new HttpBeaconSource(cfg.copy(ratePerSecond = cfg.ratePerSecond.map(_ * share)))
 
   /** A2 (daily form) — the full CURRENT validator set: resolve the head
     * epoch with one driver-side metadata call (the reference daily DAG's

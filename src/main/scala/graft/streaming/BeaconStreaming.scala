@@ -907,20 +907,25 @@ object BeaconStreaming {
         dualSinkBatch(batch, tsCol, historyPath, latestPath, batchId)
       }
 
-  /** One micro-batch of [[dualSink]]. */
+  /** One micro-batch of [[dualSink]]: the history and `latest` commits
+    * run at once on the cached batch. */
   private[streaming] def dualSinkBatch(batch: DataFrame, tsCol: String,
                                        historyPath: String, latestPath: String,
                                        batchId: Long): Unit = {
     val s = batch.sparkSession
     val history = s"$historyPath/batch=$batchId"
     val cached = batch.cache()
-    try {
-      BeaconIO.recover(s, history)
-      BeaconIO.commit(BeaconIO.withBlockDateHour(cached, tsCol), history,
-        partitionBy = Seq("block_date", "hour"))
-      BeaconIO.recover(s, latestPath)
-      BeaconIO.commit(cached, latestPath)
-    } finally cached.unpersist()
+    try BeaconIO.inParallel(s)(
+      () => {
+        BeaconIO.recover(s, history)
+        BeaconIO.commit(BeaconIO.withBlockDateHour(cached, tsCol), history,
+          partitionBy = Seq("block_date", "hour"))
+      },
+      () => {
+        BeaconIO.recover(s, latestPath)
+        BeaconIO.commit(cached, latestPath)
+      })
+    finally cached.unpersist()
   }
 
   /** One bounded invocation (the cron-fired analog): process everything

@@ -232,4 +232,38 @@ class BeaconIOSpec extends SparkTestBase {
     assert(readV() === Seq(4L))
     assert(!fs.exists(path(old)) && !fs.exists(path(next)))
   }
+
+  test("range sidecars go through the session's Hadoop conf (A4/A5)") {
+    val dir = tmpDir("sidecar-scheme")
+    val key = "fs.sidecartest.impl"
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(key, classOf[SidecarTestFs].getName)
+    try {
+      val base = s"sidecartest:$dir/beacon_blocks"
+      val ds = BeaconFixtures.GenesisDay
+      BeaconIO.writeRangeMeta(spark, base, ds, "blocks_meta.txt", (5L, 9L))
+      assert(new java.io.File(s"$dir/beacon_blocks/block_date=$ds/blocks_meta.txt").isFile)
+      assert(BeaconIO.readRangeMeta(spark, base, ds, "blocks_meta.txt") === ((5L, 9L)))
+    } finally conf.unset(key)
+  }
+
+  test("inParallel waits for every body, then throws the first failure in argument order") {
+    val finished = new java.util.concurrent.atomic.AtomicInteger()
+    val ex = intercept[IllegalStateException] {
+      BeaconIO.inParallel(spark)(
+        () => { Thread.sleep(300); finished.incrementAndGet(); throw new IllegalStateException("first") },
+        () => { finished.incrementAndGet(); throw new IllegalArgumentException("second") },
+        () => { Thread.sleep(300); finished.incrementAndGet(); () })
+    }
+    assert(ex.getMessage === "first")
+    assert(ex.getSuppressed.map(_.getMessage).toSeq === Seq("second"))
+    assert(finished.get === 3, "every body ran to its end before the call returned")
+  }
+}
+
+/** The local file system under a scheme of its own, known only to a Hadoop
+  * conf that maps `fs.sidecartest.impl` to this class. */
+class SidecarTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sidecartest:///")
+  override def getScheme: String = "sidecartest"
 }

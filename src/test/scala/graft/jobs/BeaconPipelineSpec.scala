@@ -1,5 +1,8 @@
 package graft.jobs
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{BeaconFixtures, SparkTestBase}
@@ -49,10 +52,10 @@ class BeaconPipelineSpec extends SparkTestBase {
     val source = new JsonlBeaconSource(s"$work/fixtures")
     val ds = BeaconFixtures.GenesisDay
     BeaconPipeline.dailyExport(spark, source, ds, s"$work/export")
-    assert(graft.io.BeaconIO.readRangeMeta(
+    assert(graft.io.BeaconIO.readRangeMeta(spark,
       s"$work/export/beacon_blocks", ds, "blocks_meta.txt")
       === graft.model.BeaconFunctions.slotRangeForDate(ds))
-    assert(graft.io.BeaconIO.readRangeMeta(
+    assert(graft.io.BeaconIO.readRangeMeta(spark,
       s"$work/export/beacon_committees", ds, "epochs_meta.txt")
       === graft.model.BeaconFunctions.epochRangeForDate(ds))
   }
@@ -221,5 +224,87 @@ class BeaconPipelineSpec extends SparkTestBase {
       assert(spark.read.parquet(part).collect().map(_.toString).toSeq.sorted === before)
       assert(!new java.io.File(graft.io.BeaconIO.sibling(part, "next")).exists())
     }
+  }
+
+  test("a failed table's load leaves its partition; the other tables still commit") {
+    val work = tmpDir("fan-out-failure")
+    BeaconFixtures.writeDay(s"$work/fixtures", nSlots = 64, nValidators = 2)
+    val ds = BeaconFixtures.GenesisDay
+    BeaconPipeline.replayDay(spark, new JsonlBeaconSource(s"$work/fixtures"), ds, work)
+    val wh = s"$work/warehouse"
+    val committees = s"$wh/beacon_committees/block_date=$ds"
+    val before = spark.read.parquet(committees).collect().map(_.toString).toSeq.sorted
+    // the other branches' live directories go, so only their commits bring them back
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    for (dir <- Seq(s"$wh/beacon_blocks/block_date=$ds", s"$wh/beacon_validators"))
+      assert(fs.delete(new org.apache.hadoop.fs.Path(dir), true))
+    BeaconFixtures.write(s"$work/export/beacon_committees/block_date=$ds/planted.json", Seq(
+      """{"epoch":99999,"epoch_timestamp":"2020-12-03T00:00:11Z","slot":1,"index":0,"committee":[1]}"""))
+    val ex = intercept[IllegalStateException] {
+      BeaconPipeline.load(spark, s"$work/export", wh, ds, verify = false)
+    }
+    assert(ex.getMessage.contains(s"1 rows do not belong in $committees"), ex.getMessage)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(spark.read.parquet(committees).collect().map(_.toString).toSeq.sorted === before)
+    assert(!new java.io.File(graft.io.BeaconIO.sibling(committees, "next")).exists())
+    assert(spark.read.parquet(s"$wh/beacon_blocks").count() === 64L)
+    assert(spark.read.parquet(s"$wh/beacon_validators").count() > 0)
+  }
+
+  test("the daily export splits the rate budget by ids across its concurrent fetches") {
+    val work = tmpDir("rate-share")
+    BeaconFixtures.writeDay(s"$work/fixtures", nSlots = 64, nValidators = 2)
+    val ds = BeaconFixtures.GenesisDay
+    val shares = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    final class Recording(inner: BeaconSource, share: Double) extends BeaconSource {
+      private def note[A](entity: String)(a: A): A = { shares.put(entity, share); a }
+      def blocks(spark: SparkSession, r: (Long, Long)) = note("blocks")(inner.blocks(spark, r))
+      def validators(spark: SparkSession, r: (Long, Long)) =
+        note("validators")(inner.validators(spark, r))
+      def validatorsLatest(spark: SparkSession) =
+        note("validatorsLatest")(inner.validatorsLatest(spark))
+      def committees(spark: SparkSession, r: (Long, Long)) =
+        note("committees")(inner.committees(spark, r))
+      override private[graft] def withRateShare(s: Double) = new Recording(inner, share * s)
+    }
+    BeaconPipeline.dailyExport(spark,
+      new Recording(new JsonlBeaconSource(s"$work/fixtures"), 1.0), ds, s"$work/export")
+    val (s0, s1) = graft.model.BeaconFunctions.slotRangeForDate(ds)
+    val (e0, e1) = graft.model.BeaconFunctions.epochRangeForDate(ds)
+    val ids = Map("blocks" -> (s1 - s0 + 1), "committees" -> (e1 - e0 + 1),
+      "validatorsLatest" -> 1L)
+    assert(shares.keySet.asScala === ids.keySet)
+    for ((entity, n) <- ids)
+      assert(math.abs(shares.get(entity) - n.toDouble / ids.values.sum) < 1e-12, entity)
+  }
+
+  test("the caller's job group and local properties reach every export and load job") {
+    val work = tmpDir("fan-out-context")
+    BeaconFixtures.writeDay(s"$work/fixtures", nSlots = 64, nValidators = 2)
+    val ds = BeaconFixtures.GenesisDay
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("graft.test.marker")))
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("fan-out-group", "export and load")
+    sc.setLocalProperty("graft.test.marker", "m1")
+    try {
+      BeaconPipeline.dailyExport(spark, new JsonlBeaconSource(s"$work/fixtures"), ds,
+        s"$work/export")
+      BeaconPipeline.load(spark, s"$work/export", s"$work/warehouse", ds, verify = false)
+      org.apache.spark.ListenerDrain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.test.marker", null)
+    }
+    val jobs = seen.toArray.toSeq
+    assert(jobs.size >= 6, jobs)
+    assert(jobs.forall(_ == (("fan-out-group", "m1"))), jobs)
   }
 }

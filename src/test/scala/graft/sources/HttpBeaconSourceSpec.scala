@@ -71,6 +71,22 @@ class HttpBeaconSourceSpec extends SparkTestBase {
     }
   }
 
+  test("a rate share scales every fetch task's rate limit") {
+    withStub(32, 3) { uri =>
+      val http = new HttpBeaconSource(
+        BeaconApiConfig(Seq(uri), ratePerSecond = Some(1000.0), fetchTasks = 1))
+      def seconds(src: graft.jobs.BeaconSource): Double = {
+        val t0 = System.nanoTime()
+        assert(src.blocks(spark, (0L, 8L)).count() === 9L)
+        (System.nanoTime() - t0) / 1e9
+      }
+      seconds(http) // warm-up: the whole share below must show as throttling
+      // one task, 9 slots: the first id takes the limiter's burst token and
+      // each later one waits 1 / (1000 × 0.005) s, so at least 8 × 0.2 s in all
+      assert(seconds(http.withRateShare(0.005)) >= 1.6)
+    }
+  }
+
   test("single-day replay end-to-end through the HTTP source (A1-A3/E8)") {
     val work = tmpDir("http-replay")
     withStub(128, 6) { uri =>
