@@ -3,7 +3,11 @@ package graft.io
 import java.time.LocalDate
 import java.util.concurrent.{CompletionException, Executors}
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{classic, Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
@@ -41,6 +45,11 @@ import graft.model.BeaconSchemas
   *   the streaming dual sink submit those jobs together so they share the
   *   executors; each still commits only its own directory. Runs, and the
   *   hourly pipeline's jobs, stay one at a time.
+  * - **Facts recorded at commit** ([[Facts]]): a warehouse commit records
+  *   what the verify checks ask of the directory (rows, timestamp range,
+  *   max key, the exact key set, the data files' names and sizes) in
+  *   `_facts.json` inside it, from an Observation on the write job itself.
+  *   The checks read those files, not the rows.
   */
 object BeaconIO {
 
@@ -150,12 +159,23 @@ object BeaconIO {
     * live directory as it was. They are counted by an Observation on the
     * write job itself, so the check costs no second scan.
     *
+    * With `facts`, the same Observation also gathers the directory's
+    * [[Facts]], and [[FactsFile]] is written into `.next` after the data
+    * and before the swap, so the facts swap in with the data and vanish
+    * with it. Its name starts with `_` and holds no `=`, so Spark's file
+    * index skips it. One crash window is left to the checks: a crash
+    * after the committer's `_SUCCESS` and before the facts write, on a
+    * directory with no live generation yet, leaves a complete `.next`
+    * without facts that [[recover]] adopts; the checks then fail loudly on
+    * that directory until its unit is loaded again.
+    *
     * Renames are atomic on HDFS and posix; on a raw object store use a
     * transactional table format, whose swap would live here alone. */
   private[graft] def commit(df: DataFrame, path: String,
                             format: String = "parquet",
                             partitionBy: Seq[String] = Nil,
-                            reject: Option[Column] = None): Unit = {
+                            reject: Option[Column] = None,
+                            facts: Option[FactSpec] = None): Unit = {
     val live = new Path(path)
     val fs = live.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val next = new Path(sibling(path, "next"))
@@ -166,15 +186,19 @@ object BeaconIO {
           "generation exists — the caller skipped BeaconIO.recover; " +
           "refusing to overwrite the only complete generation")
     val obs = Observation()
-    reject.fold(df)(r => df.observe(obs, count(when(r, 1)).as("rejected")))
+    val metrics = reject.map(r => count(when(r, 1)).as("rejected")).toSeq ++
+      facts.toSeq.flatMap(_.metrics)
+    (if (metrics.isEmpty) df else df.observe(obs, metrics.head, metrics.tail: _*))
       .write.mode(SaveMode.Overwrite).format(format).partitionBy(partitionBy: _*)
       .option("timestampFormat", TimestampWriteFormat).save(next.toString)
-    val rejected = if (reject.isEmpty) 0L else obs.get("rejected").asInstanceOf[Long]
+    val observed = if (metrics.isEmpty) Map.empty[String, Any] else obs.get
+    val rejected = if (reject.isEmpty) 0L else observed("rejected").asInstanceOf[Long]
     if (rejected > 0) {
       fs.delete(next, true)
       throw new IllegalStateException(
         s"commit: $rejected rows do not belong in $path; it is left as it was")
     }
+    for (spec <- facts) Facts.of(spec, observed, dataFiles(fs, next)).write(fs, next)
     // next is complete (the write returned) — swap by renames only
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(live) && !fs.rename(live, old))
@@ -182,6 +206,104 @@ object BeaconIO {
     if (!fs.rename(next, live))
       throw new java.io.IOException(s"commit: promote failed: $next -> $live")
     fs.delete(old, true)
+  }
+
+  // ---- facts recorded at commit (the verify checks' input) ----
+
+  /** The facts file [[commit]] writes into a directory. */
+  private[graft] val FactsFile = "_facts.json"
+
+  /** Spark's file-index rule for names it never reads as data or as
+    * partitions (`InMemoryFileIndex.shouldFilterOutPathName`): `.`-names,
+    * `_`-names without `=`, and in-flight copies. */
+  private[graft] def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
+      name.endsWith("._COPYING_")
+
+  /** The data files under `dir` that Spark's reader would read, as paths
+    * relative to `dir` with their sizes; hidden names are skipped at every
+    * level, so a stray `.next`/`.old` sibling inside is never entered. */
+  private[graft] def dataFiles(fs: FileSystem, dir: Path): Map[String, Long] = {
+    def walk(d: Path, prefix: String): Seq[(String, Long)] =
+      fs.listStatus(d).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        val rel = prefix + st.getPath.getName
+        if (st.isDirectory) walk(st.getPath, rel + "/") else Seq(rel -> st.getLen)
+      }
+    walk(dir, "").toMap
+  }
+
+  /** What [[commit]] records for the verify checks: `ts` is the
+    * partition timestamp, `key` the column whose `MAX` a check compares,
+    * and `distinctKeys` whether a check also counts its distinct values. */
+  private[graft] final case class FactSpec(ts: String, key: String, distinctKeys: Boolean) {
+    /** Observed on the write job. A row with a NULL `ts` is outside every
+      * `DATE(ts)` predicate, so it is in no fact; a NULL key is counted in
+      * `rows` only. Observations reject `DISTINCT`, so the key set comes
+      * from `collect_set`. */
+    private[io] def metrics: Seq[Column] = {
+      val t = col(ts)
+      val k = when(t.isNotNull, col(key))
+      Seq(count(t).as("facts_rows"), min(unix_micros(t)).as("facts_min_ts"),
+        max(unix_micros(t)).as("facts_max_ts"), max(k).as("facts_max_key")) ++
+        (if (distinctKeys) Seq(collect_set(k).as("facts_keys")) else Nil)
+    }
+  }
+
+  /** One committed directory's facts: the `rows` with a non-NULL
+    * timestamp, their timestamp range in epoch microseconds, the largest
+    * non-NULL key, the exact non-NULL key set as sorted disjoint closed
+    * ranges (when the [[FactSpec]] asked for it), and the data files. */
+  private[graft] final case class Facts(rows: Long, tsMicros: Option[(Long, Long)],
+                                        maxKey: Option[Long],
+                                        keyRanges: Option[Seq[(Long, Long)]],
+                                        files: Map[String, Long]) {
+    private[io] def write(fs: FileSystem, dir: Path): Unit = {
+      val m = new ObjectMapper()
+      val o = m.createObjectNode().put("rows", rows)
+      tsMicros.foreach { case (lo, hi) => o.put("min_ts", lo).put("max_ts", hi) }
+      maxKey.foreach(o.put("max_key", _))
+      keyRanges.foreach { rs =>
+        val arr = o.putArray("key_ranges")
+        rs.foreach { case (lo, hi) => arr.addArray().add(lo).add(hi) }
+      }
+      val fo = o.putObject("files")
+      files.toSeq.sorted.foreach { case (name, len) => fo.put(name, len) }
+      val out = fs.create(new Path(dir, FactsFile), true)
+      try out.write(m.writeValueAsBytes(o)) finally out.close()
+    }
+  }
+
+  private[graft] object Facts {
+    /** The union of closed ranges, as sorted disjoint closed ranges. */
+    def union(ranges: Iterable[(Long, Long)]): Seq[(Long, Long)] =
+      ranges.toSeq.sorted.foldLeft(List.empty[(Long, Long)]) {
+        case ((lo, hi) :: rest, (a, b)) if a <= hi + 1 => (lo, math.max(hi, b)) :: rest
+        case (acc, r) => r :: acc
+      }.reverse
+
+    private[io] def of(spec: FactSpec, m: Map[String, Any], files: Map[String, Long]): Facts = {
+      def opt(name: String) = Option(m(name)).map(_.asInstanceOf[Long])
+      Facts(m("facts_rows").asInstanceOf[Long],
+        opt("facts_min_ts").zip(opt("facts_max_ts")),
+        opt("facts_max_key"),
+        if (spec.distinctKeys)
+          Some(union(m("facts_keys").asInstanceOf[scala.collection.Seq[Long]].map(k => (k, k))))
+        else None,
+        files)
+    }
+
+    /** The facts [[commit]] wrote into `dir`; None if it has none. */
+    def read(fs: FileSystem, dir: Path): Option[Facts] =
+      (try Some(fs.open(new Path(dir, FactsFile)))
+       catch { case _: java.io.FileNotFoundException => None }).map { in =>
+        val o = try new ObjectMapper().readTree(in) finally in.close()
+        def long(field: String) = Option(o.get(field)).map(_.asLong)
+        Facts(o.get("rows").asLong, long("min_ts").zip(long("max_ts")), long("max_key"),
+          Option(o.get("key_ranges")).map(_.elements().asScala
+            .map(r => (r.get(0).asLong, r.get(1).asLong)).toSeq),
+          o.get("files").asInstanceOf[ObjectNode].properties().asScala
+            .map(e => e.getKey -> e.getValue.asLong).toMap)
+      }
   }
 
   /** Heal [[commit]]'s rename windows at `path`; call it before reading a

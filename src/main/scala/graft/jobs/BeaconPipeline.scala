@@ -146,7 +146,8 @@ object BeaconPipeline {
     * export directory (input-path pruned, O(day)) and commits the
     * warehouse partition `block_date=ds` the run owns (see
     * [[commitUnit]]); the validators snapshot replaces its whole table.
-    * Then the verify gate (E9). A replay replaces exactly the run's own
+    * Each commit records the facts the checks read. Then the verify gate
+    * (E9). A replay replaces exactly the run's own
     * directories (D5) — semantically WRITE_TRUNCATE per logical date. */
   def load(spark: SparkSession, exportBase: String, warehouseBase: String,
            ds: LocalDate, verify: Boolean = true): Unit = {
@@ -158,9 +159,9 @@ object BeaconPipeline {
         if (table == SnapshotTable) {
           BeaconIO.recover(spark, dest)
           BeaconIO.commit(BeaconIO.withBlockDate(rows, tsCol), dest,
-            partitionBy = Seq("block_date"))
+            partitionBy = Seq("block_date"), facts = Some(Checks.factSpec(table)))
         } else
-          commitUnit(rows, tsCol, s"$dest/block_date=$ds", start, Duration.ofDays(1))
+          commitUnit(rows, table, s"$dest/block_date=$ds", start, Duration.ofDays(1))
         // read back with the declared schema: robust to an empty partition
         // set (an empty-but-valid logical hour must not crash the load)
         spark.read.schema(partitionedSchema(table)).parquet(dest)
@@ -184,11 +185,9 @@ object BeaconPipeline {
     val start = ds.atTime(hour, 0).toInstant(ZoneOffset.UTC)
     for ((table, dest) <- Seq("beacon_blocks" -> "beacon_blocks",
         "beacon_committees" -> "beacon_committees",
-        "beacon_validators" -> "beacon_validators_hourly")) {
-      val (_, tsCol) = BeaconSchemas.tables(table)
-      commitUnit(readExport(spark, table, s"$exportBase/$table/$unit"), tsCol,
+        "beacon_validators" -> "beacon_validators_hourly"))
+      commitUnit(readExport(spark, table, s"$exportBase/$table/$unit"), table,
         s"$warehouseBase/$dest/$unit", start, Duration.ofHours(1))
-    }
     val latest = s"$warehouseBase/beacon_validators_latest"
     BeaconIO.recover(spark, latest)
     BeaconIO.commit(
@@ -213,21 +212,23 @@ object BeaconPipeline {
       .option("pathGlobFilter", "*.json")
       .json(dir)
 
-  /** Commit the warehouse partition `dest` of the unit `[start, start +
-    * len)` from that unit's export. The export also holds the epoch that
-    * straddles into the unit from the previous one — `epochRangeForSlots`
-    * covers every epoch whose start slot lies in a unit, so the previous
-    * unit's export holds it too — and those rows drop here. Any other row
-    * (a NULL timestamp, or one outside both units) fails the load before
-    * the swap, leaving the live partition as it was. */
-  private def commitUnit(rows: DataFrame, tsCol: String, dest: String,
+  /** Commit the warehouse partition `dest` of `table`'s unit `[start,
+    * start + len)` from that unit's export, with the facts its checks read.
+    * The export also holds the epoch that straddles into the unit from the
+    * previous one — `epochRangeForSlots` covers every epoch whose start
+    * slot lies in a unit, so the previous unit's export holds it too — and
+    * those rows drop here. Any other row (a NULL timestamp, or one outside
+    * both units) fails the load before the swap, leaving the live
+    * partition as it was. */
+  private def commitUnit(rows: DataFrame, table: String, dest: String,
                          start: Instant, len: Duration): Unit = {
-    val ts = col(tsCol)
+    val facts = Checks.factSpec(table)
+    val ts = col(facts.ts)
     def within(from: Instant, to: Instant) =
       coalesce(ts >= lit(from) && ts < lit(to), lit(false))
     BeaconIO.recover(rows.sparkSession, dest)
     BeaconIO.commit(rows.filter(!within(start.minus(len), start)), dest,
-      reject = Some(!within(start, start.plus(len))))
+      reject = Some(!within(start, start.plus(len))), facts = Some(facts))
   }
 
   /** Declared schema + the Hive partition columns the warehouse layout adds. */

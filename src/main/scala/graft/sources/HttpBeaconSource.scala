@@ -17,8 +17,10 @@ import graft.model.{BeaconFunctions, BeaconSchemas}
   *
   * @param providerUris  beacon-node base URIs tried in order per request
   *                      (E3 fallback — `build_export_dag.py:210-224`)
-  * @param ratePerSecond optional per-task rate limit; like the reference's
-  *                      per-worker `export_rate_limit`, the aggregate rate is
+  * @param ratePerSecond optional per-task limit on requests sent per
+  *                      second (a block takes two; a fallback attempt
+  *                      counts); like the reference's per-worker
+  *                      `export_rate_limit`, the aggregate rate is
   *                      `fetchTasks × ratePerSecond`. The daily export fetches
   *                      its entities at once and splits this rate between
   *                      them ([[BeaconSource.withRateShare]]), so the
@@ -95,14 +97,10 @@ final class HttpBeaconSource(cfg: BeaconApiConfig) extends BeaconSource {
     val local = cfg
     val n = math.max(1, math.min(cfg.fetchTasks, (r._2 - r._1 + 1).toInt))
     spark.range(r._1, r._2 + 1, 1, n).mapPartitions { ids =>
-      // client + limiter are per-task executor state: connections and
-      // tokens never serialize into the plan
+      // the client and its limiter are per-task executor state:
+      // connections and tokens never serialize into the plan
       val http = new BeaconHttp(local)
-      val limiter = local.ratePerSecond.map(new Orchestration.RateLimiter(_))
-      ids.flatMap { id =>
-        limiter.foreach(_.acquire())
-        fn(http, id)
-      }
+      ids.flatMap(id => fn(http, id))
     }(Encoders.STRING)
   }
 
@@ -118,14 +116,20 @@ final class HttpBeaconSource(cfg: BeaconApiConfig) extends BeaconSource {
 /** One-per-task HTTP client: JDK `HttpURLConnection` (keep-alive reuse,
   * zero added dependencies) with provider fallback. 404 is a VALID answer
   * (skipped slot / pre-genesis state), so only transport errors and non-404
-  * statuses trigger the next provider. */
+  * statuses trigger the next provider. The client holds its task's rate
+  * limiter and takes one permit per request sent, a fallback attempt
+  * included, so a node sees at most `ratePerSecond` requests per second
+  * from each task however many requests one id takes. */
 final class BeaconHttp(cfg: BeaconApiConfig) {
 
   val mapper = new ObjectMapper()
 
+  private val limiter = cfg.ratePerSecond.map(new Orchestration.RateLimiter(_))
+
   /** GET `base + path` → Some(parsed JSON) | None on 404. */
   def getJson(path: String): Option[JsonNode] =
     Orchestration.withFallback(cfg.providerUris) { base =>
+      limiter.foreach(_.acquire())
       val url = java.net.URI.create(base + path).toURL
       val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
       conn.setConnectTimeout(cfg.connectTimeoutMs)

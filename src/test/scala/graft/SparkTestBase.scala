@@ -21,13 +21,15 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Fixture writer for a date-partitioned table: one
     * [[graft.io.BeaconIO.commit]] of `base/block_date=d` per date `d` of
-    * `tsCol` in `df`. */
-  def commitDaily(df: DataFrame, tsCol: String, base: String): Unit = {
+    * `tsCol` in `df`, recording `facts` when given. Rows with a NULL
+    * `tsCol` belong to no date and are not written. */
+  def commitDaily(df: DataFrame, tsCol: String, base: String,
+                  facts: Option[graft.io.BeaconIO.FactSpec] = None): Unit = {
     val dated = graft.io.BeaconIO.withBlockDate(df, tsCol)
-    for (r <- dated.select("block_date").distinct().collect())
+    for (r <- dated.select("block_date").distinct().collect() if !r.isNullAt(0))
       graft.io.BeaconIO.commit(
         dated.filter(dated("block_date") === r.getString(0)).drop("block_date"),
-        s"$base/block_date=${r.getString(0)}")
+        s"$base/block_date=${r.getString(0)}", facts = facts)
   }
 }
 

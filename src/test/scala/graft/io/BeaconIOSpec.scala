@@ -126,6 +126,32 @@ class BeaconIOSpec extends SparkTestBase {
     assert(before._2.length === 3700)
   }
 
+  test("commit records the directory's facts beside its data; the reader skips them") {
+    val dir = tmpDir("facts")
+    BeaconFixtures.write(s"$dir/c.json", BeaconFixtures.committeeLines(8))
+    val committees = BeaconIO.readBeaconTable(spark, "beacon_committees", s"$dir/c.json")
+      .filter(!col("epoch").isin(3L, 4L))
+      .union(BeaconIO.readBeaconTable(spark, "beacon_committees", s"$dir/c.json").limit(1)
+        .withColumn("epoch_timestamp", lit(null).cast("timestamp")).withColumn("epoch", lit(99L)))
+    val out = s"$dir/out"
+    BeaconIO.commit(committees, out,
+      facts = Some(BeaconIO.FactSpec("epoch_timestamp", "epoch", distinctKeys = true)))
+    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val facts = BeaconIO.Facts.read(fs, new org.apache.hadoop.fs.Path(out)).get
+    // 6 epochs × 8 rows; the NULL-timestamp row is in no fact
+    assert(facts.rows === 48L)
+    assert(facts.maxKey === Some(7L))
+    assert(facts.keyRanges === Some(Seq((0L, 2L), (5L, 7L))))
+    val genesis = graft.model.BeaconFunctions.GenesisTime
+    assert(facts.tsMicros === Some((genesis.getEpochSecond * 1000000L,
+      genesis.plusSeconds(7 * 32 * 12).getEpochSecond * 1000000L)))
+    assert(facts.files === BeaconIO.dataFiles(fs, new org.apache.hadoop.fs.Path(out)))
+    assert(facts.files.keys.forall(_.startsWith("part-")) && facts.files.nonEmpty)
+    assert(spark.read.parquet(out).count() === 49L)
+    assert(BeaconIO.Facts.union(Seq((5L, 6L), (0L, 1L), (2L, 2L), (4L, 9L))) ===
+      Seq((0L, 2L), (4L, 9L)))
+  }
+
   test("commit crash windows: a partial .next is never adopted, a complete one is") {
     import spark.implicits._
     val dir = tmpDir("state-swap")

@@ -81,10 +81,28 @@ class HttpBeaconSourceSpec extends SparkTestBase {
         (System.nanoTime() - t0) / 1e9
       }
       seconds(http) // warm-up: the whole share below must show as throttling
-      // one task, 9 slots: the first id takes the limiter's burst token and
-      // each later one waits 1 / (1000 × 0.005) s, so at least 8 × 0.2 s in all
+      // one task, 9 slots, 9 requests at least: the first takes the
+      // limiter's burst token and each later one waits 1 / (1000 × 0.005) s,
+      // so at least 8 × 0.2 s in all
       assert(seconds(http.withRateShare(0.005)) >= 1.6)
     }
+  }
+
+  test("the rate limit counts requests, not ids: a node sees at most fetchTasks × rate + burst per second") {
+    val stub = new BeaconApiStub(32, 3)
+    try {
+      val (rate, tasks) = (4.0, 2)
+      val http = new HttpBeaconSource(
+        BeaconApiConfig(Seq(stub.baseUri), ratePerSecond = Some(rate), fetchTasks = tasks))
+      // slots 4..9 all have a block, so each takes two requests (header, body)
+      assert(http.blocks(spark, (4L, 9L)).filter("NOT skipped").count() === 6L)
+      val at = stub.requests.asScala.toSeq.sorted
+      assert(at.size === 12)
+      // the most requests in any one-second window opening at a request;
+      // each task's limiter allows its rate plus a burst of one
+      val peak = at.map(t => at.count(u => u >= t && u < t + 1000000000L)).max
+      assert(peak <= tasks * rate + tasks, s"$peak requests in one second")
+    } finally stub.stop()
   }
 
   test("single-day replay end-to-end through the HTTP source (A1-A3/E8)") {
@@ -134,9 +152,13 @@ final class BeaconApiStub(nSlots: Int, nValidators: Int) {
 
   val baseUri: String = s"http://127.0.0.1:${server.getAddress.getPort}"
 
+  /** When each request arrived (`System.nanoTime`). */
+  val requests = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+
   def stop(): Unit = server.stop(0)
 
   private def handle(ex: HttpExchange): Unit = {
+    requests.add(System.nanoTime())
     val path = ex.getRequestURI.getPath
     val query = Option(ex.getRequestURI.getQuery).getOrElse("")
     val resp: Option[String] = path match {
