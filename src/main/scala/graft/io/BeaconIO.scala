@@ -79,13 +79,6 @@ object BeaconIO {
     withBlockDate(df, tsCol)
       .withColumn("hour", format_string("%02d", hour(col(tsCol))))
 
-  /** Partition-pruned single-date read (`only_last_date` analog,
-    * `build_load_dag.py:88-92`): the filter lands on the partition column,
-    * so only that date's directories are listed and scanned. */
-  def readDate(spark: SparkSession, basePath: String, date: LocalDate): DataFrame =
-    spark.read.option("basePath", basePath).parquet(basePath)
-      .filter(col("block_date") === lit(date.toString))
-
   /** A4/A5 — range-metadata sidecar: the reference materializes a date's
     * resolved block/epoch range as a `"start,end"` text file
     * (`blocks_meta.txt`/`epochs_meta.txt`) and uploads it NEXT TO the data
@@ -354,22 +347,4 @@ object BeaconIO {
       }
     } finally pool.shutdown()
   }
-
-  // ---- catalog utilities (A15/A17–A19) ----
-
-  /** A15: namespace creation (`bigquery_utils.py:10-21` analog). */
-  def createDatabase(spark: SparkSession, name: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$name`")
-
-  /** A18: view create-or-replace (`bigquery_utils.py:78-90`). */
-  def createOrReplaceView(spark: SparkSession, name: String, sql: String): Unit =
-    spark.sql(s"CREATE OR REPLACE VIEW `$name` AS $sql")
-
-  /** A19: existence probe (`bigquery_utils.py:93-98`). */
-  def tableExists(spark: SparkSession, name: String): Boolean =
-    spark.catalog.tableExists(name)
-
-  /** A17: ad-hoc query to destination table (`bigquery_utils.py:68-75`). */
-  def queryToTable(spark: SparkSession, sql: String, dest: String): Unit =
-    spark.sql(sql).write.mode(SaveMode.Overwrite).saveAsTable(dest)
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -8,7 +9,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 import graft.io.BeaconIO
-import graft.jobs.{BeaconSource, Orchestration}
+import graft.jobs.BeaconSource
 import graft.model.{BeaconFunctions, BeaconSchemas}
 
 /** Ingestion client config — the Spark analog of the reference's export
@@ -42,10 +43,9 @@ final case class BeaconApiConfig(
   * (`build_export_dag.py:104-168`); here the fetch itself is a Spark job:
   * the slot/epoch range becomes a `spark.range` split into
   * [[BeaconApiConfig.fetchTasks]] partitions, each executor task walks its
-  * sub-range with one HTTP client, per-task rate limiting
-  * ([[Orchestration.RateLimiter]]) and provider fallback
-  * ([[Orchestration.withFallback]]), and emits rows in the exporter's flat
-  * JSONL exchange shape. Parsing stays schema-declared
+  * sub-range with one HTTP client, per-task rate limiting ([[RateLimiter]])
+  * and provider fallback ([[BeaconHttp.withFallback]]), and emits rows in
+  * the exporter's flat JSONL exchange shape. Parsing stays schema-declared
   * ([[BeaconIO.readJsonl]]) — byte-identical semantics to the fixture path,
   * so everything downstream (export/load/verify) is source-agnostic.
   *
@@ -124,11 +124,11 @@ final class BeaconHttp(cfg: BeaconApiConfig) {
 
   val mapper = new ObjectMapper()
 
-  private val limiter = cfg.ratePerSecond.map(new Orchestration.RateLimiter(_))
+  private val limiter = cfg.ratePerSecond.map(new RateLimiter(_))
 
   /** GET `base + path` → Some(parsed JSON) | None on 404. */
   def getJson(path: String): Option[JsonNode] =
-    Orchestration.withFallback(cfg.providerUris) { base =>
+    BeaconHttp.withFallback(cfg.providerUris) { base =>
       limiter.foreach(_.acquire())
       val url = java.net.URI.create(base + path).toURL
       val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
@@ -146,6 +146,62 @@ final class BeaconHttp(cfg: BeaconApiConfig) {
         }
       } finally conn.disconnect()
     }
+}
+
+object BeaconHttp {
+
+  /** E3 — try each provider URI in order until one succeeds
+    * (`build_export_dag.py:210-224`); the last one's error propagates. */
+  private[sources] def withFallback[A](providerUris: Seq[String])(f: String => A): A = {
+    require(providerUris.nonEmpty, "at least one provider uri required")
+    @tailrec def loop(remaining: Seq[String]): A = remaining match {
+      case Seq(last) => f(last)
+      case head +: tail =>
+        scala.util.Try(f(head)) match {
+          case scala.util.Success(a) => a
+          case scala.util.Failure(e) =>
+            System.err.println(s"[fallback] provider $head failed: ${e.getMessage}")
+            loop(tail)
+        }
+    }
+    loop(providerUris)
+  }
+}
+
+/** Token-bucket limiter for the ingestion client — the reference's
+  * optional `export_rate_limit` (`variables.py:20-21`, plumbed into every
+  * export command at `build_export_dag.py:25,82,96,115`).
+  * `permitsPerSecond` tokens accrue continuously up to `burst`;
+  * [[RateLimiter.acquire]] blocks until one is available. Each fetch task's
+  * [[BeaconHttp]] holds its own limiter, so the aggregate rate is
+  * `tasks × rate`, the same semantics as the reference's per-worker limit.
+  * Clock and sleep injectable for deterministic tests. */
+private[sources] final class RateLimiter(
+    permitsPerSecond: Double, burst: Int = 1,
+    nanoTime: () => Long = () => System.nanoTime(),
+    sleep: Long => Unit = ns => Thread.sleep(ns / 1000000L, (ns % 1000000L).toInt)) {
+  require(permitsPerSecond > 0 && burst >= 1)
+  private val intervalNanos = (1e9 / permitsPerSecond).toLong
+  private var available = burst.toDouble // guarded by this
+  private var last = nanoTime()
+
+  def acquire(): Unit = synchronized {
+    refill()
+    while (available < 1.0) {
+      sleep(((1.0 - available) * intervalNanos).toLong)
+      refill()
+    }
+    available -= 1.0
+  }
+
+  def throttled[A](f: => A): A = { acquire(); f }
+
+  private def refill(): Unit = {
+    val now = nanoTime()
+    available = math.min(burst.toDouble,
+      available + (now - last).toDouble / intervalNanos)
+    last = now
+  }
 }
 
 /** Beacon-API envelope → flat exchange-row mapping, field-for-field the

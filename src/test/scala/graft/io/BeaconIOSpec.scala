@@ -92,17 +92,6 @@ class BeaconIOSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$dir/history").count() === 10L)
   }
 
-  test("readDate prunes to a single date partition") {
-    val dir = tmpDir("readdate")
-    BeaconFixtures.write(s"$dir/blocks.json", BeaconFixtures.blockLines(3700))
-    val df = BeaconIO.readBeaconTable(spark, "beacon_blocks", s"$dir/blocks.json")
-    commitDaily(df, "block_timestamp", s"$dir/out")
-    val one = BeaconIO.readDate(spark, s"$dir/out", java.time.LocalDate.parse("2020-12-01"))
-    assert(one.count() === 3599L)
-    val scanned = one.queryExecution.executedPlan.toString
-    assert(scanned.contains("block_date"), "read must carry the partition predicate")
-  }
-
   test("a .next or .old sibling leaves a table read unchanged: same partitions, rows") {
     val dir = tmpDir("sibling-read")
     BeaconFixtures.write(s"$dir/blocks.json", BeaconFixtures.blockLines(3700))

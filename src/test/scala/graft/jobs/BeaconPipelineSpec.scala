@@ -2,6 +2,7 @@ package graft.jobs
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -67,10 +68,11 @@ class BeaconPipelineSpec extends SparkTestBase {
     val ds = BeaconFixtures.GenesisDay
     BeaconPipeline.replayDay(spark, source, ds, work)
     // plant a stale prior-day partition in both warehouse tables
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.getLocal(conf)
     for (t <- Seq("beacon_validators", "beacon_blocks")) {
-      assert(graft.io.FsTransfer.copyTree(
-        s"$work/warehouse/$t/block_date=$ds",
-        s"$work/warehouse/$t/block_date=2020-11-30"))
+      assert(FileUtil.copy(fs, new Path(s"$work/warehouse/$t/block_date=$ds"),
+        fs, new Path(s"$work/warehouse/$t/block_date=2020-11-30"), false, conf))
     }
     BeaconPipeline.load(spark, s"$work/export", s"$work/warehouse", ds, verify = false)
     def dates(t: String): Set[String] =

@@ -98,7 +98,7 @@ class ScaleOpsSpec extends SparkTestBase {
       val n = spark.sql("SELECT COUNT(*) AS c FROM spark_catalog.crypto_ethereum2.b1_probe")
         .collect()(0).getLong(0)
       assert(n === 1L)
-      assert(graft.io.BeaconIO.tableExists(spark, "crypto_ethereum2.b1_probe"))
+      assert(spark.catalog.tableExists("crypto_ethereum2.b1_probe"))
     } finally spark.sql("DROP TABLE crypto_ethereum2.b1_probe")
   }
 }

@@ -124,6 +124,40 @@ class HttpBeaconSourceSpec extends SparkTestBase {
     assert(validators.agg(org.apache.spark.sql.functions.max("balance"))
       .collect()(0).getDecimal(0).toPlainString === "32000000000.500000000")
   }
+
+  test("provider fallback tries URIs in order and returns the first success (E3)") {
+    var tried = Vector.empty[String]
+    val out = BeaconHttp.withFallback(Seq("bad1", "bad2", "good")) { uri =>
+      tried :+= uri
+      if (uri.startsWith("bad")) sys.error(s"$uri down") else s"ok:$uri"
+    }
+    assert(out === "ok:good")
+    assert(tried === Vector("bad1", "bad2", "good"))
+  }
+
+  test("fallback rethrows the last provider's error when all fail") {
+    val e = intercept[RuntimeException] {
+      BeaconHttp.withFallback(Seq("a", "b")) { uri => sys.error(s"$uri down"): String }
+    }
+    assert(e.getMessage === "b down")
+  }
+
+  test("rate limiter enforces the configured request rate (token bucket)") {
+    var now = 0L // fake nanos
+    var slept = 0L
+    val rl = new RateLimiter(permitsPerSecond = 2, burst = 2,
+      nanoTime = () => now, sleep = ns => { slept += ns; now += ns })
+    rl.acquire(); rl.acquire() // burst drains free
+    assert(slept === 0L)
+    rl.acquire() // third must wait ~one 500ms interval
+    assert(slept === 500L * 1000000L)
+    now += 2000L * 1000000L // 2 s idle refills up to burst, never beyond
+    val before = slept
+    rl.acquire(); rl.acquire()
+    assert(slept === before)
+    var calls = 0
+    assert(rl.throttled { calls += 1; 7 } === 7 && calls === 1)
+  }
 }
 
 /** Local stub beacon node: serves the PUBLIC beacon REST API shapes from the

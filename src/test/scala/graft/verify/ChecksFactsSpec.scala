@@ -2,14 +2,14 @@ package graft.verify
 
 import java.time.LocalDate
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.{BeaconFixtures, SparkTestBase}
-import graft.io.{BeaconIO, FsTransfer}
+import graft.io.BeaconIO
 import graft.jobs.{BeaconPipeline, JsonlBeaconSource}
 import graft.model.BeaconSchemas
 
@@ -198,7 +198,7 @@ class ChecksFactsSpec extends SparkTestBase {
     val p = part(wh, "beacon_blocks", days(1))
     val file = firstPart(p)
     val copy = new Path(s"$p/part-99999-copy.parquet")
-    assert(org.apache.hadoop.fs.FileUtil.copy(fs, file, fs, copy, false,
+    assert(FileUtil.copy(fs, file, fs, copy, false,
       spark.sparkContext.hadoopConfiguration))
     loud(Checks.blocksCount(spark, days(2).toString), p, "unlisted: part-99999-copy.parquet")
     assert(fs.delete(copy, false))
@@ -276,8 +276,9 @@ class ChecksFactsSpec extends SparkTestBase {
     // stray generations of every day beside the live ones: counted, they
     // would break blocks_count
     for (ds <- days; gen <- Seq("next", "old"))
-      assert(FsTransfer.copyTree(part(wh, "beacon_blocks", ds),
-        BeaconIO.sibling(part(wh, "beacon_blocks", ds), gen)))
+      assert(FileUtil.copy(fs, new Path(part(wh, "beacon_blocks", ds)), fs,
+        new Path(BeaconIO.sibling(part(wh, "beacon_blocks", ds), gen)), false,
+        spark.sparkContext.hadoopConfiguration))
     register(wh)
     for (ds <- days) assert(agree("blocks_count", ds.toString).isEmpty, ds)
     // a lost day stays lost with its retired and staged copies beside it
