@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product over two `ARRAY<FLOAT>` columns.
@@ -76,8 +75,8 @@ case class FloatVectorDot(left: Expression, right: Expression)
   override def prettyName: String = "vector_dot"
 }
 
-/** Registration: `vector_dot` lands in the session function registry so it
-  * is usable from `expr(...)`/SQL. Idempotent — call per session. */
+/** The engine's custom functions, usable from `expr(...)`/SQL in every
+  * session [[GraftExtensions]] installs them in. */
 object GraftFunctions {
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
@@ -397,17 +396,13 @@ object GraftFunctions {
         HyperplaneSig(
           Cast(args.head, ArrayType(FloatType, containsNull = true)), n)
       }))
-
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }
 
-/** `spark.sql.extensions`-style injection for sessions built through
-  * [[graft.GraftSession]] (queries also call [[GraftFunctions.register]]
-  * defensively so driver-owned sessions work too). Also installs the
-  * [[graft.plans.PartitionDateRewrite]] optimizer rule. */
+/** The one install path of [[GraftFunctions.functions]] and the
+  * [[graft.plans.PartitionDateRewrite]] optimizer rule: `spark.sql.extensions`
+  * injection into every session [[graft.GraftSession]] builds, and into each
+  * session cloned or derived from one (`newSession`, a streaming
+  * `foreachBatch` clone). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach { case (ident, info, builder) =>

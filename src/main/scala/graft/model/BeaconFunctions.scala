@@ -26,8 +26,6 @@ object BeaconFunctions {
 
   def slotToEpoch(slot: Column): Column = floor(slot / SlotsPerEpoch).cast("long")
 
-  def epochStartSlot(epoch: Column): Column = (epoch * SlotsPerEpoch).cast("long")
-
   /** Slot → UTC timestamp: genesis + 12 s * slot. */
   def slotToTimestamp(slot: Column): Column =
     timestamp_seconds(lit(GenesisTime.getEpochSecond) + slot * SecondsPerSlot)
@@ -89,7 +87,4 @@ object BeaconFunctions {
 
   def epochRangeForDate(date: LocalDate): (Long, Long) =
     epochRangeForSlots(slotRangeForDate(date))
-
-  def epochRangeForHour(date: LocalDate, hour: Int): (Long, Long) =
-    epochRangeForSlots(slotRangeForHour(date, hour))
 }

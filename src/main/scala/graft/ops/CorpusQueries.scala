@@ -165,7 +165,6 @@ object CorpusQueries {
     // read and hashed ONCE — the cost that made the naïve two-branch
     // form (whose two exchanges differ and cannot reuse) unacceptable.
     "q_repeated_spans" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val occ = Tables.documents(s, d)
         .select(col("doc_id"), expr("word_grams(lower(text), 50)").as("gs"))
         .select(col("doc_id"), size(col("gs")).as("n_grams"),
@@ -204,7 +203,6 @@ object CorpusQueries {
     // contaminated-id set is tiny and broadcast-anti-joins; only then does
     // the content-key dedup shuffle what survived.
     "q_corpus_curate" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val qual = qualityGate(docs)
         .filter(col("doc_id") >= BenchmarkMaxId)
@@ -552,7 +550,6 @@ object CorpusQueries {
     // on source + a per-partition sort — the same accepted shape as
     // q_budget_sample's take windows; k rows per source leave it.
     "q_group_sample" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       groupSampleOf(Tables.documents(s, d))
     }),
 
@@ -564,7 +561,6 @@ object CorpusQueries {
     // recipe. Per-row filter, zero shuffle, and the bucket rides along so
     // downstream splits can sub-sample consistently.
     "q_sample_stratified" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"),
           expr("md5_low63(CAST(doc_id AS STRING)) % 100").as("bucket"))
@@ -692,7 +688,6 @@ object CorpusQueries {
     // length), which finds real cross-doc duplicated grams in this
     // fixture — so the removal rule does work at every scale.
     "q_substr_dedup" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       substrDedupOf(Tables.documents(s, d))
     })
   )
@@ -889,12 +884,11 @@ object CorpusQueries {
       .groupBy("source", "split")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"))
 
-  /** q_group_sample's pipeline over an arbitrary documents frame.
-    * Requires GraftFunctions
-    * registered on the session. See the registration comment for the
-    * exact-BIGINT rank-key contract; the physical plan keeps the
-    * per-source take map-side via Spark's WindowGroupLimit (judge-audited
-    * r13), so only k rows per source per task cross the exchange. */
+  /** q_group_sample's pipeline over an arbitrary documents frame. See the
+    * registration comment for the exact-BIGINT rank-key contract; the
+    * physical plan keeps the per-source take map-side via Spark's
+    * WindowGroupLimit (judge-audited r13), so only k rows per source per
+    * task cross the exchange. */
   private[graft] def groupSampleOf(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("skey", "doc_id")
@@ -970,7 +964,6 @@ object CorpusQueries {
   private[graft] def budgetSample(base: DataFrame,
                                   shards: Int = BudgetShards): DataFrame = {
     val s = base.sparkSession
-    graft.functions.GraftFunctions.register(s)
     require(shards >= 1 && (shards & (shards - 1)) == 0,
       s"budget shards must be a power of two, got $shards")
     val shift = 63 - Integer.numberOfTrailingZeros(shards)
@@ -1161,7 +1154,6 @@ object CorpusQueries {
     * DSIR correctly finds ~no signal). */
   private[graft] def importanceWeights(
       docs: DataFrame, isTarget: org.apache.spark.sql.Column): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val B = 1024
     // token stream factored through the per-row term_counts table (r8):
     // md5 hashes each DISTINCT term of a doc once (not every occurrence),
@@ -1265,7 +1257,6 @@ object CorpusQueries {
     * (OpPropertiesSpec proves it at N=8 and N=64). */
   private[ops] def pack(docs: DataFrame,
                         shards: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     shards.foreach(n => require(n > 0, s"bad pack shards: $n"))
     val packable = docs.filter(col("text").isNotNull)
     val ch0 = packable
@@ -1297,7 +1288,6 @@ object CorpusQueries {
   }
 
   private[ops] def decontaminate(docs: DataFrame, benchMaxId: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     def grams(src: DataFrame): DataFrame = src
       .select(col("doc_id"), expr("word_grams(lower(text), 13)").as("gs"))
     val bench = grams(docs.filter(col("doc_id") < benchMaxId))

@@ -26,33 +26,6 @@ import graft.tables.Tables
   */
 object DedupQueries {
 
-  /** doc_id + word array (docs shorter than one 3-shingle are dropped —
-    * mirrors `len(w) >= 3` in the oracle). No [[ScaleOps.spread]] here any
-    * more: with the 2-digest lane scheme ([[graft.functions.Md5High63]])
-    * the per-shingle CPU no longer covers the cost of an extra exchange of
-    * the full text stream at fixture scale (interleaved A/B: every
-    * downstream consumer got equal-or-faster without it, and one fewer
-    * allocation-heavy shuffle stage is less surface for host-load
-    * amplification — the r4 recorded-bench failure mode). At production
-    * row-group counts the scan is already parallel and the old spread
-    * guard was a no-op, so nothing changes at 100 TB. Parameterized by the
-    * docs relation so pipeline stages (e.g. [[CorpusQueries]]) can dedup a
-    * FILTERED corpus without recomputing signatures for dropped rows. */
-  private[ops] def wordsOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
-      .filter(size(col("w")) >= 3)
-
-  /** Exploded 3-word shingles: `transform` over an index sequence keeps the
-    * shingle build inside whole-stage codegen (no UDF). */
-  private[ops] def shinglesOf(docs: DataFrame): DataFrame =
-    wordsOf(docs).select(
-      col("doc_id"),
-      explode(expr(
-        """transform(sequence(1, size(w) - 2),
-           i -> concat(element_at(w, i), ' ', element_at(w, i + 1), ' ',
-                       element_at(w, i + 2)))""")).as("sh"))
-
   /** 4-hash MinHash signature per doc (seeded by prefixing the hash input)
     * — ONE native per-row expression ([[graft.functions.ShingleSig]]): the
     * shingle loop, both digests (each md5 yields two independent 63-bit
@@ -75,14 +48,14 @@ object DedupQueries {
     * pushes the filter below the signature projection and would evaluate
     * the whole digest loop TWICE per row, once in the Filter and once in
     * the Project (subexpression elimination does not span operators). The
-    * split here is Spark's own, so the predicate is the old wordsOf filter
-    * verbatim; the expression's null case is then unreachable. */
+    * split here is Spark's own, so the predicate is the oracle's
+    * `len(w) >= 3` word-array filter verbatim; the expression's null case
+    * is then unreachable. */
   private def hasShingles =
     col("text").isNotNull && size(split(trim(col("text")), "\\s+")) >= 3
 
   private[ops] def minhashSigOf(docs: DataFrame,
                                 extra: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .filter(hasShingles)
       .select(Seq(col("doc_id"), expr("shingle_sig(text)").as("g")) ++
@@ -103,7 +76,6 @@ object DedupQueries {
     * keep the filtered form. */
   private[ops] def minhashSigAllOf(docs: DataFrame,
                                    extra: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(Seq(col("doc_id"), expr("shingle_sig(text)").as("g")) ++
         extra.map(col): _*)
@@ -152,7 +124,6 @@ object DedupQueries {
     * for a closed-form per-doc decision; the nightly batch
     * q_dedup_clusters pass reconciles. */
   private[ops] def dedupDelta(corpus: DataFrame, delta: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(delta.sparkSession)
     // no row filter: hs (from the signature struct — NOT a second
     // tokenizing hasShingles pass, NOT an alias-substituted g filter that
     // would evaluate the 64-perm signature twice) makes the stack IFs in
@@ -632,8 +603,8 @@ object DedupQueries {
     * Hot buckets auto-salt (VERDICT r5 stretch): a bucket whose size
     * exceeds `saltThreshold` ([[LshSaltThreshold]], 2^16) would expand
     * C(n,2) pairs inside ONE task — the quadratic straggler that kills the
-    * job long before shuffle volume does. Instead of the manual
-    * [[ScaleOps.saltedJoin]] escape hatch, the split is SIZE-TRIGGERED
+    * job long before shuffle volume does. Instead of a hand-salted join
+    * (one side replicated over S salts), the split is SIZE-TRIGGERED
     * after the bucket aggregation: oversize buckets explode back out, each
     * doc takes a deterministic salt `s = pmod(hash(doc_id), S)`
     * (`salts`, [[LshSaltFactor]] = 16) and is replicated to the
@@ -703,7 +674,6 @@ object DedupQueries {
     * shuffle on an already-unique key (and collect_set built the same set
     * this computes locally, minus the exchange). */
   private def candidateSetCounts(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // no row filter (r9): hasShingles re-tokenizes every doc; null-sig
     // rows emit zero band rows via the stack IFs instead — see
     // minhashSigAllOf for the measured cost and the substitution trap
@@ -793,11 +763,10 @@ object DedupQueries {
     * Shuffles: shingle df, doc-array rebuild, prefix join, two array
     * lookups — all gram-, prefix- or candidate-volume, never all-pairs,
     * and no pair-stream exchange at all. Hot-prefix skew: the
-    * rare-first order IS the de-skewer; the residual hatch is
-    * [[graft.ops.ScaleOps.saltedJoin]], same as q_jaccard_pairs. */
+    * rare-first order IS the de-skewer; the residual hatch is a
+    * hand-salted join, same as q_jaccard_pairs. */
   private[graft] def simjoinPrefixOf(s: SparkSession, docs: DataFrame,
                                      t: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // shingle_set = the ss lane alone at one digest per shingle (half of
     // shingle_sig_set's cost — this query never reads the MinHash lanes).
     // spread BEFORE tokenize (unlike the signature path, which dropped
@@ -887,7 +856,6 @@ object DedupQueries {
     * registered query binds it to the sf dir). Empty truth reads recall
     * NULL, matching the twin's NULLIF (ADVICE r17). */
   private[graft] def lshRecallOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sigset = ScaleOps.spread(docs)
       .select(col("doc_id"), expr("shingle_sig_set(text)").as("g"))
       .select(col("doc_id"), col("g.mh0"), col("g.mh1"), col("g.mh2"),
@@ -971,7 +939,6 @@ object DedupQueries {
     // contents — engine-neutral): a raw array column crashes the driver's
     // pandas sorter.
     "q_minhash_native" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // r6: the 64-perm signature is per-row work inside the scan
       // ([[graft.functions.ShingleMinHash]]) — the aggregate form exploded
       // one row per shingle and regrouped by the already-unique doc_id
@@ -997,7 +964,6 @@ object DedupQueries {
     // map-side combine — nothing beyond the pipeline's own exchanges is
     // corpus-sized.
     "q_dup_degree" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       lshPairsOf(Tables.documents(s, d))
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .groupBy("doc_id")
@@ -1007,7 +973,6 @@ object DedupQueries {
     // Triangle census of the candidate graph (r15) — see
     // [[triangleStatsOf]] for the degree-ordered node-iterator plan.
     "q_triangle_count" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       triangleStatsOf(lshPairs(s, d))
     }),
 
@@ -1015,7 +980,6 @@ object DedupQueries {
     // [[pageRankOf]]; rows-only for the hash gate by design, value-gated
     // under rel-tol 1e-9 by the tolerance twin.
     "q_pagerank" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       pageRankOf(lshPairs(s, d))
     }),
 
@@ -1024,7 +988,6 @@ object DedupQueries {
     // scalar subquery so the same query runs at every SF — see dedupDelta
     // for the no-corpus×corpus-expansion contract).
     "q_dedup_delta" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       // explicit FLOOR (the q_cdc_merge cross-engine cast note): DuckDB's
       // bare CAST rounds where Spark truncates
@@ -1075,10 +1038,11 @@ object DedupQueries {
     // each pair computes its intersection exactly once, at its first
     // agreeing band, CPU that is local and embarrassingly parallel where
     // the join stages were a scheduling barrier. Hot buckets:
-    // q_lsh_pairs' pair generation auto-salts (lshPairsFromSig); HERE the manual
-    // [[graft.ops.ScaleOps.saltedJoin]] hatch remains the documented
-    // answer — the per-doc set payload makes salt replication S× heavier,
-    // so the automatic split deliberately stops at the signature stream.
+    // q_lsh_pairs' pair generation auto-salts (lshPairsFromSig); HERE a
+    // hand-salted join (the set side replicated over S salts, the pair
+    // side scattered over them) remains the documented answer — the
+    // per-doc set payload makes salt replication S× heavier, so the
+    // automatic split deliberately stops at the signature stream.
     "q_jaccard_pairs" -> ((s, d) =>
       candidateSetCounts(s, d)
         .select(col("doc_a"), col("doc_b"), col("ni"),
@@ -1109,7 +1073,6 @@ object DedupQueries {
     // measure est-vs-exact on a sample, pick the signature threshold, then
     // run signature-only dedup everywhere.
     "q_minhash_est" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // Payload diet (VERDICT r6 #6): the 64 md5p lanes live in Z_{2^31-1}
       // (MinHashSketch.P), so the signature rides the bucket shuffle as
       // array<int> — 256 bytes/doc, half the long form, lossless, and lane
@@ -1174,7 +1137,6 @@ object DedupQueries {
     // dropped it. At 100 TB SimHash is per-row work inside the scan, and
     // now the plan says so.
     "q_simhash" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // simhash16 is null ONLY for null text (an empty text still votes via
       // its one "" token), so the null-doc drop is a plain column predicate
       // — filtering on the expression's own null would push the digest loop
@@ -1201,7 +1163,6 @@ object DedupQueries {
     // answer at sf0.1 on the template-heavy corpus before this was
     // narrowed).
     "q_simhash_pairs" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val sig = ScaleOps.spread(Tables.documents(s, d))
         .filter(col("text").isNotNull)
         .select(col("doc_id"), expr("simhash16(text)").as("simhash"))

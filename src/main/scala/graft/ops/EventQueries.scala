@@ -120,7 +120,6 @@ object EventQueries {
     * aggregate's map-side combine collapses it before the shuffle, and
     * the snapshot side ships each key once. */
   private[ops] def cdcMergeOf(ev: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(ev.sparkSession)
     // explicit FLOOR, not a bare long cast: Spark's double→long cast
     // truncates while DuckDB's CAST rounds, so max·0.8 with fractional
     // part ≥ .5 (max ≡ 1,2 mod 5) would split the boundary event onto
@@ -385,7 +384,6 @@ object EventQueries {
   }
 
   private[ops] def heavyHittersOf(ev: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(ev.sparkSession)
     val counts = ev.groupBy("user_id").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true) // bounded (one row per key); two consumers
     val total = counts.agg(sum(col("cnt")).as("t")).select(col("t")).scalar()

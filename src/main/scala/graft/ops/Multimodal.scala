@@ -290,14 +290,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** "Resize" stub: truncate/pad the payload to `targetBytes` — the real
-    * implementation would re-encode pixels; the plumbing (binary in,
-    * binary out, partition-local) is identical. */
-  def resizePayload(df: DataFrame, targetBytes: Int): DataFrame =
-    df.withColumn("payload",
-      when(col("payload").isNull, col("payload"))
-        .otherwise(expr(s"substring(payload, 1, $targetBytes)")))
-
   /** Real video-frame binding with zero external deps: MJPEG-in-AVI.
     * AVI is RIFF (little-endian `[4cc id][u32 size][data][pad-to-even]`,
     * public spec); the frames of a motion-JPEG file are the `##dc`/`##db`

@@ -19,7 +19,6 @@ object MultimodalQueries {
     * q_media_phash (exact groups) and q_phash_neardup (banded pairs) so
     * the code derivation cannot drift between the two consumers. */
   private def phashCodesOf(media: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(media.sparkSession)
     // r13: the pack is ONE native codegen'd expression
     // ([[graft.functions.AHash64]] — bit-identical to the r12 composed
     // three-HOF chain, whose interpreted folds cost ~0.5 s/pass at

@@ -377,7 +377,6 @@ object RelationalQueries {
     // WindowExec). n_chars round-trips through the heap's DOUBLE score
     // lane exactly (ints ≪ 2^53).
     "q_group_topn" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .groupBy("source")
         .agg(expr("topk_by(CAST(n_chars AS DOUBLE), doc_id, 3)").as("top"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.tables.Tables
 
 /** Lexical + hybrid retrieval over the documents corpus — the query side of
@@ -117,7 +118,6 @@ object RetrievalQueries {
     * ONE `query_term_stats` pass. Shared by the in-plan stats subquery,
     * the scoring side, and the frozen-stats collect. */
   private[ops] def bm25Feats(docs: DataFrame, terms: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val termList = terms.map(t => s"'$t'").mkString(", ")
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -157,34 +157,25 @@ object RetrievalQueries {
   }
 
   /** Frozen BM25 index stats (n_docs, total_tokens, df0..dfN-1) per
-    * (session, sf dir) — collected by the SAME [[bm25StatsAggs]] aggregate
-    * the in-plan subquery runs, once per session. Serving-side cache on
-    * the [[graft.ops.SimilarityQueries]] headCache precedent: a production
-    * BM25 index computes its corpus stats at INDEX BUILD time and serves
-    * every query from them; q_bm25 remains the registered operator that
-    * pays the build (stats pass + scoring pass, uncached), q_hybrid_rrf
-    * is the serving composition that reads the frozen index — exactly the
-    * q_pq_codes (train, pays) / q_ann_pq (serve, cached codebooks) split.
-    * Weak session key: same staleness contract as headCache — a fixture
-    * dir REWRITTEN within one session serves the stale stats; open a new
-    * session after mutating a fixture path. */
-  private val statsCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, Array[Long]]]())
+    * (session, sf dir, terms) — collected by the SAME [[bm25StatsAggs]]
+    * aggregate the in-plan subquery runs, once per session. Serving-side
+    * memo on the [[graft.ops.SimilarityQueries]] headCache precedent: a
+    * production BM25 index computes its corpus stats at INDEX BUILD time
+    * and serves every query from them; q_bm25 remains the registered
+    * operator that pays the build (stats pass + scoring pass, uncached),
+    * q_hybrid_rrf is the serving composition that reads the frozen index —
+    * exactly the q_pq_codes (train, pays) / q_ann_pq (serve, memoized
+    * codebooks) split. */
+  private val statsCache = new GraftSession.Memo[String, Array[Long]]
   private[ops] def bm25StatsCached(s: SparkSession, d: String,
                                    terms: Seq[String] = QueryTerms): Array[Long] =
-    statsCache
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]
-      })
-      .computeIfAbsent(s"$d|${terms.mkString(",")}", { _ =>
-        val feats = bm25Feats(Tables.documents(s, d), terms)
-        val aggs = bm25StatsAggs(col("dl"), i => col(s"tf$i"), terms.size)
-        val r = feats.agg(aggs.head, aggs.tail: _*).head()
-        (Array(r.getAs[Long]("n_docs"), r.getAs[Long]("total_tokens")) ++
-          terms.indices.map(i => r.getAs[Long](s"df$i"))).toArray
-      })
+    statsCache(s, s"$d|${terms.mkString(",")}") {
+      val feats = bm25Feats(Tables.documents(s, d), terms)
+      val aggs = bm25StatsAggs(col("dl"), i => col(s"tf$i"), terms.size)
+      val r = feats.agg(aggs.head, aggs.tail: _*).head()
+      (Array(r.getAs[Long]("n_docs"), r.getAs[Long]("total_tokens")) ++
+        terms.indices.map(i => r.getAs[Long](s"df$i"))).toArray
+    }
 
   /** The frozen query embedding + its norm per (session, sf dir) — in a
     * production hybrid serving path the query vector ARRIVES WITH the
@@ -193,23 +184,15 @@ object RetrievalQueries {
     * computed driver-side by [[SimilarityQueries.dotLocal]] — float
     * multiply, double accumulate, element order — bit-identical to the
     * in-plan `vector_dot`, so the literal plan's scores hash-match the
-    * subquery plan's. Same weak-session-key staleness contract as
-    * [[bm25StatsCached]]. */
-  private val qvecCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, (Array[Float], Double)]]())
+    * subquery plan's. */
+  private val qvecCache = new GraftSession.Memo[String, (Array[Float], Double)]
   private[ops] def queryVecCached(s: SparkSession, d: String): (Array[Float], Double) =
-    qvecCache
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[String, (Array[Float], Double)]
-      })
-      .computeIfAbsent(d, { _ =>
-        val v = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-          .select(col("embedding")).head()
-          .getAs[scala.collection.Seq[Float]]("embedding").toArray
-        (v, math.sqrt(SimilarityQueries.dotLocal(v, v)))
-      })
+    qvecCache(s, d) {
+      val v = Tables.embeddings(s, d).filter(col("vec_id") === 0)
+        .select(col("embedding")).head()
+        .getAs[scala.collection.Seq[Float]]("embedding").toArray
+      (v, math.sqrt(SimilarityQueries.dotLocal(v, v)))
+    }
 
   /** The rational-idf scorer (hash-exact cross-engine) — the body of
     * q_bm25 and the BM25 side of q_hybrid_rrf. The Lucene-convention
@@ -241,7 +224,6 @@ object RetrievalQueries {
   /** rnk-ed top-k of a (doc_id, score) stream via the bounded heap —
     * selection and order identical to ROW_NUMBER(score DESC, doc_id). */
   private def topK(scored: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(scored.sparkSession)
     scored.groupBy()
       .agg(expr(s"topk_by(score, doc_id, $k)").as("top"))
       .select(posexplode(col("top")).as(Seq("pos", "t")))
@@ -274,7 +256,6 @@ object RetrievalQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_bm25" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       topK(bm25Scored(Tables.documents(s, d)), 10)
     }),
 
@@ -282,7 +263,6 @@ object RetrievalQueries {
     // feature pass and plan shape as q_bm25, ln-based idf; rows-only
     // checked by declared design (libm ln is not bit-exact cross-engine).
     "q_bm25_logidf" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       topK(bm25ScoredLog(Tables.documents(s, d)), 10)
     }),
 
@@ -308,7 +288,6 @@ object RetrievalQueries {
     // rest). Identical arithmetic (same Divide over the same values), so
     // the DuckDB twin is unchanged — the q_hybrid_rrf precedent.
     "q_bm25_multi" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // NOTE r10 measured negative: rewriting this as the q_ann_ivfpq
       // fan-out shape (array of named_structs + HOF filter + explode,
       // instead of stack + row filter) ran 6× SLOWER (0.43 → 2.65 s min
@@ -347,7 +326,6 @@ object RetrievalQueries {
     // IDENTICAL to the subquery form (same Divide/sqrt ops over the same
     // values), so the DuckDB twin is unchanged.
     "q_hybrid_rrf" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val bm = topK(bm25Scored(Tables.documents(s, d),
           frozen = Some(bm25StatsCached(s, d))), 20)
         .select(col("doc_id"), rrfContrib.as("contrib"))
@@ -388,7 +366,6 @@ object RetrievalQueries {
     // instead of duplicating the scan+join+agg subtree (the r9
     // duplicate-subtree trap).
     "q_topk_diverse" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val best = SimilarityQueries.cosineScored(s, d)
         .join(docs, col("neighbor_id") === col("doc_id"))

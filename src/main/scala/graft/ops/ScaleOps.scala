@@ -1,41 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-/** Scale toolkit: the shuffle-shaping primitives a 100 TB deployment leans
-  * on — bucketed co-located joins, skew salting, and partition sizing.
-  * Each helper is a thin, tested wrapper over the idiomatic Spark mechanism
-  * (never a reimplementation).
+/** Scale toolkit: the two partition- and storage-shaping helpers the
+  * registered queries call — re-spreading an under-partitioned scan and
+  * releasing a checkpointed round's blocks. Each is a thin wrapper over the
+  * idiomatic Spark mechanism (never a reimplementation).
   */
 object ScaleOps {
-
-  /** Write `df` as a bucketed+sorted managed table. Two tables bucketed the
-    * same way join WITHOUT a shuffle (Exchange elided by Catalyst's output-
-    * partitioning match) — the co-located-join layout for repeatedly-joined
-    * 100 TB facts (e.g. blocks ⋈ committees on slot keys). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    nBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite").bucketBy(nBuckets, bucketCol)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .format("parquet").saveAsTable(table)
-  }
-
-  /** Salted join for skewed keys: explode the build side over `salts`
-    * replicas, scatter the probe side uniformly, join on (key, salt). The
-    * classic remedy when one hot key (an LSH bucket, a whale customer)
-    * overwhelms a single reducer. `dim` is replicated `salts`× — use for
-    * moderate-size build sides only; for broadcastable dims just broadcast.
-    */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salts: Int,
-                 joinType: String = "inner"): DataFrame = {
-    require(salts > 0)
-    val saltedFact = fact.withColumn("__salt",
-      pmod(hash(monotonically_increasing_id()), lit(salts)))
-    val saltedDim = dim
-      .withColumn("__salt", explode(array((0 until salts).map(lit): _*)))
-    saltedFact.join(saltedDim, Seq(key, "__salt"), joinType).drop("__salt")
-  }
 
   /** Re-spread an under-partitioned scan before a CPU-heavy per-row stage
     * (hashing every shingle, dotting every embedding).
@@ -87,46 +59,5 @@ object ScaleOps {
         r.unpersist(blocking = false)
       } else r.dependencies.foreach(d => walk(d.rdd))
     walk(df.rdd)
-  }
-
-  /** Repartition to a target in-memory partition size using a driver-side
-    * size estimate (catalyst stats). `targetBytes` defaults to 128 MB — the
-    * spill-safe sweet spot for 4 GB executors. */
-  def repartitionBySize(df: DataFrame, targetBytes: Long = 128L * 1024 * 1024): DataFrame = {
-    val sizeEst = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val parts = math.max(1, (sizeEst / BigInt(targetBytes)).toInt)
-    df.repartition(parts)
-  }
-
-  /** Range-partition + sort within partitions: the write layout for
-    * key-range-scanned tables (slot/time ranges) — min/max stats per file
-    * let the reader skip row groups. */
-  def sortedLayout(df: DataFrame, cols: Column*): DataFrame =
-    df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
-
-  /** Interval join without a nested loop (C10 as a reusable shape): match
-    * `probe.value ∈ [build.lo, build.hi)` by overlapping each interval onto
-    * fixed-width bands, equi-joining on the band key, and re-checking the
-    * exact bounds as a residual predicate. `BroadcastNestedLoopJoin` over
-    * intervals is O(probe × build); this is O(probe + build × spanned
-    * bands) and hash-joins — the only shape that survives when both sides
-    * are large. `bandWidth` trades replication (wide intervals span more
-    * bands) against band-key selectivity. */
-  def bandedIntervalJoin(probe: DataFrame, build: DataFrame, valueCol: String,
-                         loCol: String, hiCol: String, bandWidth: Double,
-                         joinType: String = "inner"): DataFrame = {
-    require(bandWidth > 0)
-    val p = probe.withColumn("__band",
-      floor(col(valueCol) / bandWidth).cast("long"))
-    // hi is exclusive: an interval ending exactly on a band edge does not
-    // reach into that band
-    val hiBand = (floor(col(hiCol) / bandWidth) -
-      when(pmod(col(hiCol), lit(bandWidth)) === 0.0, 1).otherwise(0)).cast("long")
-    val b = build.filter(col(loCol) < col(hiCol)) // empty intervals match nothing
-      .withColumn("__band",
-        explode(sequence(floor(col(loCol) / bandWidth).cast("long"), hiBand)))
-    p.join(b, p("__band") === b("__band") &&
-        col(valueCol) >= col(loCol) && col(valueCol) < col(hiCol), joinType)
-      .drop("__band")
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.tables.Tables
 
 /** Similarity search over the `embeddings` table (`Array[Float]` vectors).
@@ -54,64 +55,36 @@ object SimilarityQueries {
     * loudly instead of zipping mismatched UNNEST lengths in the oracle. */
   private val OracleDim = 64
 
-  /** One 1-row probe per (JVM, sf dir): the fixture's actual embedding dim
-    * must equal [[OracleDim]] or the DuckDB twin's interpolated sign matrix
-    * silently truncates the lockstep UNNEST zip (ADVICE r4). Cached so the
-    * benched queries pay the probe once, not per rep — per SESSION (weak
-    * key, so closed sessions self-evict and an exact session identity
-    * avoids both identity-hash collisions and unbounded growth): the
-    * fixture-immutability invariant is per-session, and a per-JVM entry
-    * would skip the dim re-check after a fixture rewrite, the very
-    * silent-truncation failure this assertion exists to prevent. */
-  private val dimAsserted =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]())
+  /** One 1-row probe per (session, sf dir): the fixture's actual embedding
+    * dim must equal [[OracleDim]] or the DuckDB twin's interpolated sign
+    * matrix silently truncates the lockstep UNNEST zip (ADVICE r4). Memoized
+    * so the benched queries pay the probe once, not per rep; per session, so
+    * a new session re-checks a rewritten fixture. */
+  private val dimAsserted = new GraftSession.Memo[String, Unit]
   private def assertOracleDim(s: SparkSession, d: String): Unit =
-    dimAsserted
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-      })
-      .computeIfAbsent(d, { _ =>
-        val dim = Tables.embeddings(s, d)
-          .select(size(col("embedding")).as("dim")).head.getInt(0)
-        require(dim == OracleDim,
-          s"fixture embedding dim $dim != OracleDim $OracleDim at $d — update " +
-            "SimilarityQueries.OracleDim so the oracle sign matrix matches")
-        java.lang.Boolean.TRUE
-      })
+    dimAsserted(s, d) {
+      val dim = Tables.embeddings(s, d)
+        .select(size(col("embedding")).as("dim")).head.getInt(0)
+      require(dim == OracleDim,
+        s"fixture embedding dim $dim != OracleDim $OracleDim at $d — update " +
+          "SimilarityQueries.OracleDim so the oracle sign matrix matches")
+    }
 
-  /** The IVF coarse-quantizer seed (first n corpus vectors), cached per
-    * (session, sf dir, n) like [[assertOracleDim]]'s probe: a real IVF
-    * system loads its quantizer ONCE per index and serves every query from
-    * it — paying the 16-row seed collect per query execution was a fixture
-    * artifact (VERDICT r5 #3: q_ann_ivf's residual gap is two sequential
-    * jobs each eating the local-mode stage floor; this removes one). The
-    * filter is pushed to the parquet scan. Keyed per SESSION (weak key)
-    * because the immutability invariant is per-session, not per-JVM: a
-    * long-lived JVM that rewrites a fixture dir and opens a new session
-    * must re-collect, or it would serve a stale quantizer the oracle no
-    * longer sees. The WeakHashMap gives exact session identity (an
-    * identity-hash stand-in could collide after GC and resurrect the
-    * stale entry) and self-evicts closed sessions. */
-  private val headCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[
-          (String, Int), Array[(Long, Array[Float])]]]())
+  /** The IVF coarse-quantizer seed (first n corpus vectors), memoized per
+    * (session, sf dir, n): a real IVF system loads its quantizer ONCE per
+    * index and serves every query from it — paying the 16-row seed collect
+    * per query execution was a fixture artifact (VERDICT r5 #3: q_ann_ivf's
+    * residual gap is two sequential jobs each eating the local-mode stage
+    * floor; this removes one). The filter is pushed to the parquet scan. */
+  private val headCache = new GraftSession.Memo[(String, Int), Array[(Long, Array[Float])]]
   private def headVecs(s: SparkSession, d: String, n: Int): Array[(Long, Array[Float])] =
-    headCache
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[
-          (String, Int), Array[(Long, Array[Float])]]
-      })
-      .computeIfAbsent((d, n), { _ =>
+    headCache(s, (d, n)) {
       Tables.embeddings(s, d).filter(col("vec_id") < n)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getAs[Long]("vec_id"),
           r.getAs[scala.collection.Seq[Float]]("embedding").toArray))
         .sortBy(_._1)
-    })
+    }
 
   /** DuckDB CTEs computing the identical hyperplane bucket per vector: the
     * sign matrix literal comes from the same
@@ -192,7 +165,6 @@ object SimilarityQueries {
     * serving tier resolved. Same argmax, same -cid tie-break. */
   private[graft] def cellAssignCents(vectors: DataFrame, s: SparkSession,
                                      cents0: Array[(Long, Array[Float])]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val clash = vectors.columns.filter(Set("cell", "__nv"))
     require(clash.isEmpty,
       s"cellAssign: input columns ${clash.mkString(", ")} collide with " +
@@ -242,7 +214,6 @@ object SimilarityQueries {
         col("n_dups"), col("max_cos"))
 
   private[ops] def ivfAssigned(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = headVecs(s, d, 16).map { case (id, ce) =>
       (id, ce, math.sqrt(dotLocal(ce, ce))) }
     val assignCand = cents.map { case (cid, ce, nc) =>
@@ -262,7 +233,6 @@ object SimilarityQueries {
   // this stream as the independent-path check (the production hybrid query
   // scores its single query vector via scalar subqueries instead)
   private[ops] def cosineScored(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // driver-owned sessions too
     // norms once per side, not per pair: each corpus row then costs one dot
     // + one own-norm against ALL queries (bit-identical scores — same
     // sqrt(Σx²) factors, same division)
@@ -547,79 +517,41 @@ object SimilarityQueries {
     (1 to rounds).foldLeft(headVecs(s, d, k)) { (cents, _) => update(cents) }
   }
 
-  /** Trained coarse centroids cached per (session, dir) for SEARCH
+  /** Trained coarse centroids memoized per (session, dir) for SEARCH
     * consumers (q_ann_ivfpq) — the same standing-index contract as
     * [[pqCodebooksCached]]; q_ivf_kmeans, the training operator, does
-    * not read this cache. Staleness, explicitly: a fixture path whose
-    * CONTENTS are rewritten within the same session serves the stale
-    * centroids (the cache key is the path string, not the data) — open
-    * a fresh session after mutating a fixture dir. */
-  private val kmeansCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[
-          String, Array[(Long, Array[Float])]]]())
+    * not read this memo. */
+  private val kmeansCache = new GraftSession.Memo[String, Array[(Long, Array[Float])]]
   private[graft] def kmeansCentroidsCached(s: SparkSession, d: String): Array[(Long, Array[Float])] =
-    kmeansCache
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[
-          String, Array[(Long, Array[Float])]]
-      })
-      .computeIfAbsent(d, { _ => kmeansCentroids(s, d) })
+    kmeansCache(s, d)(kmeansCentroids(s, d))
 
-  /** Trained codebooks cached per (session, sf dir) for the SEARCH query
+  /** Trained codebooks memoized per (session, sf dir) for the SEARCH query
     * only — a production PQ index trains its codebooks once and serves
-    * every query from them (the exact argument that caches [[headVecs]];
+    * every query from them (the exact argument that memoizes [[headVecs]];
     * q_ann_pq paying the training passes per execution is a fixture
     * artifact). q_pq_codes — the TRAINING operator — deliberately does
-    * NOT read this cache: its benched cost must include the train. Weak
-    * session key, same staleness contract as [[headCache]] — and
-    * explicitly: the SAME path rewritten within one session serves the
-    * stale codebooks (path-string key); reopen the session after a
-    * fixture mutation. */
-  private val pqBooksCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[
-          String, Array[Array[(Long, Array[Float])]]]]())
+    * NOT read this memo: its benched cost must include the train. */
+  private val pqBooksCache = new GraftSession.Memo[String, Array[Array[(Long, Array[Float])]]]
   private[graft] def pqCodebooksCached(s: SparkSession, d: String): Array[Array[(Long, Array[Float])]] =
-    pqBooksCache
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[
-          String, Array[Array[(Long, Array[Float])]]]
-      })
-      .computeIfAbsent(d, { _ => pqCodebooks(s, d) })
+    pqBooksCache(s, d)(pqCodebooks(s, d))
 
-  /** Residual sub-codebooks cached for the SEARCH side (r12 —
+  /** Residual sub-codebooks memoized for the SEARCH side (r12 —
     * q_ann_ivfpq_residual serves from the standing two-stage index;
     * q_pq_residual, the TRAINING operator, deliberately does not read
-    * this cache: its benched cost must include the train). Same weak
-    * session key and path-string staleness contract as
-    * [[pqCodebooksCached]] — a fixture dir rewritten within one session
-    * serves the stale books; reopen the session after mutating it. */
-  private val pqResBooksCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[
-          String, Array[Array[(Long, Array[Float])]]]]())
+    * this memo: its benched cost must include the train). */
+  private val pqResBooksCache = new GraftSession.Memo[String, Array[Array[(Long, Array[Float])]]]
   private[graft] def pqResidualBooksCached(s: SparkSession, d: String): Array[Array[(Long, Array[Float])]] =
-    pqResBooksCache
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[
-          String, Array[Array[(Long, Array[Float])]]]
-      })
-      .computeIfAbsent(d, { _ => pqCodebooksResidual(s, d) })
+    pqResBooksCache(s, d)(pqCodebooksResidual(s, d))
 
   /** q_ann_ivf's pipeline (factored r18 so q_ann_recall grades the
     * REGISTERED serving path — see that entry). */
   private[ops] def annIvf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
       // The coarse quantizer AND the probe selection are DRIVER state —
       // k·dim floats and nq·k scores (KBs even at k=2^16), exactly how
       // every IVF system holds them: probe selection happens client-side
       // before the index is touched. The 16-row seed is cached per
-      // (JVM, dir) — loaded once per index, like every IVF deployment —
+      // (session, dir) — loaded once per index, like every IVF deployment —
       // so execution is ONE distributed job. All driver arithmetic
       // replicates FloatVectorDot's op sequence (dotLocal), so cells,
       // probes, and scores stay bit-identical to the all-Spark form and
@@ -715,7 +647,6 @@ object SimilarityQueries {
 
     // Per-vector L2 norm + dimension — the cheap full-corpus feature pass.
     "q_vector_norms" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, d).select(
         col("vec_id"), col("label"),
         sqrt(dotCol("embedding", "embedding")).as("l2_norm"),
@@ -734,7 +665,6 @@ object SimilarityQueries {
     // bucket because that is what the hyperplane family preserves.
     // Output: the duplicate edge list (keep-lowest-id, id_a < id_b).
     "q_embed_neardup" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       // norm once per ROW before the pair join — per pair only the cross
       // dot remains (the norm recompute would otherwise scale with pair
@@ -904,7 +834,6 @@ object SimilarityQueries {
     // with score = -distance, mirrored by the twin's ORDER BY hd,
     // neighbor_id.
     "q_ann_hamming" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       def half(lo: Int): Column = expr(
         s"aggregate(sequence($lo, ${lo + 31}), 0L, " +
           s"(acc, i) -> acc + IF(embedding[i] > 0, shiftleft(1L, i - $lo), 0L))")
@@ -987,7 +916,6 @@ object SimilarityQueries {
     // narrow (cell, pos) aggregate + one k-row collect — the standard
     // scalable Lloyd shape; more rounds = a loop over the same two steps.
     "q_ivf_kmeans" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       kmeansAssign(Tables.embeddings(s, d).select("vec_id", "embedding"),
         kmeansCentroids(s, d))
         .select(col("vec_id"), col("cent_id").as("cell"))
@@ -1001,7 +929,6 @@ object SimilarityQueries {
     // aggregate/zip_with HOF pipeline this replaced was the suite's last
     // CodegenFallback hot path.
     "q_ann_lsh" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       val bucketed = ScaleOps.spread(Tables.embeddings(s, d))
         .select(col("vec_id"), col("embedding"),
@@ -1043,7 +970,6 @@ object SimilarityQueries {
     // literals (zero shuffle); training's only exchange is the narrow
     // (m, cell, subpos) mean aggregate.
     "q_pq_codes" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       pqAssign(Tables.embeddings(s, d).select("vec_id", "embedding"),
         pqCodebooks(s, d))
@@ -1063,7 +989,6 @@ object SimilarityQueries {
     // ascending index order, the M summands left-associated) so the twin
     // hash-matches — same precedent as q_ivf_kmeans's float discipline.
     "q_ann_pq" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       val books = pqCodebooksCached(s, d)
       val queries = headVecs(s, d, 5)
@@ -1093,7 +1018,6 @@ object SimilarityQueries {
     // float-multiply/double-accumulate vector_dot as q_cosine_topk, so
     // the twin hash-matches on values.
     "q_ann_pq_rerank" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       val books = pqCodebooksCached(s, d)
       val queries = headVecs(s, d, 5)
@@ -1135,7 +1059,6 @@ object SimilarityQueries {
     // includes the train. Output: (vec_id, coarse cent_id, code0..3) —
     // the full two-stage code a serving index stores per vector.
     "q_pq_residual" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       val cents = kmeansCentroidsCached(s, d)
       val resBooks = pqCodebooksResidual(s, d)
@@ -1164,7 +1087,6 @@ object SimilarityQueries {
     // TRAINED quantizer (one Lloyd round) under the squared-distance
     // reduction, not cosine over raw seeds.
     "q_ann_ivfpq" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       val cents = kmeansCentroidsCached(s, d)
       val books = pqCodebooksCached(s, d)
@@ -1211,7 +1133,6 @@ object SimilarityQueries {
     // subtract and code assignment, the inverted-list order. Association
     // fixed as cdot + (((s0+s1)+s2)+s3) on both engines.
     "q_ann_ivfpq_residual" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       assertOracleDim(s, d)
       val cents = kmeansCentroidsCached(s, d)
       val resBooks = pqResidualBooksCached(s, d)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.tables.Tables
 
 /** Text-analysis operators over the `documents` table: token counting,
@@ -224,7 +225,6 @@ object TextQueries {
       // sorted ~5M rows at sf0.1; its GC footprint amplified bench-host
       // contention ~12×. Identical integer semantics — the DuckDB oracle is
       // unchanged and still hash-matches.)
-      graft.functions.GraftFunctions.register(s)
       ScaleOps.spread(Tables.documents(s, d))
         .select(col("doc_id"),
           lower(trim(regexp_replace(col("text"), "\\s+", " "))).as("t"))
@@ -243,7 +243,6 @@ object TextQueries {
     // Fractions stay in SQL so the double math matches the oracle
     // bit-for-bit. Zero shuffle.
     "q_repetition" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), expr("repetition_stats(lower(text))").as("r"))
         .select(col("doc_id"),
@@ -272,7 +271,6 @@ object TextQueries {
     // tolerance twin value-gates it (identity columns exact, entropy
     // rel-tol 1e-12).
     "q_entropy" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       entropyOf(Tables.documents(s, d))
     }),
 
@@ -475,7 +473,6 @@ object TextQueries {
     // other checkpointing operator here.
     var cur = vocab.localCheckpoint(false)
     val tops = Seq.newBuilder[DataFrame]
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     for (r <- 1 to rounds) {
       // r9: the round's argmax is ONE bpe_top_pair aggregate — the
       // explode of every symbol pair, the (l, r) exchange and the
@@ -539,27 +536,14 @@ object TextQueries {
       .flatten
       .toSeq
 
-  /** Learned merges cached per (session, dir, rounds) — the frozen-model
+  /** Learned merges memoized per (session, dir, rounds) — the frozen-model
     * contract of the registered q_bpe_tokenize (and any caller applying
     * a standing tokenizer): train once per fixture corpus, serve every
-    * apply from the R cached pairs. Weak session key, the same staleness
-    * contract as the IVF head-seed cache — explicitly: a corpus path
-    * whose contents are rewritten within one session serves the STALE
-    * merge table (the key is the path string); open a new session after
-    * mutating a fixture dir. */
-  private val mergeCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]]())
+    * apply from the R memoized pairs. */
+  private val mergeCache = new GraftSession.Memo[(String, Int), Seq[(String, String)]]
   private[graft] def learnedMergesCached(s: SparkSession, d: String,
                                          rounds: Int = BpeRounds): Seq[(String, String)] =
-    mergeCache
-      .computeIfAbsent(s, { _ =>
-        new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]
-      })
-      .computeIfAbsent((d, rounds), { _ =>
-        learnedMerges(Tables.documents(s, d), rounds)
-      })
+    mergeCache(s, (d, rounds))(learnedMerges(Tables.documents(s, d), rounds))
 
   /** [[bpeTokenize]]'s output over FROZEN merges: the identical final
     * projection (n_chars, token count under the merged vocabulary,
@@ -659,7 +643,6 @@ object TextQueries {
     * mean-split) and [[lmFluencyTerciles]] (sampled tercile split)
     * diverge. */
   private def fluencyPerDoc(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val B1 = 1024
     val B2 = 65536
     // ONE digest per token (not per-bigram endpoint + concat'd bigram
@@ -765,7 +748,6 @@ object TextQueries {
     * (term_df, bigram_counts, dsir_counts) extended from counting to
     * MODEL FITTING. Hash-exact DuckDB twin (integer sums commute). */
   private[graft] def probeFit(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.filter(col("text").isNotNull)
       .select(expr("term_counts(text)").as("tc"))
       .select(col("tc"), expr(probeYSql()).as("y"))
@@ -838,7 +820,6 @@ object TextQueries {
     * SQL. Tolerance-checked against a numpy re-solve of the same
     * statistics (floats differ in ulps across solvers; declared). */
   private[graft] def probeScore(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val docs = documents.filter(col("text").isNotNull)
     val w = probeWeights(docs)
     docs
@@ -891,7 +872,6 @@ object TextQueries {
     * `n_docs` still counts every document so surviving IDFs are unchanged. */
   private[graft] def docTfidf(documents: DataFrame,
                               minDf: Long = 1L): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     require(minDf >= 1L, s"tfidf minDf must be >= 1, got $minDf")
     val docs = documents.filter(col("text").isNotNull)
     val vocab = docs
@@ -941,7 +921,7 @@ object TextQueries {
     * exact and sketched pivot), proportions near thirds. */
   /** q_entropy's pipeline over an arbitrary documents frame — factored
     * (r16) so the property spec exercises the SAME expression chain the
-    * registered query runs. Requires GraftFunctions registered. */
+    * registered query runs. */
   private[graft] def entropyOf(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode_outer(expr(

@@ -16,7 +16,8 @@ import graft.model.{BeaconFunctions, BeaconSchemas}
   * variables (`/root/reference/dags/ethereum2etl_airflow/variables.py:15-21`:
   * `provider_uris`, `export_max_workers`, `export_rate_limit`).
   *
-  * @param providerUris  beacon-node base URIs tried in order per request
+  * @param providerUris  beacon-node base URIs tried in order, each request
+  *                      starting at the one that answered last
   *                      (E3 fallback — `build_export_dag.py:210-224`)
   * @param ratePerSecond optional per-task limit on requests sent per
   *                      second (a block takes two; a fallback attempt
@@ -116,19 +117,25 @@ final class HttpBeaconSource(cfg: BeaconApiConfig) extends BeaconSource {
 /** One-per-task HTTP client: JDK `HttpURLConnection` (keep-alive reuse,
   * zero added dependencies) with provider fallback. 404 is a VALID answer
   * (skipped slot / pre-genesis state), so only transport errors and non-404
-  * statuses trigger the next provider. The client holds its task's rate
+  * statuses trigger the next provider. Each request starts at the provider
+  * that answered the last one, so a dead provider costs one attempt per
+  * client, not one per request. The client holds its task's rate
   * limiter and takes one permit per request sent, a fallback attempt
   * included, so a node sees at most `ratePerSecond` requests per second
-  * from each task however many requests one id takes. */
+  * from each task however many requests one id takes. Not thread-safe:
+  * one task's thread uses it. */
 final class BeaconHttp(cfg: BeaconApiConfig) {
 
   val mapper = new ObjectMapper()
 
   private val limiter = cfg.ratePerSecond.map(new RateLimiter(_))
 
+  /** Index in `cfg.providerUris` of the provider that answered last. */
+  private var current = 0
+
   /** GET `base + path` → Some(parsed JSON) | None on 404. */
-  def getJson(path: String): Option[JsonNode] =
-    BeaconHttp.withFallback(cfg.providerUris) { base =>
+  def getJson(path: String): Option[JsonNode] = {
+    val (json, answered) = BeaconHttp.withFallback(cfg.providerUris, current) { base =>
       limiter.foreach(_.acquire())
       val url = java.net.URI.create(base + path).toURL
       val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
@@ -146,25 +153,31 @@ final class BeaconHttp(cfg: BeaconApiConfig) {
         }
       } finally conn.disconnect()
     }
+    current = answered
+    json
+  }
 }
 
 object BeaconHttp {
 
-  /** E3 — try each provider URI in order until one succeeds
-    * (`build_export_dag.py:210-224`); the last one's error propagates. */
-  private[sources] def withFallback[A](providerUris: Seq[String])(f: String => A): A = {
+  /** E3 — try each provider URI in order, starting at index `from` and
+    * wrapping round, until one succeeds (`build_export_dag.py:210-224`);
+    * returns its result and its index. The last one's error propagates. */
+  private[sources] def withFallback[A](providerUris: Seq[String], from: Int)(
+      f: String => A): (A, Int) = {
     require(providerUris.nonEmpty, "at least one provider uri required")
-    @tailrec def loop(remaining: Seq[String]): A = remaining match {
-      case Seq(last) => f(last)
-      case head +: tail =>
-        scala.util.Try(f(head)) match {
-          case scala.util.Success(a) => a
+    val order = providerUris.indices.map(i => (from + i) % providerUris.size)
+    @tailrec def loop(remaining: Seq[Int]): (A, Int) = remaining match {
+      case Seq(last) => (f(providerUris(last)), last)
+      case i +: rest =>
+        scala.util.Try(f(providerUris(i))) match {
+          case scala.util.Success(a) => (a, i)
           case scala.util.Failure(e) =>
-            System.err.println(s"[fallback] provider $head failed: ${e.getMessage}")
-            loop(tail)
+            System.err.println(s"[fallback] provider ${providerUris(i)} failed: ${e.getMessage}")
+            loop(rest)
         }
     }
-    loop(providerUris)
+    loop(order)
   }
 }
 
@@ -193,8 +206,6 @@ private[sources] final class RateLimiter(
     }
     available -= 1.0
   }
-
-  def throttled[A](f: => A): A = { acquire(); f }
 
   private def refill(): Unit = {
     val now = nanoTime()
@@ -257,7 +268,7 @@ object BeaconApi {
         str(eth1, "deposit_count").foreach(c => row.put("eth1_deposit_count", c.toLong))
         str(blk.path("data"), "signature").foreach(row.put("signature", _))
         row.set[ObjectNode]("attestations",
-          mapArray(m, body.path("attestations"))(flatAttestation(m, _, "")))
+          mapArray(m, body.path("attestations"))(flatAttestation(m, _)))
         row.set[ObjectNode]("deposits",
           mapArray(m, body.path("deposits")) { d =>
             val data = d.path("data")
@@ -289,7 +300,7 @@ object BeaconApi {
               val idx = o.putArray(s"attestation_${k}_attesting_indices")
               a.path("attesting_indices").elements().asScala
                 .foreach(i => idx.add(i.asText().toLong))
-              val flat = flatAttestation(m, a, "")
+              val flat = flatAttestation(m, a)
               flat.properties().asScala.foreach { e =>
                 if (e.getKey != "aggregation_bits")
                   o.set[ObjectNode](s"attestation_${k}_${e.getKey}", e.getValue)
@@ -362,18 +373,18 @@ object BeaconApi {
     }
   }
 
-  private def flatAttestation(m: ObjectMapper, a: JsonNode, prefix: String): ObjectNode = {
+  private def flatAttestation(m: ObjectMapper, a: JsonNode): ObjectNode = {
     val d = a.path("data")
     val o = m.createObjectNode()
-    str(a, "aggregation_bits").foreach(o.put(s"${prefix}aggregation_bits", _))
-    str(d, "slot").foreach(s => o.put(s"${prefix}slot", s.toLong))
-    str(d, "index").foreach(i => o.put(s"${prefix}index", i.toLong))
-    str(d, "beacon_block_root").foreach(o.put(s"${prefix}beacon_block_root", _))
-    str(d.path("source"), "epoch").foreach(e => o.put(s"${prefix}source_epoch", e.toLong))
-    str(d.path("source"), "root").foreach(o.put(s"${prefix}source_root", _))
-    str(d.path("target"), "epoch").foreach(e => o.put(s"${prefix}target_epoch", e.toLong))
-    str(d.path("target"), "root").foreach(o.put(s"${prefix}target_root", _))
-    str(a, "signature").foreach(o.put(s"${prefix}signature", _))
+    str(a, "aggregation_bits").foreach(o.put("aggregation_bits", _))
+    str(d, "slot").foreach(s => o.put("slot", s.toLong))
+    str(d, "index").foreach(i => o.put("index", i.toLong))
+    str(d, "beacon_block_root").foreach(o.put("beacon_block_root", _))
+    str(d.path("source"), "epoch").foreach(e => o.put("source_epoch", e.toLong))
+    str(d.path("source"), "root").foreach(o.put("source_root", _))
+    str(d.path("target"), "epoch").foreach(e => o.put("target_epoch", e.toLong))
+    str(d.path("target"), "root").foreach(o.put("target_root", _))
+    str(a, "signature").foreach(o.put("signature", _))
     o
   }
 

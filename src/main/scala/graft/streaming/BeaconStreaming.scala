@@ -126,7 +126,6 @@ object BeaconStreaming {
   def nearDupDedupBanded(df: DataFrame, tsCol: String,
                          textCol: String = "text",
                          watermark: String = "2 hours"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // internal working columns would silently overwrite (and the final
     // drop delete) same-named user columns — fail loudly instead
     val clash = df.columns
@@ -151,7 +150,6 @@ object BeaconStreaming {
 
   def nearDupDedup(df: DataFrame, tsCol: String, textCol: String = "text",
                    watermark: String = "2 hours"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("__dedup_key",
         coalesce(to_json(expr(s"shingle_sig($textCol)")),
           concat(lit("raw:"), coalesce(col(textCol), lit("")))))
@@ -228,7 +226,6 @@ object BeaconStreaming {
     * keep null outputs — the stream must not swallow rows. */
   def bpeTokenizeStream(stream: DataFrame, fitCorpus: DataFrame,
                         rounds: Int = 3, textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val internal = Set("__seq", "n_chars", "n_bpe_tokens", "compression")
     val clash = stream.columns.filter(internal)
     require(clash.isEmpty,
@@ -262,7 +259,6 @@ object BeaconStreaming {
   def lineDedupStream(stream: DataFrame, tsCol: String,
                       textCol: String = "text", minWords: Int = 5,
                       watermark: String = "2 hours"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     stream
       .filter(col(textCol).isNotNull)
       .select(col("doc_id"), col(tsCol),
@@ -296,7 +292,6 @@ object BeaconStreaming {
     * to have a 13-gram cannot be contaminated and passes. */
   def decontaminateStream(stream: DataFrame, benchmark: DataFrame,
                           textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val benchGrams: Array[Long] = benchmark
       .select(explode_outer(expr(s"word_grams(lower($textCol), 13)")).as("g"))
       .filter(col("g").isNotNull)
@@ -324,7 +319,6 @@ object BeaconStreaming {
   def curateStream(stream: DataFrame, benchmark: DataFrame, tsCol: String,
                    textCol: String = "text",
                    watermark: String = "2 hours"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val gated = stream
       .filter(size(split(trim(col(textCol)), "\\s+")) >= 20 &&
         (length(regexp_replace(col(textCol), "\\s+", "")).cast("double") /
@@ -354,7 +348,6 @@ object BeaconStreaming {
     * decides), matching the batch pipeline which drops such docs. */
   def importanceScoreStream(stream: DataFrame, fitCorpus: DataFrame,
                             isTarget: Column, textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val B = 1024
     val counts = fitCorpus.filter(col(textCol).isNotNull)
       .select(isTarget.as("is_t"),
@@ -401,8 +394,6 @@ object BeaconStreaming {
     * before scoring; a stream must not silently swallow rows). */
   def bm25ScoreStream(stream: DataFrame, fitCorpus: DataFrame,
                       textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
-    graft.functions.GraftFunctions.register(fitCorpus.sparkSession)
     val terms = graft.ops.RetrievalQueries.QueryTerms
     val termList = terms.map(t => s"'$t'").mkString(", ")
     // the internal column names scoreSql references would silently
@@ -459,8 +450,6 @@ object BeaconStreaming {
     * stream must not silently swallow rows; the caller's gate decides. */
   def fluencyScoreStream(stream: DataFrame, fitCorpus: DataFrame,
                          textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
-    graft.functions.GraftFunctions.register(fitCorpus.sparkSession)
     val B1 = 1024
     val B2 = 65536
     // guard the emitted output columns too, not just the __-prefixed
@@ -533,7 +522,6 @@ object BeaconStreaming {
     * along so the disagreement rate is observable per micro-batch. */
   def probeScoreStream(stream: DataFrame, fitCorpus: DataFrame,
                        textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val internal = Set("__tc", "y", "score", "keep")
     val clash = stream.columns.filter(internal)
     require(clash.isEmpty,
@@ -561,7 +549,6 @@ object BeaconStreaming {
     * codes are bit-identical to batch q_pq_codes for the same vector by
     * construction (same literals, same expression), spec-pinned. */
   def pqCodesStream(stream: DataFrame, fitDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val clash = stream.columns.filter(_.startsWith("code"))
     require(clash.isEmpty,
       s"pqCodesStream: stream columns ${clash.mkString(", ")} collide " +
@@ -1161,7 +1148,6 @@ object BeaconStreaming {
                                           gram: Int,
                                           batchId: Long = 0L): Unit = {
     val s = batch.sparkSession
-    graft.functions.GraftFunctions.register(s)
     BeaconIO.recover(s, registryPath)
     recordArrivalOrder(batch, registryPath, batchId)
     val toks = graft.ops.CorpusQueries.substrToks(batch, gram)
@@ -1310,7 +1296,6 @@ object BeaconStreaming {
   def substrDedupReconcile(docs: DataFrame, registryPath: String,
                            outPath: String, gram: Int = 50): Boolean = {
     val s = docs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val orderPath = registryPath + OrderSuffix
     BeaconIO.recover(s, orderPath)
     if (!tableExists(s, orderPath)) return false
@@ -1417,7 +1402,6 @@ object BeaconStreaming {
                                        tablePath: String,
                                        batchId: Long = 0L): Unit = {
     val s = batch.sparkSession
-    graft.functions.GraftFunctions.register(s)
     BeaconIO.recover(s, tablePath)
     val cents = servingCentroids(s, fitDir, tablePath)
     val assigned = graft.ops.SimilarityQueries

@@ -10,7 +10,6 @@ import graft.SparkTestBase
 class AHash64Spec extends SparkTestBase {
 
   test("ahash64 equals the composed HOF chain on fixture features + edges") {
-    GraftFunctions.register(spark)
     val feats = graft.ops.Multimodal.extractFeatures(
         graft.ops.Multimodal.fromDocuments(spark, "/root/testdata/sf0.001"),
         dim = 64)
@@ -63,7 +62,6 @@ class AHash64Spec extends SparkTestBase {
     // the composed chain indexes b[0..63] and throws under ANSI on arrays
     // shorter than the 64-element decode contract; the native expression
     // defines the natural extension (bits only for existing elements)
-    GraftFunctions.register(spark)
     import spark.implicits._
     // NOTE the threshold stays the 64-slot mean convention (b_i·64 > sum),
     // so a 3-element array compares each byte against sum/64 — all three

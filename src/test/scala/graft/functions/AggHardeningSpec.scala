@@ -10,7 +10,6 @@ import graft.SparkTestBase
 class AggHardeningSpec extends SparkTestBase {
 
   private def one(sql: String) = {
-    GraftFunctions.register(spark)
     spark.range(1).selectExpr(s"$sql AS z").collect()(0)
   }
 
@@ -25,7 +24,6 @@ class AggHardeningSpec extends SparkTestBase {
   }
 
   test("bigram_counts: floor-mod is bit-identical to % on non-negative hashes") {
-    GraftFunctions.register(spark)
     val df = spark.range(30).selectExpr(
       "transform(sequence(0, CAST(id % 5 + 2 AS INT)), " +
         "i -> md5_low63(CAST(id * 7 + i AS STRING))) AS h")

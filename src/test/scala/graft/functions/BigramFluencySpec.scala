@@ -9,7 +9,6 @@ import graft.SparkTestBase
 class BigramFluencySpec extends SparkTestBase {
 
   private def fluency(h: String, c1: String, c2: String) = {
-    GraftFunctions.register(spark)
     spark.range(1).selectExpr(s"bigram_fluency($h, $c1, $c2) AS z")
       .collect()(0)
   }
@@ -27,7 +26,6 @@ class BigramFluencySpec extends SparkTestBase {
   }
 
   test("floor-mod agrees with % on the non-negative hashes md5_low63 emits") {
-    GraftFunctions.register(spark)
     val df = spark.range(40).selectExpr(
       "transform(sequence(0, CAST(id % 7 + 2 AS INT)), " +
         "i -> md5_low63(CAST(id * 13 + i AS STRING))) AS h",

@@ -7,7 +7,6 @@ import graft.SparkTestBase
 class FloatVectorDotSpec extends SparkTestBase {
 
   private def withDf[A](body: org.apache.spark.sql.DataFrame => A): A = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val rows = (1 to 50).map { i =>
@@ -29,7 +28,6 @@ class FloatVectorDotSpec extends SparkTestBase {
   }
 
   test("null array, null element and length mismatch all yield null") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq(1.0f, 2.0f), Seq(3.0f, 4.0f)),
@@ -50,7 +48,6 @@ class FloatVectorDotSpec extends SparkTestBase {
   test("the expression compiles into whole-stage codegen") {
     // spark.range source (not a local Seq) so ConvertToLocalRelation can't
     // constant-fold the whole query into a LocalTableScan
-    GraftFunctions.register(spark)
     val mk = (op: String) =>
       (0 until 64).map(i => s"CAST(id $op $i AS FLOAT)").mkString("array(", ", ", ")")
     val df = spark.range(100).selectExpr(s"${mk("+")} AS a", s"${mk("-")} AS b")
@@ -65,12 +62,18 @@ class FloatVectorDotSpec extends SparkTestBase {
   }
 
   test("extensions-injected registration works on a GraftSession") {
-    // SparkTestBase session is built by GraftSession.local → extensions
-    // config; the function resolves without the defensive register call
+    // SparkTestBase's session is built by GraftSession.local, whose conf
+    // names GraftExtensions: a fresh session derived from it gets every
+    // function and the optimizer rule with no per-session call
     val fresh = spark.newSession()
     val n = fresh.sql(
       "SELECT vector_dot(array(CAST(2 AS FLOAT)), array(CAST(3 AS FLOAT))) AS d")
       .collect()(0).getDouble(0)
     assert(n === 6.0)
+    val missing = GraftFunctions.functions.map(_._1.funcName)
+      .filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"not resolvable on a new session: $missing")
+    assert(fresh.sessionState.optimizer.batches.flatMap(_.rules)
+      .contains(graft.plans.PartitionDateRewrite))
   }
 }

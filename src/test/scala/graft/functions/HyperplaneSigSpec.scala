@@ -7,7 +7,6 @@ import graft.SparkTestBase
 class HyperplaneSigSpec extends SparkTestBase {
 
   test("signature matches a driver-side recompute of the sign family") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val vecs = (1 to 30).map(i => (i.toLong, Seq.fill(16)(rnd.nextFloat() * 2 - 1)))
@@ -27,14 +26,12 @@ class HyperplaneSigSpec extends SparkTestBase {
   }
 
   test("empty array yields NULL (oracle UNNEST emits no rows for it)") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT hplane_sig(CAST(array() AS ARRAY<FLOAT>), 8) AS sig")
     assert(out.collect()(0).isNullAt(0))
   }
 
   test("all-null elements yield bucket 0 (oracle SUM-of-NULLs per plane)") {
-    GraftFunctions.register(spark)
     // every per-plane dot is NULL on the oracle side -> CASE not-true ->
     // ELSE 0 for every bit; Spark must agree instead of setting all bits
     val out = spark.sql(
@@ -43,7 +40,6 @@ class HyperplaneSigSpec extends SparkTestBase {
   }
 
   test("a partly-null element vector skips nulls like the oracle's SUM") {
-    GraftFunctions.register(spark)
     val withNull = spark.sql(
       "SELECT hplane_sig(array(CAST(0.5 AS FLOAT), CAST(NULL AS FLOAT)), 8) AS sig")
       .collect()(0).getInt(0)
@@ -55,7 +51,6 @@ class HyperplaneSigSpec extends SparkTestBase {
   }
 
   test("null array input yields NULL") {
-    GraftFunctions.register(spark)
     val out = spark.sql("SELECT hplane_sig(CAST(NULL AS ARRAY<FLOAT>), 8) AS sig")
     assert(out.collect()(0).isNullAt(0))
   }
@@ -63,7 +58,6 @@ class HyperplaneSigSpec extends SparkTestBase {
   test("the expression compiles into whole-stage codegen") {
     // spark.range source so ConvertToLocalRelation can't constant-fold the
     // query into a LocalTableScan
-    GraftFunctions.register(spark)
     val arr = (0 until 16).map(i => s"CAST(id + $i AS FLOAT)")
       .mkString("array(", ", ", ")")
     val df = spark.range(100).selectExpr(s"$arr AS e")

@@ -7,7 +7,6 @@ import graft.SparkTestBase
 class Md5Low63Spec extends SparkTestBase {
 
   test("matches md5_number_lower % (2^63-1) computed from first principles") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // reference: little-endian read of digest bytes 8..15, unsigned mod
     def ref(s: String): Long = {
@@ -27,7 +26,6 @@ class Md5Low63Spec extends SparkTestBase {
   }
 
   test("md5_high63 matches md5_number_upper % (2^63-1), independent of low lane") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // reference: little-endian read of digest bytes 0..7, unsigned mod
     def refHi(s: String): Long = {
@@ -51,7 +49,6 @@ class Md5Low63Spec extends SparkTestBase {
   }
 
   test("null propagates; values are non-negative; codegen compiles") {
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT md5_low63(CAST(NULL AS STRING)) AS h")
       .collect()(0).isNullAt(0))
     val df = spark.range(500).selectExpr("md5_low63(CAST(id AS STRING)) AS h")

@@ -22,7 +22,6 @@ class MinHashSketchSpec extends SparkTestBase {
   }
 
   test("signature matches the per-token linear-permutation reference") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val data = Seq(
       ("a", "the"), ("a", "quick"), ("a", "fox"),
@@ -35,7 +34,6 @@ class MinHashSketchSpec extends SparkTestBase {
   }
 
   test("result is partitioning-invariant (serialize/merge path)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 500).map(i => (i % 7, s"tok$i")).toDF("g", "token")
     def sigs(parts: Int) = df.repartition(parts)
@@ -45,7 +43,6 @@ class MinHashSketchSpec extends SparkTestBase {
   }
 
   test("identical token multisets agree; nulls are ignored") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       ("x", "a"), ("x", "b"), ("x", "b"),           // dup token: min unaffected
@@ -57,7 +54,6 @@ class MinHashSketchSpec extends SparkTestBase {
   }
 
   test("md5p mode matches the modular-permutation reference and stays in [0, p)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     def expectedMd5p(tokens: Seq[String], k: Int): Seq[Long] = {
       val sig = Array.fill(k)(Long.MaxValue)
@@ -85,7 +81,6 @@ class MinHashSketchSpec extends SparkTestBase {
   }
 
   test("signature agreement estimates Jaccard similarity") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // doc p and q share half their tokens (J = 1/3); r is disjoint
     val p = (1 to 100).map(i => ("p", s"t$i"))

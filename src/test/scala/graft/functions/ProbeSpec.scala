@@ -14,7 +14,6 @@ class ProbeSpec extends SparkTestBase {
 
   test("probe_gram: differential check against a driver-side reimplementation") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "the spark the merge window"),
       (2L, "spark spark spark join"),
@@ -107,7 +106,6 @@ class ProbeSpec extends SparkTestBase {
     // distribution, so the stopword-density signal must carry.
     val w = TextQueries.probeWeights(
       graft.tables.Tables.documents(spark, "/root/testdata/sf0.01"))
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, expr}
     val out = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
       .filter(col("text").isNotNull)
@@ -128,7 +126,6 @@ class ProbeSpec extends SparkTestBase {
 
   test("probe_score: null text scores null; absent docs never surface") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val w = Seq.fill(17)(0.5)
     val z = Seq((1L, null: String)).toDF("doc_id", "text")
       .select(expr("term_counts(text)").as("tc"))

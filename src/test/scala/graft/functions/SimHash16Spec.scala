@@ -27,7 +27,6 @@ class SimHash16Spec extends SparkTestBase {
   }
 
   private def viaExpr(docs: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(spark)
     docs.select(col("doc_id"), expr("simhash16(text)").as("simhash"))
       .filter(col("simhash").isNotNull)
   }

@@ -13,7 +13,6 @@ import graft.SparkTestBase
 class TfidfTopKSpec extends SparkTestBase {
 
   private def vocabOf(docs: DataFrame) = {
-    GraftFunctions.register(spark)
     docs.filter(col("text").isNotNull)
       .agg(expr("term_df(term_counts(text))").as("v"))
       .select("v.terms", "v.dfs", "v.n_docs").collect()(0)
@@ -50,7 +49,6 @@ class TfidfTopKSpec extends SparkTestBase {
   test("term_df min_df floor: 1 is bit-identical, 2 drops exactly the hapax tail") {
     import spark.implicits._
     val docs = Seq((1L, "a a b c"), (2L, "b c d"), (3L, "c e")).toDF("doc_id", "text")
-    GraftFunctions.register(spark)
     def v(sql: String) = docs
       .agg(expr(sql).as("v")).select("v.terms", "v.dfs", "v.n_docs")
       .collect()(0)
@@ -93,7 +91,6 @@ class TfidfTopKSpec extends SparkTestBase {
 
   test("tfidf_topk orders by score desc then term asc and bounds at k") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // two docs: "a" in both (df 2), the rest unique (df 1). In doc 1 the
     // unique terms tie at score 2.0 and must come out in term order; "a"
     // (score 1.0) must be cut by k=3
@@ -112,7 +109,6 @@ class TfidfTopKSpec extends SparkTestBase {
 
   test("tfidf_topk skips vocabulary-absent terms and nulls out on null text") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq((1L, "w1 w2")).toDF("doc_id", "text")
       .selectExpr(
         "tfidf_topk(term_counts(text), array('w2'), array(1L), 10L, 5) AS t",

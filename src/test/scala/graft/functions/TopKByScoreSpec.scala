@@ -65,7 +65,6 @@ class TopKByScoreSpec extends SparkTestBase {
 
   test("end-to-end: topk_by over a repartitioned frame equals the window form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = (0 until 1000)
       .map(i => (i % 7, math.cos(i.toDouble * 0.37), i.toLong))
       .toDF("g", "score", "id")
@@ -106,7 +105,6 @@ class TopKByScoreSpec extends SparkTestBase {
 
   test("ties on score break by ascending id; nulls are ignored") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Some(1.0), Some(5L)), (Some(1.0), Some(2L)), (Some(1.0), Some(9L)),
       (None, Some(1L)), (Some(99.0), None))

@@ -20,7 +20,6 @@ class WinnowFingerprintSpec extends SparkTestBase {
   }
 
   test("matches the direct polynomial-sum reference on varied text") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val texts = Seq(
@@ -40,7 +39,6 @@ class WinnowFingerprintSpec extends SparkTestBase {
   }
 
   test("null text yields null; distinctness and sortedness hold") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT winnow_fps(CAST(NULL AS STRING), 8, 4) AS fps").collect()
     assert(out(0).isNullAt(0))
@@ -51,7 +49,6 @@ class WinnowFingerprintSpec extends SparkTestBase {
   }
 
   test("the expression compiles into whole-stage codegen") {
-    GraftFunctions.register(spark)
     // spark.range source so ConvertToLocalRelation can't constant-fold
     val df = spark.range(100)
       .selectExpr("concat('document text number ', id, ' padded out') AS t")

@@ -67,7 +67,6 @@ class CorpusQueriesSpec extends SparkTestBase {
 
   test("substrDedupOf: a planted cross-doc span is removed everywhere but its first occurrence; unique text survives byte-identical") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // disjoint vocabularies per role so no ACCIDENTAL 5-gram collides:
     // span = 7 tokens (with gram 5 → 3 overlapping duplicated grams that
     // must cover all 7 loser positions); fillers unique per doc
@@ -93,7 +92,6 @@ class CorpusQueriesSpec extends SparkTestBase {
   }
 
   test("substrDedupOf is idempotent on the fixture: re-deduplicating the clean corpus removes nothing") {
-    graft.functions.GraftFunctions.register(spark)
     // after removal, every duplicated gram's sole survivor is its first
     // occurrence, so a second pass finds none of the ORIGINAL duplicated
     // grams. Caveat, stated: removal CONCATENATES across cut spans, and a
@@ -115,7 +113,6 @@ class CorpusQueriesSpec extends SparkTestBase {
 
   test("substrDedupOf on a boilerplate-gram fixture: the bounded " +
     "min-winner plan equals the collect_list reference under hot-key skew") {
-    graft.functions.GraftFunctions.register(spark)
     // the VERDICT r16 #1 hazard, engineered: ONE 60-token boilerplate
     // span (license-header shaped) planted at the head of 30% of fixture
     // docs — at gram 50 that is 11 grams whose occurrence lists all

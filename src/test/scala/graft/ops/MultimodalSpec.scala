@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
@@ -28,13 +27,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(r3.getInt(1) === 0)
     assert(r3.getString(2) === "d41d8cd98f00b204e9800998ecf8427e")
     assert(r3.getSeq[Float](3).forall(_ === 0.0f))
-  }
-
-  test("resizePayload truncates but never pads or NPEs on null") {
-    val out = Multimodal.resizePayload(payloadDf, targetBytes = 8)
-      .select(col("media_id"), length(col("payload")).as("n"))
-      .orderBy("media_id").collect()
-    assert(out.map(r => if (r.isNullAt(1)) -1 else r.getInt(1)).toSeq === Seq(8, 4, -1))
   }
 
   test("sampleFrames emits every k-th fixed-size chunk with ordinals") {

@@ -335,7 +335,6 @@ class OpPropertiesSpec extends SparkTestBase {
 
   test("q_budget_sample: sharded prefix sum is byte-identical under 80%-mass skew") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // engineered skew: source "big" owns 80% of the corpus — the shape
     // that serialized the r9 single-per-source window through one reducer
     val df = ((1L to 400L).map(i => (i, "big",
@@ -1262,7 +1261,6 @@ class OpPropertiesSpec extends SparkTestBase {
 
   test("q_entropy: hand-computed values, bounds, and the constant-doc/uniform-doc extremes") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "a a b"),          // H = ln3 - (2 ln2)/3
       (2L, "x x x x"),        // constant doc: H = 0

@@ -328,7 +328,6 @@ class PqSpec extends SparkTestBase {
 
   test("q_ann_recall: the registered row equals a recount over the two " +
     "registered pipelines; bounds hold") {
-    graft.functions.GraftFunctions.register(spark)
     val row = SimilarityQueries.queries("q_ann_recall")(spark, dir)
       .collect().head
     val (nt, nc, r) = (row.getAs[Long]("n_true"),
@@ -350,7 +349,6 @@ class PqSpec extends SparkTestBase {
   }
 
   test("q_semdedup: group-and-expand equals the cell self-join") {
-    graft.functions.GraftFunctions.register(spark)
     val got = SimilarityQueries.queries("q_semdedup")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet

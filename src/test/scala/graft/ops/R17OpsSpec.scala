@@ -25,7 +25,6 @@ class R17OpsSpec extends SparkTestBase {
 
   test("simjoinPrefix finds the banding-missed near-dup pair and every " +
     "pair brute force finds; nothing below threshold leaks") {
-    graft.functions.GraftFunctions.register(spark)
     // the BeaconStreamingSpec "pinned semantic gap" construction: two
     // docs agreeing on exactly 1 of 4 MinHash bands — LSH banding with
     // r rows per band can drop it, the exact join must not. Shingle
@@ -72,7 +71,6 @@ class R17OpsSpec extends SparkTestBase {
 
   test("simjoinPrefix boundary: a pair at exactly t qualifies, just " +
     "below t does not — the >= and the ceil in the prefix bound agree") {
-    graft.functions.GraftFunctions.register(spark)
     // token streams built so the 3-shingle sets have |A|=|B|=4 and
     // |A∩B|=2: J = 2/(4+4-2) = 1/3. With t=1/3 the pair must appear;
     // with t slightly above it must not. Shingles of "a b c d e f":
@@ -91,7 +89,6 @@ class R17OpsSpec extends SparkTestBase {
 
   test("q_lsh_recall: fixture recall is sane and consistent with the " +
     "two registered pipelines; identical docs read exactly 1.0") {
-    graft.functions.GraftFunctions.register(spark)
     val row = DedupQueries.queries("q_lsh_recall")(spark, sfDir)
       .collect().head
     val (nt, nc, r) = (row.getAs[Long]("n_true"),
@@ -119,7 +116,6 @@ class R17OpsSpec extends SparkTestBase {
     "exact pair at the threshold reads recall NULL — the twin's NULLIF " +
     "division — never NaN") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val disjoint = (1 to 12)
       .map(i => (i.toLong, s"w${i}a w${i}b w${i}c w${i}d w${i}e"))
       .toDF("doc_id", "text")

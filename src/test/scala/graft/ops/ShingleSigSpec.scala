@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.functions.GraftFunctions
 
 class ShingleSigSpec extends SparkTestBase {
 
@@ -13,7 +12,6 @@ class ShingleSigSpec extends SparkTestBase {
     * transliteration of the unchanged DuckDB oracle CTEs, so
     * expression == composed implies expression == oracle. */
   private def composed(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     val sh = docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
       .filter(size(col("w")) >= 3)
@@ -65,7 +63,6 @@ class ShingleSigSpec extends SparkTestBase {
   test("shingle_set equals shingle_sig_set's ss lane, edge cases + fixture " +
     "(r18 — chains the one-digest expression to the proven oracle path)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def both(docs: DataFrame) = {
       val exp = docs
         .select(col("doc_id"), expr("shingle_sig_set(text).ss").as("ss"))
@@ -97,7 +94,6 @@ class ShingleSigSpec extends SparkTestBase {
     * TypedImperativeAggregate's md5p family to the query's DuckDB oracle. */
   test("shingle_minhash equals the minhash_sketch aggregate, edge cases + fixture") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def aggregateForm(docs: DataFrame): DataFrame = docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
       .filter(size(col("w")) >= 3)
@@ -128,7 +124,6 @@ class ShingleSigSpec extends SparkTestBase {
     * expression == composed implies expression == oracle. */
   test("word_grams equals the composed transform+slice form, edge cases + fixture") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def composedGrams(docs: DataFrame, n: Int): DataFrame = docs
       .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
       .filter(size(col("w")) >= n)
@@ -157,7 +152,6 @@ class ShingleSigSpec extends SparkTestBase {
     * transliterates the unchanged DuckDB oracle's count arithmetic). */
   test("repetition_stats equals the composed array-function counts") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def composedCounts(docs: DataFrame): DataFrame = docs
       .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
       .select(col("doc_id"),
@@ -185,7 +179,6 @@ class ShingleSigSpec extends SparkTestBase {
 
   test("query_term_stats equals the composed split+filter form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val terms = Seq("the", "dup", "wörds", "absent")
     def composed(docs: DataFrame): DataFrame = docs
       .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))

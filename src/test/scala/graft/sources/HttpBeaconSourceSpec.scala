@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -26,6 +28,19 @@ class HttpBeaconSourceSpec extends SparkTestBase {
   private def withStub[A](nSlots: Int, nValidators: Int)(f: String => A): A = {
     val stub = new BeaconApiStub(nSlots, nValidators)
     try f(stub.baseUri) finally stub.stop()
+  }
+
+  /** A provider that answers every request with 503, counting them. */
+  private def withDeadNode[A](f: (String, AtomicInteger) => A): A = {
+    val hits = new AtomicInteger
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      hits.incrementAndGet()
+      ex.sendResponseHeaders(503, -1)
+      ex.close()
+    })
+    server.start()
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}", hits) finally server.stop(0)
   }
 
   private def fixtureDir(nSlots: Int, nValidators: Int): String = {
@@ -64,10 +79,15 @@ class HttpBeaconSourceSpec extends SparkTestBase {
 
   test("provider fallback: dead first URI falls through to the live one (E3)") {
     withStub(32, 3) { uri =>
-      // port 9 (discard) refuses connections immediately
-      val cfg = BeaconApiConfig(Seq("http://127.0.0.1:9", uri), fetchTasks = 2)
-      val http = new HttpBeaconSource(cfg)
-      assert(http.blocks(spark, (0L, 31L)).count() === 32L)
+      withDeadNode { (dead, hits) =>
+        // port 9 (discard) refuses connections immediately; `dead` answers 503
+        val cfg = BeaconApiConfig(Seq("http://127.0.0.1:9", dead, uri), fetchTasks = 2)
+        val http = new HttpBeaconSource(cfg)
+        assert(http.blocks(spark, (0L, 31L)).count() === 32L)
+        // each fetch task's client stays on the live node once it answered
+        assert(hits.get >= 1 && hits.get <= cfg.fetchTasks,
+          s"${hits.get} requests to the dead node")
+      }
     }
   }
 
@@ -127,17 +147,21 @@ class HttpBeaconSourceSpec extends SparkTestBase {
 
   test("provider fallback tries URIs in order and returns the first success (E3)") {
     var tried = Vector.empty[String]
-    val out = BeaconHttp.withFallback(Seq("bad1", "bad2", "good")) { uri =>
+    def attempt(uri: String): String = {
       tried :+= uri
       if (uri.startsWith("bad")) sys.error(s"$uri down") else s"ok:$uri"
     }
-    assert(out === "ok:good")
+    assert(BeaconHttp.withFallback(Seq("bad1", "bad2", "good"), 0)(attempt) === ("ok:good", 2))
+    assert(tried === Vector("bad1", "bad2", "good"))
+    // a start index other than 0 wraps round to the front of the list
+    tried = Vector.empty
+    assert(BeaconHttp.withFallback(Seq("good", "bad1", "bad2"), 1)(attempt) === ("ok:good", 0))
     assert(tried === Vector("bad1", "bad2", "good"))
   }
 
   test("fallback rethrows the last provider's error when all fail") {
     val e = intercept[RuntimeException] {
-      BeaconHttp.withFallback(Seq("a", "b")) { uri => sys.error(s"$uri down"): String }
+      BeaconHttp.withFallback(Seq("a", "b"), 0) { uri => sys.error(s"$uri down"): String }
     }
     assert(e.getMessage === "b down")
   }
@@ -155,8 +179,6 @@ class HttpBeaconSourceSpec extends SparkTestBase {
     val before = slept
     rl.acquire(); rl.acquire()
     assert(slept === before)
-    var calls = 0
-    assert(rl.throttled { calls += 1; 7 } === 7 && calls === 1)
   }
 }
 

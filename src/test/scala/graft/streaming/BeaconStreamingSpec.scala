@@ -189,7 +189,6 @@ class BeaconStreamingSpec extends SparkTestBase {
     // on 1..3 bands — a batch candidate pair — and show the stream keeps
     // BOTH. If the shingle hashing ever changes such that no variant
     // qualifies, the search assert fails loudly rather than pinning vacuum.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val base = (1 to 30).map(i => s"alpha$i bravo$i").mkString(" ")
     val cands = (0 until 400).map(v => (v.toLong, s"$base charlie$v delta$v"))
@@ -234,7 +233,6 @@ class BeaconStreamingSpec extends SparkTestBase {
   test("banded streaming dedup drops 1-of-4-band near-dups the plain stream keeps") {
     // the gap nearDupDedup pins open, nearDupDedupBanded must close: a doc
     // agreeing with an EARLIER kept doc on any single band is dropped.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     def sig(t: String): Seq[Long] = {
       val s = Seq(("x", t)).toDF("id", "text")
